@@ -1,14 +1,14 @@
 package graft.analyzer
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model._
-import graft.ops.{Classify, Spans}
+import graft.ops.Classify
 
-/** The per-batch critical-path analysis pipeline — the reference's
+/** The per-batch critical-path analysis — the reference's
   * `StreamingQueryAnalyzer.analyze` → `StreamingCriticalPathAnalyzer`
-  * (ref `analyzer/StreamingCriticalPathAnalyzer.scala:30-87`) as one
-  * declarative plan over the span tables:
+  * (ref `analyzer/StreamingCriticalPathAnalyzer.scala:30-87`) as a fold
+  * over the span tables:
   *
   *   1. batch running time reconstructed from progress
   *      (`numInputRows / processedRowsPerSecond · 1000`,
@@ -17,7 +17,7 @@ import graft.ops.{Classify, Spans}
   *      ref `helper/JobOverlapHelper.scala:35-45`), then each group split
   *      into serial islands of overlapping jobs
   *      (ref `helper/JobOverlapHelper.scala:83-106`, via the
-  *      nested-interval-correct [[graft.ops.Spans.splitOverlapping]]);
+  *      nested-interval-correct [[splitIslands]]);
   *   3. estimatedTimeSpentInJobs = Σ island wall-clock spans;
   *      criticalPathForAllJobs  = Σ island max(per-job critical time)
   *      (ref `helper/JobOverlapHelper.scala:72-81`);
@@ -27,73 +27,75 @@ import graft.ops.{Classify, Spans}
   *      zero-progress guard ⇒ NONEWBATCHES
   *      (ref `analyzer/StreamingQueryAnalyzer.scala:118-128`).
   *
-  * Scale: every step is a key-partitioned aggregation on
-  * (queryId, batchId[, group]); nothing is global, nothing collects.
+  * Steps 1–4 fold the collected span tables on the driver (they are
+  * driver-resident, see [[SpanBuilder]]); step 5 keeps the Column
+  * classifiers, applied as a projection over the folded rows, which Spark
+  * evaluates on the driver without a job.
   */
 object BatchAnalyzer {
 
   /** Integer state ordinal expression (ref `common/StreamingState.scala`). */
-  private def ordinalOf(state: org.apache.spark.sql.Column) =
+  private def ordinalOf(state: Column) =
     Classify.stateOrdinals.foldLeft(lit(-1)) { case (acc, (name, ord)) =>
       when(state === name, ord).otherwise(acc)
     }
 
-  /** The per-island decomposition both [[analyze]] and [[estimateAt]]
-    * consume, computed ONCE so the two reads cannot drift: jobs of
-    * streaming batches keyed by (queryId, batchId, sql-execution group),
-    * split into serial islands of overlapping jobs, each island carrying
-    * its wall-clock span, its critical-path bound (max per-job critical
-    * time — the infinite-executor floor), and its total task time (the
-    * work the executors must absorb — the throughput bound's numerator).
-    * One key-partitioned shuffle; nothing global. */
-  private def islandStats(jobs: Dataset[JobSpan],
-                          stages: Dataset[StageSpan]): DataFrame = {
-    val spark = jobs.sparkSession
-    import spark.implicits._
+  /** One serial island: its wall-clock span, its critical-path bound (max
+    * per-job critical time — the infinite-executor floor), and its total
+    * task time (the work the executors must absorb — the throughput
+    * bound's numerator). */
+  private final case class Island(span: Long, criticalPath: Long, taskTime: Long)
 
-    val jobCt = CriticalPath.perJob(stages).toDF("jobId", "jobCriticalTime")
-    val jobWork = stages.toDF()
-      .groupBy(col("jobId"))
-      .agg(sum(col("totalTaskDurationMs")).as("jobTaskTime"))
-
-    // Jobs of streaming batches, with per-job critical times and the
-    // group key: sql-execution id, or a singleton group for null
-    // (ref JobOverlapHelper.scala:37-44).
-    val batchJobs = jobs.toDF()
-      .filter(col("queryId").isNotNull && col("batchId").isNotNull)
-      .join(jobCt, Seq("jobId"), "left")
-      .join(jobWork, Seq("jobId"), "left")
-      .na.fill(0L, Seq("jobCriticalTime", "jobTaskTime"))
-      .withColumn("grp",
-        coalesce(col("sqlExecutionId").cast("string"),
-          concat(lit("solo-"), col("jobId"))))
-      .withColumn("gkey",
-        concat_ws("|", col("queryId"), col("batchId"), col("grp")))
-
-    // Serial islands inside each group (overlap-aware split).
-    val islandJobs = Spans.splitOverlapping(
-      batchJobs.withColumnRenamed("startTime", "start_ms")
-        .withColumnRenamed("endTime", "end_ms"),
-      keyCol = "gkey", idCol = "jobId")
-
-    islandJobs
-      .groupBy(col("queryId"), col("batchId"), col("gkey"), col("island"))
-      .agg(
-        (max(col("end_ms")) - min(col("start_ms"))).as("islandSpan"),
-        max(col("jobCriticalTime")).as("islandCriticalPath"),
-        sum(col("jobTaskTime")).as("islandTaskTime"))
+  /** Serial islands of overlapping jobs: in (start, jobId) order, a job
+    * opens a new island when it starts after the running max end of every
+    * earlier job. The reference compares with the previous job only
+    * (ref `JobOverlapHelper.scala:83-106`) and mis-splits nested spans. */
+  private[analyzer] def splitIslands(jobs: Seq[JobSpan]): Seq[Seq[JobSpan]] = {
+    val islands = scala.collection.mutable.ArrayBuffer.empty[Vector[JobSpan]]
+    var maxEnd = Long.MinValue
+    jobs.sortBy(j => (j.startTime, j.jobId)).foreach { j =>
+      if (islands.isEmpty || j.startTime > maxEnd) islands += Vector(j)
+      else islands(islands.size - 1) :+= j
+      maxEnd = math.max(maxEnd, j.endTime)
+    }
+    islands.toSeq
   }
 
-  /** Batch running time from progress
-    * (ref StreamingQueryAnalyzer:118-129). */
-  private def withBatchRunningTime(progress: Dataset[BatchProgress]): DataFrame =
-    progress.toDF()
-      .withColumn("batchRunningTime",
-        when(col("numInputRows") > 0 && col("processedRowsPerSecond") > 0,
-          (col("numInputRows") / col("processedRowsPerSecond") * 1000).cast("long"))
-          .otherwise(lit(0L)))
+  /** The island decomposition both [[analyze]] and [[estimateAt]] read,
+    * computed by one fold so the two cannot drift: jobs of streaming
+    * batches, grouped by (queryId, batchId, sql-execution group), split
+    * into serial islands; keyed by (queryId, batchId). */
+  private def islandsByBatch(jobs: Dataset[JobSpan],
+                             stages: Dataset[StageSpan]): Map[(String, Long), Seq[Island]] = {
+    val perJob = stages.collect().toSeq.groupBy(_.jobId).map { case (jobId, ss) =>
+      jobId -> (CriticalPath.criticalTimeOfStages(ss), ss.map(_.totalTaskDurationMs).sum)
+    }
+    jobs.collect().toSeq
+      .collect { case j @ JobSpan(_, _, _, sqlExec, Some(q), Some(b)) =>
+        // null sql-execution id ⇒ the job is its own group
+        (q, b, sqlExec.toRight(j.jobId)) -> j
+      }
+      .groupMap(_._1)(_._2).toSeq
+      .flatMap { case ((q, b, _), group) =>
+        splitIslands(group).map { island =>
+          val (ct, work) = island.map(j => perJob.getOrElse(j.jobId, (0L, 0L))).unzip
+          (q, b) -> Island(island.map(_.endTime).max - island.map(_.startTime).min,
+            ct.max, work.sum)
+        }
+      }
+      .groupMap(_._1)(_._2)
+  }
 
-  /** Full pipeline: spans + progress + SLA config → one result per batch. */
+  /** Batch running time from progress (ref StreamingQueryAnalyzer:118-129),
+    * in Spark's order of operations: rows / rps · 1000, truncated toward
+    * zero. */
+  private def batchRunningTime(p: BatchProgress): Long =
+    if (p.numInputRows > 0 && p.processedRowsPerSecond > 0)
+      (p.numInputRows / p.processedRowsPerSecond * 1000).toLong
+    else 0L
+
+  /** Full pipeline: spans + progress + SLA config → one result per progress
+    * row. */
   def analyze(jobs: Dataset[JobSpan],
               stages: Dataset[StageSpan],
               progress: Dataset[BatchProgress],
@@ -103,43 +105,27 @@ object BatchAnalyzer {
               highFrac: Double = 0.7): Dataset[CriticalPathResult] = {
     val spark = jobs.sparkSession
     import spark.implicits._
-
-    val perBatch = islandStats(jobs, stages)
-      .groupBy(col("queryId"), col("batchId"))
-      .agg(
-        sum(col("islandSpan")).as("estimatedTimeSpentInJobs"),
-        sum(col("islandCriticalPath")).as("criticalPathForAllJobs"))
-
-    val withBrt = withBatchRunningTime(progress)
-
-    val slaLookup = slas.toDF()
-      .select(col("queryIdent"), col("slaMillis"))
-
-    val joined = withBrt
-      .join(perBatch, Seq("queryId", "batchId"), "left")
-      .join(broadcast(slaLookup), col("queryId") === col("queryIdent"), "left")
-      .na.fill(0L, Seq("estimatedTimeSpentInJobs", "criticalPathForAllJobs"))
-      .withColumn("sla", coalesce(col("slaMillis"), lit(defaultSlaMillis)))
-      .withColumn("criticalTime",
-        when(col("batchRunningTime") === 0L, lit(0L))
-          .otherwise(col("batchRunningTime") - col("estimatedTimeSpentInJobs")
-            + col("criticalPathForAllJobs")))
-
-    val classified = joined
-      .withColumn("streamingQueryState",
-        when(col("numInputRows") === 0 || col("processedRowsPerSecond") === 0,
-          "NONEWBATCHES")
-          .otherwise(Classify.slaState(
-            col("batchRunningTime"), col("criticalTime"),
-            col("sla").cast("double"), lowFrac, highFrac)))
-
-    classified
-      .select(
-        col("queryId"), col("batchId"),
-        col("sla").as("expectedMicroBatchSLA"),
+    val islands = islandsByBatch(jobs, stages)
+    val slaOf = slas.collect().toSeq.groupMap(_.queryIdent)(_.slaMillis)
+    val rows = for {
+      p <- progress.collect().toSeq
+      sla <- slaOf.getOrElse(p.queryId, Seq(defaultSlaMillis))
+    } yield {
+      val brt = batchRunningTime(p)
+      val is = islands.getOrElse((p.queryId, p.batchId), Nil)
+      val criticalTime =
+        if (brt == 0L) 0L else brt - is.map(_.span).sum + is.map(_.criticalPath).sum
+      (p.queryId, p.batchId, sla, brt, criticalTime, p.numInputRows, p.processedRowsPerSecond)
+    }
+    val state =
+      when(col("numInputRows") === 0 || col("processedRowsPerSecond") === 0, "NONEWBATCHES")
+        .otherwise(Classify.slaState(col("batchRunningTime"), col("criticalTime"),
+          col("expectedMicroBatchSLA").cast("double"), lowFrac, highFrac))
+    rows.toDF("queryId", "batchId", "expectedMicroBatchSLA", "batchRunningTime",
+        "criticalTime", "numInputRows", "processedRowsPerSecond")
+      .select(col("queryId"), col("batchId"), col("expectedMicroBatchSLA"),
         col("batchRunningTime"), col("criticalTime"),
-        col("streamingQueryState"),
-        ordinalOf(col("streamingQueryState")).as("stateOrdinal"))
+        state.as("streamingQueryState"), ordinalOf(state).as("stateOrdinal"))
       .as[CriticalPathResult]
   }
 
@@ -167,10 +153,8 @@ object BatchAnalyzer {
     * many executors buy how much of that gap.
     *
     * Output: (queryId, batchId, nExecutors, estimateMs,
-    * batchRunningTime), long format — one row per batch per asked count.
-    * Scale: islands × counts is a broadcast-able literal expansion
-    * (explode over a lit array), then the same key-partitioned
-    * aggregation shape as [[analyze]]; nothing collects. */
+    * batchRunningTime), long format — one row per progress row per asked
+    * count, from the same island fold as [[analyze]]. */
   def estimateAt(jobs: Dataset[JobSpan],
                  stages: Dataset[StageSpan],
                  progress: Dataset[BatchProgress],
@@ -179,51 +163,27 @@ object BatchAnalyzer {
     require(executorCounts.nonEmpty && executorCounts.forall(_ >= 1),
       s"estimateAt needs positive executor counts; got $executorCounts")
     val spark = jobs.sparkSession
-
+    import spark.implicits._
     // Observed cores per executor: rounded mean over executors that
     // reported cores; a fleet with no executor telemetry estimates at
     // 1 core/executor (pessimistic, stated in the scaladoc).
-    val coresPerExec = broadcast(
-      executors.toDF()
-        .filter(col("cores") > 0)
-        .agg(coalesce(round(avg(col("cores"))).cast("int"), lit(1))
-          .as("coresPerExec")))
-
-    val islands = islandStats(jobs, stages)
-      .select(col("queryId"), col("batchId"), col("islandSpan"),
-        col("islandCriticalPath"), col("islandTaskTime"))
-      .withColumn("nExecutors",
-        explode(lit(executorCounts.distinct.sorted.toArray)))
-      .crossJoin(coresPerExec)
-
-    val perBatch = islands
-      .withColumn("islandEstimate",
-        greatest(col("islandCriticalPath"),
-          ceil(col("islandTaskTime").cast("double") /
-            (col("nExecutors").cast("double") * col("coresPerExec")))
-            .cast("long")))
-      .groupBy(col("queryId"), col("batchId"), col("nExecutors"))
-      .agg(
-        sum(col("islandSpan")).as("estimatedTimeSpentInJobs"),
-        sum(col("islandEstimate")).as("jobsEstimate"))
-
-    // Every asked count must appear for every batch in `progress`, even
-    // batches with no recorded jobs (their estimate is brt itself — all
-    // serial as far as telemetry can see).
-    val counts = spark.range(1)
-      .select(explode(lit(executorCounts.distinct.sorted.toArray))
-        .as("nExecutors"))
-
-    withBatchRunningTime(progress)
-      .select(col("queryId"), col("batchId"), col("batchRunningTime"))
-      .crossJoin(broadcast(counts))
-      .join(perBatch, Seq("queryId", "batchId", "nExecutors"), "left")
-      .na.fill(0L, Seq("estimatedTimeSpentInJobs", "jobsEstimate"))
-      .withColumn("serialTime",
-        greatest(col("batchRunningTime") - col("estimatedTimeSpentInJobs"),
-          lit(0L)))
-      .select(col("queryId"), col("batchId"), col("nExecutors"),
-        (col("serialTime") + col("jobsEstimate")).as("estimateMs"),
-        col("batchRunningTime"))
+    val cores = executors.collect().map(_.cores).filter(_ > 0)
+    val coresPerExec =
+      if (cores.isEmpty) 1 else math.round(cores.map(_.toLong).sum.toDouble / cores.length).toInt
+    val islands = islandsByBatch(jobs, stages)
+    // Every asked count appears for every batch in `progress`, even batches
+    // with no recorded jobs (their estimate is brt itself — all serial as
+    // far as telemetry can see).
+    val rows = for {
+      p <- progress.collect().toSeq
+      n <- executorCounts.distinct.sorted
+    } yield {
+      val brt = batchRunningTime(p)
+      val is = islands.getOrElse((p.queryId, p.batchId), Nil)
+      val jobsEstimate = is.map(i => math.max(i.criticalPath,
+        math.ceil(i.taskTime.toDouble / (n.toDouble * coresPerExec)).toLong)).sum
+      (p.queryId, p.batchId, n, math.max(brt - is.map(_.span).sum, 0L) + jobsEstimate, brt)
+    }
+    rows.toDF("queryId", "batchId", "nExecutors", "estimateMs", "batchRunningTime")
   }
 }

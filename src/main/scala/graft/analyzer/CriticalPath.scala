@@ -12,10 +12,9 @@ import graft.model.StageSpan
   *   ct(stage) = maxTaskTime(stage) + max(ct(parent) for parent in DAG)
   *   ct(job)   = ct(stage with the max id)
   *
-  * The recursion doesn't decompose into built-in aggregates, but a job's
-  * stage count is tiny (SURVEY §2.1-D), so this is a typed `mapGroups` fold:
-  * stages shuffle once on jobId, each group folds driver-free on an
-  * executor. No collect, no UDF registry.
+  * The recursion doesn't decompose into built-in aggregates, and a job's
+  * stage count is tiny (SURVEY §2.1-D), so each job's stages fold on the
+  * driver, where the span tables already live.
   */
 object CriticalPath {
 
@@ -38,8 +37,7 @@ object CriticalPath {
   /** (jobId, criticalTimeMs) for every job present in `stages`. */
   def perJob(stages: Dataset[StageSpan]): Dataset[(Long, Long)] = {
     import stages.sparkSession.implicits._
-    stages
-      .groupByKey(_.jobId)
-      .mapGroups((jobId, it) => (jobId, criticalTimeOfStages(it.toSeq)))
+    stages.sparkSession.createDataset(stages.collect().toSeq.groupBy(_.jobId).toSeq
+      .map { case (jobId, ss) => (jobId, criticalTimeOfStages(ss)) })
   }
 }

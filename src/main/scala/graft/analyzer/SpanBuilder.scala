@@ -1,77 +1,72 @@
 package graft.analyzer
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model._
 
-/** Builds the span tables (T1/T2/T6 of SURVEY.md §1.1) from a raw
-  * scheduler-event Dataset — the declarative equivalent of the reference's
-  * listener handlers mutating `StreamingAppTracker`'s maps
-  * (ref `listener/StreamingAppListener.scala:39-217`).
+/** Builds the span tables (T1/T2/T6 of SURVEY.md §1.1) from raw scheduler
+  * events — the reference's listener handlers mutating
+  * `StreamingAppTracker`'s maps (ref `listener/StreamingAppListener.scala:39-217`)
+  * re-expressed over retained rows.
   *
-  * Every builder is one hash aggregation keyed by the entity id: partial
-  * (map-side) aggregation collapses the per-event rows before the shuffle,
-  * so at 100 TB of telemetry each table costs a single key-partitioned
-  * shuffle of pre-combined partials.
+  * The live-path builders ([[jobSpans]], [[stageSpans]], [[batchProgress]])
+  * collect their input and fold it on the driver, where the telemetry
+  * already lives: the listener bridges cap it at 2^20 scheduler and 2^16
+  * progress events, and the replay file sources feed the same functions
+  * under the same bound. Their results come back as local Datasets, so a
+  * downstream projection runs on the driver without a Spark job. The
+  * executor tables stay Dataset plans.
   */
 object SpanBuilder {
 
+  private val StageKinds = Set("stageSubmitted", "stageCompleted", "taskEnd")
+
   /** Job spans: correlate jobStart/jobEnd, carrying the streaming FKs from
-    * the start event (ref `StreamingAppListener.scala:39-81`). */
+    * the start event (ref `StreamingAppListener.scala:39-81`). Jobs without
+    * both events (in flight at snapshot time) are dropped: completed work
+    * only. */
   def jobSpans(events: Dataset[SchedulerEvent]): Dataset[JobSpan] = {
     import events.sparkSession.implicits._
-    events.toDF()
-      .filter(col("kind").isin("jobStart", "jobEnd") && col("jobId").isNotNull)
-      .groupBy(col("jobId"))
-      .agg(
-        min(when(col("kind") === "jobStart", col("time"))).as("startTime"),
-        max(when(col("kind") === "jobEnd", col("time"))).as("endTime"),
-        // FKs ride on jobStart only; max over the group recovers them.
-        max(col("sqlExecutionId")).as("sqlExecutionId"),
-        max(col("queryId")).as("queryId"),
-        max(col("batchId")).as("batchId"))
-      // In-flight jobs (no jobEnd in the snapshot yet) would deserialize
-      // null into JobSpan's primitive endTime and crash the analysis —
-      // a live monitoring tool snapshots mid-batch routinely. Completed
-      // work only.
-      .filter(col("startTime").isNotNull && col("endTime").isNotNull)
-      .select(col("jobId"), col("startTime"), col("endTime"),
-        col("sqlExecutionId"), col("queryId"), col("batchId"))
-      .as[JobSpan]
+    val spans = events.collect().toSeq
+      .filter(e => (e.kind == "jobStart" || e.kind == "jobEnd") && e.jobId.isDefined)
+      .groupBy(_.jobId.get).toSeq
+      .flatMap { case (jobId, es) =>
+        def times(kind: String) = es.filter(_.kind == kind).map(_.time)
+        // FKs ride on jobStart only; the max over the group recovers them.
+        for (start <- times("jobStart").minOption; end <- times("jobEnd").maxOption)
+          yield JobSpan(jobId, start, end, es.flatMap(_.sqlExecutionId).maxOption,
+            es.flatMap(_.queryId).maxOption, es.flatMap(_.batchId).maxOption)
+      }
+    events.sparkSession.createDataset(spans)
   }
 
   /** Stage spans incl. the longest single task, the input to the critical
     * path (ref `StreamingAppListener.scala:110-142,144-192` and sparklens
     * `StageTimeSpan.updateTasks`). Stage→job comes from the jobStart's
-    * stageIds (T3 `stageIDToJobID`). */
+    * stageIds (T3 `stageIDToJobID`): a stage listed by two jobs yields one
+    * span per job. Stages without both a submission and a completion event
+    * are dropped, as in [[jobSpans]]. */
   def stageSpans(events: Dataset[SchedulerEvent]): Dataset[StageSpan] = {
     import events.sparkSession.implicits._
-    val stageToJob = events.toDF()
-      .filter(col("kind") === "jobStart")
-      .select(col("jobId"), explode(col("stageIds")).as("stageId"))
-    val stageAgg = events.toDF()
-      .filter(col("stageId").isNotNull &&
-        col("kind").isin("stageSubmitted", "stageCompleted", "taskEnd"))
-      .groupBy(col("stageId"))
-      .agg(
-        min(when(col("kind") === "stageSubmitted", col("time"))).as("startTime"),
-        max(when(col("kind") === "stageCompleted", col("time"))).as("endTime"),
-        first(when(col("kind") === "stageSubmitted", col("parentStageIds")),
-          ignoreNulls = true).as("parentStageIds"),
-        max(coalesce(col("numTasks"), lit(0))).as("numTasks"),
-        max(when(col("kind") === "taskEnd", coalesce(col("durationMs"), lit(0L)))
-          .otherwise(lit(0L))).as("maxTaskDurationMs"),
-        sum(when(col("kind") === "taskEnd", coalesce(col("durationMs"), lit(0L)))
-          .otherwise(lit(0L))).as("totalTaskDurationMs"))
-    stageAgg
-      .join(stageToJob, "stageId")
-      // Same in-flight guard as jobSpans: stages without a completion event
-      // yet must not reach StageSpan's primitive Long fields.
-      .filter(col("startTime").isNotNull && col("endTime").isNotNull)
-      .select(col("stageId"), col("jobId"), col("startTime"), col("endTime"),
-        coalesce(col("parentStageIds"), array().cast("array<int>")).as("parentStageIds"),
-        col("numTasks"), col("maxTaskDurationMs"), col("totalTaskDurationMs"))
-      .as[StageSpan]
+    val all = events.collect().toSeq
+    val byStage = all
+      .filter(e => e.stageId.isDefined && StageKinds(e.kind))
+      .groupBy(_.stageId.get)
+      .flatMap { case (stageId, es) =>
+        def times(kind: String) = es.filter(_.kind == kind).map(_.time)
+        val tasks = es.filter(_.kind == "taskEnd").map(_.durationMs.getOrElse(0L))
+        val parents = es.find(e => e.kind == "stageSubmitted" && e.parentStageIds != null)
+          .map(_.parentStageIds).getOrElse(Nil)
+        for (start <- times("stageSubmitted").minOption; end <- times("stageCompleted").maxOption)
+          yield stageId -> StageSpan(stageId, -1L, start, end, parents,
+            es.map(_.numTasks.getOrElse(0)).max, tasks.foldLeft(0L)(math.max), tasks.sum)
+      }
+    val spans = for {
+      e <- all if e.kind == "jobStart" && e.jobId.isDefined && e.stageIds != null
+      stageId <- e.stageIds
+      span <- byStage.get(stageId)
+    } yield span.copy(jobId = e.jobId.get)
+    events.sparkSession.createDataset(spans)
   }
 
   /** Executor spans (ref `StreamingAppListener.scala:194-217`). */
@@ -126,13 +121,14 @@ object SpanBuilder {
   }
 
   /** Batch progress rows from the progress stream
-    * (ref `QueryInsightsManager.scala:198-204`). */
+    * (ref `QueryInsightsManager.scala:198-204`); rows without their counts
+    * are skipped. */
   def batchProgress(events: Dataset[ProgressEvent]): Dataset[BatchProgress] = {
     import events.sparkSession.implicits._
-    events.toDF()
-      .filter(col("kind") === "progress" && col("batchId").isNotNull)
-      .select(col("queryId"), col("batchId"), col("timestamp"),
-        col("numInputRows"), col("processedRowsPerSecond"))
-      .as[BatchProgress]
+    events.sparkSession.createDataset(events.collect().toSeq.collect {
+      case ProgressEvent("progress", queryId, _, _, Some(batchId), timestamp,
+          Some(rows), Some(rps), _, _) =>
+        BatchProgress(queryId, batchId, timestamp.orNull, rows, rps)
+    })
   }
 }

@@ -17,9 +17,12 @@ import graft.report.{EventsReporter, Reporting}
   * caller-driven cadence), report, detach.
   *
   * Where the reference hand-schedules per-query threads, analysis here is
-  * one Dataset plan over drained telemetry — [[analyzeNow]] can run on any
-  * cadence (the reference's 5-minute default belongs to the caller's
-  * trigger, ref `QueryInsightsManager.scala:194-196`).
+  * one driver fold over the retained telemetry, which the bridges already
+  * hold in driver memory (capped at 2^20 scheduler and 2^16 progress
+  * events); it launches no Spark job, so [[analyzeNow]] can run on any
+  * cadence without taking cores from the monitored queries (the
+  * reference's 5-minute default belongs to the caller's trigger,
+  * ref `QueryInsightsManager.scala:194-196`).
   */
 class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
 
@@ -35,7 +38,8 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
   private val slaOverrides = new ConcurrentHashMap[String, Long]()
   private val reporter: Option[EventsReporter] =
     config.reporterClassName.map(EventsReporter.load(_, config.reporterOptions, "graft"))
-  private val metrics = org.apache.spark.graft.GraftMetricsSource.register()
+  private val metrics = org.apache.spark.graft.GraftMetricsSource.register(
+    () => schedulerBridge.droppedCount + progressBridge.droppedCount)
   private val consecutiveFailures = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile private var registered = false
 
@@ -62,11 +66,13 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     slaOverrides.put(queryIdent, slaMillis)
   }
 
-  /** Run the critical-path analysis over the retained telemetry. Pure
-    * Dataset plan; returns the per-batch results. Retention is applied
-    * after each analysis (ref `QueryInsightsManager.scala:234-244`). */
+  /** Run the critical-path analysis over the retained telemetry; returns
+    * the per-batch results. Retention is applied after each analysis
+    * (ref `QueryInsightsManager.scala:234-244`), and the metrics source's
+    * analysisTime gauge reads the whole call. */
   def analyzeNow(): Dataset[CriticalPathResult] = {
     import spark.implicits._
+    val t0 = System.nanoTime()
     val sched = schedulerBridge.snapshot(spark)
     val prog = progressBridge.snapshot(spark)
     val slas = slaOverrides.asScala.toSeq.map { case (q, s) => QuerySla(q, s) }.toDS()
@@ -78,12 +84,8 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
       defaultSlaMillis = config.expectedMicroBatchSLAMillis,
       lowFrac = config.criticalPathLowerThreshold,
       highFrac = config.criticalPathUpperThreshold)
-    val t0 = System.nanoTime()
     val collected = results.collect()
     buffer(collected.toIndexedSeq)
-    metrics.update(
-      collected.sortBy(r => (r.queryId, r.batchId)).lastOption,
-      (System.nanoTime() - t0) / 1000000L)
     if (config.shouldLogResults) collected.foreach(r => println(Reporting.logBlock(r)))
     reporter.foreach { rep =>
       Reporting.renderJson(spark.createDataset(collected.toIndexedSeq), "graft", "run",
@@ -96,6 +98,9 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     // to its cap and silently drops every new event.
     schedulerBridge.evictBefore(System.currentTimeMillis() -
       config.maxBatchesRetention.toLong * config.analysisIntervalMinutes * 60000L)
+    metrics.update(
+      collected.sortBy(r => (r.queryId, r.batchId)).lastOption,
+      (System.nanoTime() - t0) / 1000000L)
     spark.createDataset(collected.toIndexedSeq)
   }
 
@@ -184,10 +189,11 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
       r.batchId > lastReportedBatch.getOrDefault(r.queryId, -1L)
     }
     // newest sources description per query, from the progress telemetry
-    val sources = progressBridge.snapshot(spark)
-      .filter(col("kind") === "progress" && col("batchId").isNotNull)
-      .groupBy(col("queryId"))
-      .agg(max_by(concat_ws(", ", col("sources")), col("batchId")).as("sourcesDesc"))
+    val sources = progressBridge.snapshot(spark).collect().toSeq
+      .filter(e => e.kind == "progress" && e.batchId.isDefined)
+      .groupBy(_.queryId).toSeq
+      .map { case (queryId, es) => (queryId, es.maxBy(_.batchId.get).sources.mkString(", ")) }
+      .toDF("queryId", "sourcesDesc")
     val agg = Reporting.aggregate(
       spark.createDataset(fresh.toIndexedSeq), sources, config.discountFactor)
     val collected = agg.collect()

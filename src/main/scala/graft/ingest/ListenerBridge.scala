@@ -16,10 +16,13 @@ import graft.model.{ProgressEvent, SchedulerEvent}
   *
   * Unlike the reference — which mutates shared concurrent maps on the
   * listener-bus thread and analyzes clones of them — the bridges only
-  * append immutable rows to a bounded drain queue; ALL analytics run as
-  * Dataset plans over the drained rows ([[graft.analyzer.SpanBuilder]]).
-  * The listener-bus thread does O(1) work per event, which is what keeps a
-  * busy 1000-executor app from dropping bus events.
+  * append immutable rows to a bounded queue in driver memory (2^20
+  * scheduler and 2^16 progress events by default); the analysis folds a
+  * snapshot of those rows on the driver ([[graft.analyzer.SpanBuilder]]).
+  * Events past a cap are counted in `droppedCount`, which the metrics
+  * source publishes as its droppedEvents gauge. The listener-bus thread
+  * does O(1) work per event, which is what keeps a busy app from dropping
+  * bus events.
   */
 object ListenerBridge {
 

@@ -2,8 +2,8 @@ package graft.model
 
 /** Telemetry data model: the reference's mutable in-memory maps
   * (qubole/streaminglens `StreamingAppTracker.scala:33-42`) re-expressed as
-  * flat case-class rows with foreign keys, so the whole analysis pipeline is
-  * declarative Dataset algebra instead of map mutation (SURVEY.md §1.1).
+  * flat case-class rows with foreign keys, so the analysis folds immutable
+  * rows instead of mutating maps in place (SURVEY.md §1.1).
   */
 
 /** Raw scheduler-bus event (ref `listener/StreamingAppListener.scala:39-217`).

@@ -120,26 +120,4 @@ object Spans {
       .groupBy(col(keyCol))
       .agg(max(col("run_local") + col("offset")).cast("long").as("max_concurrency"))
   }
-
-  /** Island split over *intervals* (not points): a new island starts when an
-    * interval's start exceeds the running max of all previous ends within the
-    * key. This is the nested-interval-correct formulation of the reference's
-    * `JobOverlapHelper.scala:83-106` (which compares only against the
-    * immediately previous interval and would mis-split nested spans).
-    *
-    * Input: `keyCol`, `start_ms`, `end_ms`, `idCol` (tie-break).
-    * Output: input columns + `island: long` (1-based per key).
-    */
-  def splitOverlapping(df: DataFrame, keyCol: String, idCol: String): DataFrame = {
-    val w = Window.partitionBy(keyCol).orderBy(col("start_ms").asc, col(idCol).asc)
-    val wPrev = w.rowsBetween(Window.unboundedPreceding, -1)
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df
-      .withColumn("prev_max_end", max(col("end_ms")).over(wPrev))
-      .withColumn("flag",
-        when(col("prev_max_end").isNull || col("start_ms") > col("prev_max_end"), 1)
-          .otherwise(0))
-      .withColumn("island", sum(col("flag")).over(wRun).cast("long"))
-      .drop("prev_max_end", "flag")
-  }
 }

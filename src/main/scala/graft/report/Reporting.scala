@@ -1,7 +1,6 @@
 package graft.report
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model.{AggregateStateResult, CriticalPathResult}
 import graft.ops.Classify
@@ -16,18 +15,22 @@ object Reporting {
     * states: newest batch weight 1, then `discount`, `discount²`, …
     * (ref `StreamingLensReportingHelper.scala:180-197`). NONEWBATCHES
     * (ordinal 0) batches and batches already reported are excluded
-    * (ref `:181-182`). */
+    * (ref `:181-182`). A driver fold over the collected results, summed
+    * newest first. */
   def discountedScore(results: Dataset[CriticalPathResult],
                       discount: Double = 0.95,
                       lastReportedBatch: Long = -1L): DataFrame = {
-    val w = Window.partitionBy(col("queryId")).orderBy(col("batchId").desc)
-    results.toDF()
-      .filter(col("stateOrdinal") =!= 0 && col("batchId") > lastReportedBatch)
-      .withColumn("rn", row_number().over(w))
-      .withColumn("wt", pow(lit(discount), col("rn") - 1))
-      .groupBy(col("queryId"))
-      .agg((sum(col("stateOrdinal") * col("wt")) / sum(col("wt"))).as("score"),
-        count(lit(1)).as("n_batches"))
+    import results.sparkSession.implicits._
+    results.collect().toSeq
+      .filter(r => r.stateOrdinal != 0 && r.batchId > lastReportedBatch)
+      .groupBy(_.queryId).toSeq
+      .map { case (queryId, rs) =>
+        val weights = rs.indices.map(i => math.pow(discount, i))
+        val ordinals = rs.sortBy(_.batchId)(Ordering[Long].reverse).map(_.stateOrdinal)
+        (queryId, ordinals.zip(weights).map { case (o, w) => o * w }.sum / weights.sum,
+          rs.size.toLong)
+      }
+      .toDF("queryId", "score", "n_batches")
   }
 
   /** Recommendation text per aggregate state, specialized by source kind
@@ -56,19 +59,24 @@ object Reporting {
   }
 
   /** Aggregate state + recommendation per query
-    * (ref `StreamingLensReportingHelper.scala:103-141`). */
+    * (ref `StreamingLensReportingHelper.scala:103-141`): the folded scores,
+    * looked up against the collected sources, classified by a projection
+    * Spark evaluates on the driver. */
   def aggregate(results: Dataset[CriticalPathResult],
                 sourcesByQuery: DataFrame, // (queryId, sourcesDesc)
                 discount: Double = 0.95,
                 lastReportedBatch: Long = -1L): Dataset[AggregateStateResult] = {
     import results.sparkSession.implicits._
-    val scored = discountedScore(results, discount, lastReportedBatch)
-    scored
-      .join(broadcast(sourcesByQuery), Seq("queryId"), "left")
-      .withColumn("state", Classify.aggregateState(col("score")))
-      .select(col("queryId"), col("score"),
-        col("state"),
-        recommendation(col("state"), col("sourcesDesc")).as("recommendation"))
+    val sourcesOf = sourcesByQuery.select(col("queryId"), col("sourcesDesc")).collect().toSeq
+      .groupMap(_.getString(0))(_.getString(1))
+    val rows = for {
+      score <- discountedScore(results, discount, lastReportedBatch).collect().toSeq
+      sourcesDesc <- sourcesOf.getOrElse(score.getString(0), Seq(null))
+    } yield (score.getString(0), score.getDouble(1), sourcesDesc)
+    val state = Classify.aggregateState(col("score"))
+    rows.toDF("queryId", "score", "sourcesDesc")
+      .select(col("queryId"), col("score"), state.as("state"),
+        recommendation(state, col("sourcesDesc")).as("recommendation"))
       .as[AggregateStateResult]
   }
 

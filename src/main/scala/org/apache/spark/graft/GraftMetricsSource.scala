@@ -11,13 +11,15 @@ import graft.model.CriticalPathResult
   * — capability parity with the reference's metrics reporter
   * (ref `org/apache/spark/sql/streaming/qubole/streaminglens/metrics/
   * StreamingLensMetricsReporter.scala:41-70`): expectedMicroBatchSLA,
-  * batchRunningTime, criticalTime, state ordinal, analysisTime.
+  * batchRunningTime, criticalTime, state ordinal, analysisTime (the whole
+  * `analyzeNow()` call), plus droppedEvents: telemetry events the listener
+  * bridges dropped at their caps, read from `droppedEvents`.
   *
   * Lives under the spark namespace because `Source` and
   * `MetricsSystem.registerSource` are `private[spark]` — the identical
   * trick the reference uses (`StreamingLensMetricsReporter.scala:19,54`).
   */
-class GraftMetricsSource extends Source {
+class GraftMetricsSource(droppedEvents: () => Long) extends Source {
   override val sourceName: String = "StreamingGraft"
   override val metricRegistry: MetricRegistry = new MetricRegistry
 
@@ -43,13 +45,16 @@ class GraftMetricsSource extends Source {
   metricRegistry.register("analysisTime", new Gauge[Long] {
     override def getValue: Long = lastAnalysisMs
   })
+  metricRegistry.register("droppedEvents", new Gauge[Long] {
+    override def getValue: Long = droppedEvents()
+  })
 }
 
 object GraftMetricsSource {
   /** Register with the active SparkEnv's metrics system; returns the source
     * so the facade can push updates. */
-  def register(): GraftMetricsSource = {
-    val src = new GraftMetricsSource
+  def register(droppedEvents: () => Long): GraftMetricsSource = {
+    val src = new GraftMetricsSource(droppedEvents)
     Option(SparkEnv.get).foreach(_.metricsSystem.registerSource(src))
     src
   }

@@ -24,15 +24,31 @@ class AnalyzerSpec extends SparkSpec {
   private def progress(q: String, b: Long, rows: Long, rps: Double): BatchProgress =
     BatchProgress(q, b, "2024-01-01T00:00:00.000Z", rows, rps)
 
-  private def analyze(events: Seq[SchedulerEvent],
-                      prog: Seq[BatchProgress],
-                      slas: Seq[QuerySla]): Map[(String, Long), CriticalPathResult] = {
+  private def analyzeRows(events: Seq[SchedulerEvent],
+                          prog: Seq[BatchProgress],
+                          slas: Seq[QuerySla]): Seq[CriticalPathResult] = {
     import spark.implicits._
     val jobs = SpanBuilder.jobSpans(events.toDS())
     val stages = SpanBuilder.stageSpans(events.toDS())
-    BatchAnalyzer.analyze(jobs, stages, prog.toDS(), slas.toDS())
-      .collect().map(r => (r.queryId, r.batchId) -> r).toMap
+    BatchAnalyzer.analyze(jobs, stages, prog.toDS(), slas.toDS()).collect().toSeq
   }
+
+  private def analyze(events: Seq[SchedulerEvent],
+                      prog: Seq[BatchProgress],
+                      slas: Seq[QuerySla]): Map[(String, Long), CriticalPathResult] =
+    analyzeRows(events, prog, slas).map(r => (r.queryId, r.batchId) -> r).toMap
+
+  private def job(id: Long, start: Long, end: Long, sqlExec: Option[Long] = Some(5),
+                  stageIds: Seq[Int] = Nil, batch: Long = 9): Seq[SchedulerEvent] = Seq(
+    ev("jobStart", start, jobId = Some(id), stageIds = stageIds, sqlExecutionId = sqlExec,
+      queryId = Some("q"), batchId = Some(batch)),
+    ev("jobEnd", end, jobId = Some(id)))
+
+  private def stage(id: Int, start: Long, end: Long, task: Long,
+                    parents: Seq[Int] = Nil): Seq[SchedulerEvent] = Seq(
+    ev("stageSubmitted", start, stageId = Some(id), parents = parents),
+    ev("taskEnd", end, stageId = Some(id), durationMs = Some(task)),
+    ev("stageCompleted", end, stageId = Some(id)))
 
   test("readme-sample golden: brt 2094ms, ct 2047ms, SLA 10s => OVERPROVISIONED") {
     // One batch, one job [1000,3094] (span 2094 = brt), two serial stages
@@ -197,5 +213,99 @@ class AnalyzerSpec extends SparkSpec {
       SpanBuilder.jobExecutors(events), "q", 1L)
       .collect().map(_.executorId).toSeq
     assert(got === Seq("ex1"))
+  }
+
+  test("a stage listed in two jobs' stageIds yields one StageSpan per job") {
+    import spark.implicits._
+    // J1 [0,500] runs stages 0 -> 1; J2 [600,1000] lists stage 1 again and
+    // runs stage 2 on top of it. Critical times: J1 = 200 + 300 = 500,
+    // J2 = 400 + 300 (stage 0 is outside J2) = 700. Serial islands 500 +
+    // 400 = 900, brt 2000 => ct = 2000 - 900 + 500 + 700 = 2300.
+    val events = job(1, 0, 500, stageIds = Seq(0, 1)) ++
+      job(2, 600, 1000, stageIds = Seq(1, 2)) ++
+      stage(0, 0, 200, 200) ++ stage(1, 200, 500, 300, Seq(0)) ++
+      stage(2, 600, 1000, 400, Seq(1))
+    val spans = SpanBuilder.stageSpans(events.toDS()).collect()
+    assert(spans.map(s => (s.stageId, s.jobId)).sorted.toSeq ===
+      Seq((0, 1L), (1, 1L), (1, 2L), (2, 2L)))
+    val r = analyze(events, Seq(progress("q", 9, rows = 2000, rps = 1000.0)),
+      Seq(QuerySla("q", 10000)))(("q", 9))
+    assert(r.criticalTime === 2300L)
+  }
+
+  test("a job or stage without its end event is dropped") {
+    import spark.implicits._
+    // J1 [0,1000] lists stages 0 and 1; stage 1 never completes, J2 never
+    // ends. J1's critical time is stage 0's 300 alone, J2 adds no island:
+    // ct = 1500 - 1000 + 300 = 800.
+    val events = job(1, 0, 1000, stageIds = Seq(0, 1)) ++ stage(0, 0, 300, 300) ++
+      Seq(ev("stageSubmitted", 300, stageId = Some(1), parents = Seq(0)),
+        ev("taskEnd", 900, stageId = Some(1), durationMs = Some(600)),
+        ev("jobStart", 500, jobId = Some(2), sqlExecutionId = Some(5),
+          queryId = Some("q"), batchId = Some(9)))
+    assert(SpanBuilder.jobSpans(events.toDS()).collect().map(_.jobId).toSeq === Seq(1L))
+    assert(SpanBuilder.stageSpans(events.toDS()).collect().map(_.stageId).toSeq === Seq(0))
+    val r = analyze(events, Seq(progress("q", 9, rows = 1500, rps = 1000.0)),
+      Seq(QuerySla("q", 10000)))(("q", 9))
+    assert(r.criticalTime === 800L)
+  }
+
+  test("a null sqlExecutionId makes the job its own island group") {
+    // J1 [0,100] and J2 [50,150] overlap, but without a sql-execution id
+    // each is its own group: est = 100 + 100 (not 150) => ct = 1000 - 200.
+    val events = job(1, 0, 100, sqlExec = None) ++ job(2, 50, 150, sqlExec = None)
+    val r = analyze(events, Seq(progress("q", 9, rows = 1000, rps = 1000.0)),
+      Seq(QuerySla("q", 10000)))(("q", 9))
+    assert(r.criticalTime === 800L)
+  }
+
+  test("duplicate progress rows give duplicate results") {
+    val p = progress("q", 1, rows = 300, rps = 1000.0)
+    val rows = analyzeRows(Nil, Seq(p, p), Seq(QuerySla("q", 1000)))
+    assert(rows === Seq.fill(2)(
+      CriticalPathResult("q", 1L, 1000L, 300L, 300L, "OVERPROVISIONED", 1)))
+  }
+
+  test("batch running time is rows / rps * 1000, truncated toward zero") {
+    // 99 / 1.1 * 1000 = 89999.99999999999 in doubles; 99 * 1000 / 1.1
+    // would give 90000.
+    val r = analyze(Nil, Seq(progress("q", 1, rows = 99, rps = 1.1)),
+      Seq(QuerySla("q", 1000000)))(("q", 1))
+    assert(r.batchRunningTime === 89999L)
+  }
+
+  test("splitIslands keeps nested intervals in one island") {
+    // J1 [0,100] contains J2 [10,20]; J3 [30,40] also inside J1's span.
+    // A lag-only split would cut before J3 (prev end 20 < start 30), but the
+    // running-max split keeps all three in one island because J1 is open.
+    val spans = Seq((1L, 0L, 100L), (2L, 10L, 20L), (3L, 30L, 40L),
+      (4L, 200L, 210L)) // genuinely serial
+    val islands = BatchAnalyzer.splitIslands(
+      spans.map { case (id, s, e) => JobSpan(id, s, e, Some(5L), Some("q"), Some(9L)) })
+    assert(islands.map(_.map(_.jobId).toSet) === Seq(Set(1L, 2L, 3L), Set(4L)))
+    // est = 100 + 10 => ct = 1000 - 110 (the lag-only split would give 880)
+    val events = spans.flatMap { case (id, s, e) => job(id, s, e) }
+    val r = analyze(events, Seq(progress("q", 9, rows = 1000, rps = 1000.0)),
+      Seq(QuerySla("q", 10000)))(("q", 9))
+    assert(r.criticalTime === 890L)
+  }
+
+  test("island split partitions at real gaps (property)") {
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 10) {
+      val spans = (0 until 10).map { i =>
+        val s = rnd.nextLong(80)
+        JobSpan(i.toLong, s, s + 1 + rnd.nextLong(25), Some(5L), Some("q"), Some(9L))
+      }
+      val islands = BatchAnalyzer.splitIslands(spans)
+      // partition: every input job appears exactly once
+      assert(islands.flatten.map(_.jobId).sorted === spans.map(_.jobId).sorted)
+      // islands are separated: min start of island i+1 > max end of island i
+      islands.sliding(2).foreach {
+        case Seq(a, b) =>
+          assert(b.map(_.startTime).min > a.map(_.endTime).max, s"trial $trial: $spans")
+        case _ =>
+      }
+    }
   }
 }

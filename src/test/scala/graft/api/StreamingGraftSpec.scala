@@ -2,6 +2,9 @@ package graft.api
 
 import graft.SparkSpec
 import graft.config.GraftConfig
+import graft.ingest.ListenerBridge
+import org.apache.spark.graft.{GraftMetricsSource, SparkTestHooks}
+import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Reflection-loaded by the reporter SPI in the aggregate-report test. */
@@ -51,13 +54,10 @@ class StreamingGraftSpec extends SparkSpec {
         mem.addData(1001 to 2000: _*)
         query.processAllAvailable()
       } finally query.stop()
-      // listener bus is async; poll until the jobEnd events flush
-      var results = graft.analyzeNow().collect()
-      var tries = 0
-      while (results.isEmpty && tries < 20) {
-        Thread.sleep(500); tries += 1
-        results = graft.analyzeNow().collect()
-      }
+      // the listener bus is asynchronous: wait until the bridges hold every
+      // event of the stopped query
+      SparkTestHooks.drainListenerBus(spark)
+      val results = graft.analyzeNow().collect()
       assert(results.nonEmpty, "no batches analyzed - listeners captured nothing")
       assert(results.forall(_.queryId.nonEmpty))
       assert(results.forall(r =>
@@ -67,6 +67,37 @@ class StreamingGraftSpec extends SparkSpec {
         r.streamingQueryState == "OVERPROVISIONED" ||
           r.streamingQueryState == "NONEWBATCHES"))
     } finally graft.stop()
+  }
+
+  test("analysisTime gauge reads the whole analyzeNow() call") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val g = new StreamingGraft(spark, Map("streamingLens.shouldLogResults" -> "false"))
+    try {
+      val mem = MemoryStream[Int]
+      val query = mem.toDS().map(_ + 1)
+        .writeStream.format("memory").queryName("graft_gauge")
+        .outputMode("append").start()
+      try {
+        mem.addData(1 to 500: _*)
+        query.processAllAvailable()
+      } finally query.stop()
+      SparkTestHooks.drainListenerBus(spark)
+      val t0 = System.nanoTime()
+      g.analyzeNow()
+      val wallMs = (System.nanoTime() - t0) / 1e6
+      val gauge = SparkTestHooks.gauge("StreamingGraft", "analysisTime").asInstanceOf[Long]
+      assert(gauge > 0 && gauge <= wallMs, s"analysisTime $gauge ms, call took $wallMs ms")
+      assert(SparkTestHooks.gauge("StreamingGraft", "droppedEvents") === 0L)
+    } finally g.stop()
+  }
+
+  test("droppedEvents gauge counts the events the bridges dropped at their caps") {
+    val sched = new ListenerBridge.SchedulerBridge(maxBuffered = 1)
+    val prog = new ListenerBridge.ProgressBridge(maxBuffered = 1)
+    (1 to 3).foreach(i => sched.onJobEnd(SparkListenerJobEnd(i, 0L, JobSucceeded)))
+    val src = new GraftMetricsSource(() => sched.droppedCount + prog.droppedCount)
+    assert(src.metricRegistry.getGauges.get("droppedEvents").getValue === 2L)
   }
 
   test("updateExpectedMicroBatchSLA rejects non-positive values") {
@@ -112,13 +143,8 @@ class StreamingGraftSpec extends SparkSpec {
         mem.addData(501 to 1000: _*)
         query.processAllAvailable()
       } finally query.stop()
-      var results = g.analyzeNow().collect()
-      var tries = 0
-      while (results.isEmpty && tries < 20) {
-        Thread.sleep(500); tries += 1
-        results = g.analyzeNow().collect()
-      }
-      assert(results.nonEmpty, "no batches analyzed")
+      SparkTestHooks.drainListenerBus(spark)
+      assert(g.analyzeNow().collect().nonEmpty, "no batches analyzed")
       // repeated analyses re-buffer the same batches: the ring must cap AND
       // hold at most one row per (queryId, batchId) so the discounted report
       // never double-weights a batch
@@ -196,25 +222,27 @@ class StreamingGraftSpec extends SparkSpec {
     val g = new StreamingGraft(spark, Map(
       "streamingLens.shouldLogResults" -> "false",
       "streamingLens.expectedMicroBatchSLAMillis" -> "600000"))
-    val collected = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val ticker = _root_.graft.streaming.StreamingOps.analysisTicker(spark, 1) { () =>
-      g.analyzeGuarded().collect().foreach(r =>
-        collected.add(s"${r.batchId}:${r.streamingQueryState}"))
-    }
+    val firstTick = new java.util.concurrent.CompletableFuture[Seq[String]]()
     try {
       val mem = MemoryStream[Int]
+      // Data before start: the query's first progress event is its data
+      // batch, so the analysis lists that batch first.
+      mem.addData(1 to 2000: _*)
       val q = mem.toDS().map(_ * 2).writeStream.format("memory")
         .queryName("full_loop").outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      SparkTestHooks.drainListenerBus(spark)
+      // Every tick from here on sees all of the stopped query's telemetry.
+      val ticker = _root_.graft.streaming.StreamingOps.analysisTicker(spark, 1) { () =>
+        firstTick.complete(g.analyzeGuarded().collect().toSeq
+          .map(r => s"${r.batchId}:${r.streamingQueryState}"))
+      }
       try {
-        mem.addData(1 to 2000: _*)
-        q.processAllAvailable()
-        var waited = 0
-        while (collected.isEmpty && waited < 30000) { Thread.sleep(500); waited += 500 }
-      } finally q.stop()
-      assert(!collected.isEmpty, "ticker never produced an analysis result")
-      assert(collected.iterator().next().endsWith("OVERPROVISIONED"))
+        val collected = firstTick.get(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(collected.nonEmpty, "ticker never produced an analysis result")
+        assert(collected.head.endsWith("OVERPROVISIONED"), collected)
+      } finally ticker.stop()
     } finally {
-      ticker.stop()
       g.stop()
     }
   }

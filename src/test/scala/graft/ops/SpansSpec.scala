@@ -60,45 +60,6 @@ class SpansSpec extends SparkSpec {
       ("b", 1L, 1L, 7L, 7L)))
   }
 
-  test("splitOverlapping handles nested intervals (the reference's lag-only split would not)") {
-    import spark.implicits._
-    // J1 [0,100] contains J2 [10,20]; J3 [30,40] also inside J1's span.
-    // A lag-only split would cut before J3 (prev end 20 < start 30), but the
-    // running-max split keeps all three in one island because J1 is open.
-    val df = Seq(
-      (1L, 0L, 100L), (2L, 10L, 20L), (3L, 30L, 40L),
-      (4L, 200L, 210L)) // genuinely serial
-      .toDF("jobId", "start_ms", "end_ms").withColumn("g", lit("x"))
-    val got = Spans.splitOverlapping(df, "g", "jobId")
-      .select("jobId", "island").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 2L))
-  }
-
-  test("splitOverlapping islands partition the input and are separated by real gaps (property)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    for (trial <- 1 to 10) {
-      val spans = (0 until 10).map { i =>
-        val s = rnd.nextLong(80)
-        (i.toLong, s, s + 1 + rnd.nextLong(25))
-      }
-      val df = spans.toDF("jobId", "start_ms", "end_ms").withColumn("g", lit("x"))
-      val rows = Spans.splitOverlapping(df, "g", "jobId")
-        .select("jobId", "start_ms", "end_ms", "island").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      // partition: every input row appears exactly once
-      assert(rows.map(_._1).sorted.toSeq === spans.map(_._1).sorted)
-      // islands are separated: min start of island i+1 > max end of island i
-      val byIsland = rows.groupBy(_._4).toSeq.sortBy(_._1)
-      byIsland.sliding(2).foreach {
-        case Seq((_, a), (_, b)) =>
-          assert(b.map(_._2).min > a.map(_._3).max, s"trial $trial: $spans")
-        case _ =>
-      }
-    }
-  }
-
   test("maxConcurrencyScalable equals the one-window formulation (property)") {
     import spark.implicits._
     val rnd = new scala.util.Random(99)

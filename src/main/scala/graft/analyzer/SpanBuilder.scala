@@ -12,7 +12,7 @@ import graft.model._
   * The live-path builders ([[jobSpans]], [[stageSpans]], [[batchProgress]])
   * collect their input and fold it on the driver, where the telemetry
   * already lives: the listener bridges cap it at 2^20 scheduler and 2^16
-  * progress events, and the replay file sources feed the same functions
+  * progress rows, and the replay file sources feed the same functions
   * under the same bound. Their results come back as local Datasets, so a
   * downstream projection runs on the driver without a Spark job. The
   * executor tables stay Dataset plans.
@@ -41,11 +41,16 @@ object SpanBuilder {
   }
 
   /** Stage spans incl. the longest single task, the input to the critical
-    * path (ref `StreamingAppListener.scala:110-142,144-192` and sparklens
-    * `StageTimeSpan.updateTasks`). Stage→job comes from the jobStart's
-    * stageIds (T3 `stageIDToJobID`): a stage listed by two jobs yields one
-    * span per job. Stages without both a submission and a completion event
-    * are dropped, as in [[jobSpans]]. */
+    * path, and the summed task time, the input to [[BatchAnalyzer.estimateAt]]
+    * (ref `StreamingAppListener.scala:110-142,144-192` and sparklens
+    * `StageTimeSpan.updateTasks`). A stage's `taskEnd` rows are folds of its
+    * tasks: the longest task is the max of their `durationMs`, and the total
+    * the sum of their `totalDurationMs`, where a per-task row (None) counts
+    * its `durationMs`. So per-task rows from a replay file and the live
+    * bridge's per-(stage, executor) rows give the same span. Stage→job comes
+    * from the jobStart's stageIds (T3 `stageIDToJobID`): a stage listed by
+    * two jobs yields one span per job. Stages without both a submission and
+    * a completion event are dropped, as in [[jobSpans]]. */
   def stageSpans(events: Dataset[SchedulerEvent]): Dataset[StageSpan] = {
     import events.sparkSession.implicits._
     val all = events.collect().toSeq
@@ -54,12 +59,14 @@ object SpanBuilder {
       .groupBy(_.stageId.get)
       .flatMap { case (stageId, es) =>
         def times(kind: String) = es.filter(_.kind == kind).map(_.time)
-        val tasks = es.filter(_.kind == "taskEnd").map(_.durationMs.getOrElse(0L))
+        val tasks = es.filter(_.kind == "taskEnd")
+        val maxTask = tasks.map(_.durationMs.getOrElse(0L)).foldLeft(0L)(math.max)
+        val totalTask = tasks.map(t => t.totalDurationMs.orElse(t.durationMs).getOrElse(0L)).sum
         val parents = es.find(e => e.kind == "stageSubmitted" && e.parentStageIds != null)
           .map(_.parentStageIds).getOrElse(Nil)
         for (start <- times("stageSubmitted").minOption; end <- times("stageCompleted").maxOption)
           yield stageId -> StageSpan(stageId, -1L, start, end, parents,
-            es.map(_.numTasks.getOrElse(0)).max, tasks.foldLeft(0L)(math.max), tasks.sum)
+            es.map(_.numTasks.getOrElse(0)).max, maxTask, totalTask)
       }
     val spans = for {
       e <- all if e.kind == "jobStart" && e.jobId.isDefined && e.stageIds != null

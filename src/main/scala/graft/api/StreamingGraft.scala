@@ -19,7 +19,7 @@ import graft.report.{EventsReporter, Reporting}
   * Where the reference hand-schedules per-query threads, analysis here is
   * one driver fold over the retained telemetry, which the bridges already
   * hold in driver memory (capped at 2^20 scheduler and 2^16 progress
-  * events); it launches no Spark job, so [[analyzeNow]] can run on any
+  * rows); it launches no Spark job, so [[analyzeNow]] can run on any
   * cadence without taking cores from the monitored queries (the
   * reference's 5-minute default belongs to the caller's trigger,
   * ref `QueryInsightsManager.scala:194-196`).
@@ -188,12 +188,7 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     val fresh = recentResults.filter { r =>
       r.batchId > lastReportedBatch.getOrDefault(r.queryId, -1L)
     }
-    // newest sources description per query, from the progress telemetry
-    val sources = progressBridge.snapshot(spark).collect().toSeq
-      .filter(e => e.kind == "progress" && e.batchId.isDefined)
-      .groupBy(_.queryId).toSeq
-      .map { case (queryId, es) => (queryId, es.maxBy(_.batchId.get).sources.mkString(", ")) }
-      .toDF("queryId", "sourcesDesc")
+    val sources = progressBridge.newestSources.toDF("queryId", "sourcesDesc")
     val agg = Reporting.aggregate(
       spark.createDataset(fresh.toIndexedSeq), sources, config.discountFactor)
     val collected = agg.collect()

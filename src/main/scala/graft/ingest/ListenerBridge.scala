@@ -1,6 +1,7 @@
 package graft.ingest
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
@@ -14,15 +15,19 @@ import graft.model.{ProgressEvent, SchedulerEvent}
   * (ref `listener/StreamingAppListener.scala:39-217` and
   * `listener/QueryProgressListener.scala:34-89`).
   *
-  * Unlike the reference — which mutates shared concurrent maps on the
-  * listener-bus thread and analyzes clones of them — the bridges only
-  * append immutable rows to a bounded queue in driver memory (2^20
-  * scheduler and 2^16 progress events by default); the analysis folds a
+  * The bridges keep immutable rows in driver memory, bounded at 2^20
+  * scheduler and 2^16 progress rows by default; the analysis folds a
   * snapshot of those rows on the driver ([[graft.analyzer.SpanBuilder]]).
-  * Events past a cap are counted in `droppedCount`, which the metrics
-  * source publishes as its droppedEvents gauge. The listener-bus thread
-  * does O(1) work per event, which is what keeps a busy app from dropping
-  * bus events.
+  * Most events append one row to a queue. Task ends fold per (stage,
+  * executor) instead, as the reference folds each task end into its
+  * stage's `StageTimeSpan` (ref `StreamingAppListener.scala:127`): one
+  * `taskEnd` row per key carries the longest task (`durationMs`), the
+  * summed task time (`totalDurationMs`) and the newest finish (`time`),
+  * which is all the analysis reads of task ends. A fold row counts once
+  * against the cap, when its key first appears. Rows past the cap are
+  * counted in `droppedCount`, which the metrics source publishes as its
+  * droppedEvents gauge. The listener-bus thread does O(1) work per event,
+  * which is what keeps a busy app from dropping bus events.
   */
 object ListenerBridge {
 
@@ -35,30 +40,38 @@ object ListenerBridge {
 
   class SchedulerBridge(maxBuffered: Int = 1 << 20) extends SparkListener {
     private val queue = new ConcurrentLinkedQueue[SchedulerEvent]()
+    private val taskFolds = new ConcurrentHashMap[(Int, Option[String]), SchedulerEvent]()
     // ConcurrentLinkedQueue.size is O(n); the bus thread must stay O(1),
-    // so the size is tracked separately.
-    private val queued = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val dropped = new java.util.concurrent.atomic.AtomicLong(0)
+    // so the retained count (queue rows plus fold rows) is tracked separately.
+    private val retained = new AtomicInteger(0)
+    private val dropped = new AtomicLong(0)
 
-    private def offer(e: SchedulerEvent): Unit =
-      if (queued.get < maxBuffered) { queue.add(e); queued.incrementAndGet() }
-      else dropped.incrementAndGet()
+    /** Whether one more row fits under the cap; counts it, or the drop. */
+    private def admit(): Boolean =
+      if (retained.get < maxBuffered) { retained.incrementAndGet(); true }
+      else { dropped.incrementAndGet(); false }
+
+    private def offer(e: SchedulerEvent): Unit = if (admit()) queue.add(e)
 
     def droppedCount: Long = dropped.get
 
-    /** Snapshot buffered events into a Dataset without consuming them —
-      * telemetry stays available to later analyses, like the reference's
-      * retained tracker maps (`StreamingAppTracker.scala:33-42`). */
+    /** Snapshot the retained rows (queue rows, then fold rows) into a
+      * Dataset without consuming them — telemetry stays available to later
+      * analyses, like the reference's retained tracker maps
+      * (`StreamingAppTracker.scala:33-42`). */
     def snapshot(spark: SparkSession): Dataset[SchedulerEvent] = {
       import spark.implicits._
-      spark.createDataset(queue.asScala.toSeq)
+      spark.createDataset((queue.asScala ++ taskFolds.values.asScala).toSeq)
     }
 
-    /** Retention eviction: drop events older than `horizonMs`
-      * (ref purge `StreamingAppTracker.scala:44-74`). */
+    /** Retention eviction: drop rows older than `horizonMs`
+      * (ref purge `StreamingAppTracker.scala:44-74`). A fold row's time is
+      * its newest task's finish, so it goes only once all its tasks are
+      * older than the horizon. */
     def evictBefore(horizonMs: Long): Unit = {
       queue.removeIf(e => e.time < horizonMs)
-      queued.set(queue.size)
+      taskFolds.values.removeIf(e => e.time < horizonMs)
+      retained.set(queue.size + taskFolds.size)
     }
 
     private def base(kind: String, time: Long) = SchedulerEvent(
@@ -90,13 +103,27 @@ object ListenerBridge {
         stageId = Some(e.stageInfo.stageId),
         failed = Some(e.stageInfo.failureReason.isDefined)))
 
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      offer(base("taskEnd", Option(e.taskInfo).map(_.finishTime).getOrElse(0L)).copy(
-        stageId = Some(e.stageId),
-        taskId = Option(e.taskInfo).map(_.taskId),
-        executorId = Option(e.taskInfo).map(_.executorId),
-        durationMs = Option(e.taskInfo).map(_.duration),
-        failed = Some(Option(e.taskInfo).exists(_.failed))))
+    /** Folds the task into its (stage, executor) row; an event without
+      * task info counts as a 0 ms task on no executor. */
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      val info = Option(e.taskInfo)
+      val finish = info.map(_.finishTime).getOrElse(0L)
+      val duration = info.map(_.duration).getOrElse(0L)
+      val failed = info.exists(_.failed)
+      taskFolds.compute((e.stageId, info.map(_.executorId)), (key, row) =>
+        if (row != null) row.copy(
+          time = math.max(row.time, finish),
+          durationMs = row.durationMs.map(math.max(_, duration)),
+          totalDurationMs = row.totalDurationMs.map(_ + duration),
+          failed = row.failed.map(_ || failed))
+        else if (admit()) base("taskEnd", finish).copy(
+          stageId = Some(e.stageId),
+          executorId = key._2,
+          durationMs = Some(duration),
+          failed = Some(failed),
+          totalDurationMs = Some(duration))
+        else null)
+    }
 
     override def onExecutorAdded(e: SparkListenerExecutorAdded): Unit =
       offer(base("executorAdded", e.time).copy(
@@ -110,8 +137,8 @@ object ListenerBridge {
 
   class ProgressBridge(maxBuffered: Int = 1 << 16) extends StreamingQueryListener {
     private val queue = new ConcurrentLinkedQueue[ProgressEvent]()
-    private val queued = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val dropped = new java.util.concurrent.atomic.AtomicLong(0)
+    private val queued = new AtomicInteger(0)
+    private val dropped = new AtomicLong(0)
 
     def droppedCount: Long = dropped.get
 
@@ -120,6 +147,15 @@ object ListenerBridge {
       import spark.implicits._
       spark.createDataset(queue.asScala.toSeq)
     }
+
+    /** (queryId, sources description) per query, read from the buffered
+      * events without a Dataset: the sources of the query's progress event
+      * with the highest batch id, joined by ", ". */
+    def newestSources: Seq[(String, String)] =
+      queue.asScala.toSeq
+        .filter(e => e.kind == "progress" && e.batchId.isDefined)
+        .groupBy(_.queryId).toSeq
+        .map { case (queryId, es) => (queryId, es.maxBy(_.batchId.get).sources.mkString(", ")) }
 
     /** Retention eviction (ref `QueryInsightsManager.scala:234-240`): keep
       * only the newest `maxBatches` batch ids per query, and drop the

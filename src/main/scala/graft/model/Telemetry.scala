@@ -6,10 +6,13 @@ package graft.model
   * rows instead of mutating maps in place (SURVEY.md §1.1).
   */
 
-/** Raw scheduler-bus event (ref `listener/StreamingAppListener.scala:39-217`).
-  * One row per listener callback; nullable fields depend on `kind`. */
+/** Scheduler-bus event (ref `listener/StreamingAppListener.scala:39-217`).
+  * One row per listener callback, except that the live bridge folds task
+  * ends into one `taskEnd` row per (stage, executor); a per-task row (from a
+  * replay file or a spec) is the fold of one task. Nullable fields depend
+  * on `kind`. */
 case class SchedulerEvent(
-    kind: String,                 // jobStart|jobEnd|stageSubmitted|stageCompleted|taskStart|taskEnd|executorAdded|executorRemoved
+    kind: String,                 // jobStart|jobEnd|stageSubmitted|stageCompleted|taskEnd|executorAdded|executorRemoved
     time: Long,                   // epoch millis
     jobId: Option[Long],
     stageIds: Seq[Int],
@@ -20,11 +23,14 @@ case class SchedulerEvent(
     executorId: Option[String],
     host: Option[String],
     cores: Option[Int],
-    durationMs: Option[Long],     // task execution time
-    failed: Option[Boolean],
+    durationMs: Option[Long],     // taskEnd: execution time of the row's longest task
+    failed: Option[Boolean],      // taskEnd: any task of the row failed; stageCompleted: the stage did
     sqlExecutionId: Option[Long], // "spark.sql.execution.id" job property
     queryId: Option[String],      // "sql.streaming.queryId" job property
-    batchId: Option[Long])
+    batchId: Option[Long],
+    // taskEnd: summed execution time of the row's tasks; None on a per-task
+    // row, which counts as its own durationMs
+    totalDurationMs: Option[Long] = None)
 
 /** Streaming-query lifecycle/progress event
   * (ref `listener/QueryProgressListener.scala:34-89`). */

@@ -46,6 +46,40 @@ class ReplaySpec extends SparkSpec {
       .collect().toSet === prog.toSet)
   }
 
+  test("a folded taskEnd row keeps its summed task time through parquet and json") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_fold").toString
+    val events = Seq(
+      sched("taskEnd", 1500, stageId = Some(0), durationMs = Some(400))
+        .copy(executorId = Some("exec-a"), totalDurationMs = Some(700L)),
+      sched("jobEnd", 2000, jobId = Some(1)))
+    events.toDS().write.parquet(s"$dir/pq")
+    events.toDS().write.json(s"$dir/js")
+    assert(Replay.schedulerEventsParquet(spark, s"$dir/pq").collect().toSet === events.toSet)
+    assert(Replay.schedulerEventsJson(spark, s"$dir/js").collect().toSet === events.toSet)
+  }
+
+  test("a json file written before totalDurationMs existed reads each taskEnd as one task") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_old").toString
+    val events = Seq(
+      sched("jobStart", 1000, jobId = Some(1), stageIds = Seq(0)),
+      sched("stageSubmitted", 1000, stageId = Some(0)),
+      sched("taskEnd", 1400, stageId = Some(0), durationMs = Some(400)),
+      sched("taskEnd", 1900, stageId = Some(0), durationMs = Some(900)),
+      sched("stageCompleted", 2000, stageId = Some(0)),
+      sched("jobEnd", 2000, jobId = Some(1)))
+    events.toDS().drop("totalDurationMs").write.json(s"$dir/js")
+    val lines = spark.read.textFile(s"$dir/js").collect()
+    assert(lines.length === events.length && lines.forall(!_.contains("totalDurationMs")))
+
+    val replayed = Replay.schedulerEventsJson(spark, s"$dir/js")
+    assert(replayed.collect().toSet === events.toSet)
+    assert(replayed.collect().forall(_.totalDurationMs.isEmpty))
+    val span = SpanBuilder.stageSpans(replayed).collect().toSeq
+    assert(span.map(s => (s.maxTaskDurationMs, s.totalTaskDurationMs)) === Seq((900L, 1300L)))
+  }
+
   test("offline analysis over replayed telemetry classifies the batch") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_replay2").toString

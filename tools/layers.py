@@ -6,6 +6,11 @@ Reads the result JSON line (the last line starting with "{") that
 same workload, and prints every metric of either run with both values and
 their ratio (change / parent), so a change can show where its time went.
 
+It then checks each run as the benchmark does: the run must report
+`correct: true`, and its `trace.accounted_pct` must lie in the accepted
+range (`Layers.AccountedRange` in perfbench, 50-200 %), or the traced run
+fails. The exit status is 1 when either run fails a check.
+
 Usage:
     python3 perfbench/run.py --workload replay-b1000 --seed 1 --seconds 12 --trace 1 > parent.json
     # ... apply the change, run again into change.json ...
@@ -13,6 +18,9 @@ Usage:
 """
 import json
 import sys
+
+# perfbench/src/main/scala/perfbench/Layers.scala: AccountedRange
+ACCOUNTED_RANGE = (50.0, 200.0)
 
 
 def result(path):
@@ -49,6 +57,19 @@ def main():
         p, c = pm.get(n, {}).get("value"), cm.get(n, {}).get("value")
         unit = (pm.get(n) or cm.get(n)).get("unit", "")
         print(f"{n:{width}s}  {fmt(p):>12s}  {fmt(c):>12s}  {ratio(p, c):>7s}  {unit}")
+    lo, hi = ACCOUNTED_RANGE
+    ok = True
+    for label, run in (("parent", parent), ("change", change)):
+        acc = run.get("metrics", {}).get("trace.accounted_pct", {}).get("value")
+        problems = []
+        if run.get("correct") is not True:
+            problems.append("correct is not true")
+        if acc is None or not lo <= acc <= hi:
+            problems.append("accounted outside the accepted range")
+        ok = ok and not problems
+        print(f"{label}: trace.accounted_pct {fmt(acc)} % (accepted {lo:g}-{hi:g} %)"
+              + (": FAIL, " + "; ".join(problems) if problems else ": ok"))
+    sys.exit(0 if ok else 1)
 
 
 if __name__ == "__main__":

@@ -99,9 +99,10 @@ object Bench {
     // thread submits the job, and warm-up wall time is pure overhead —
     // serial warm-up of a 340-key catalog was the single largest block of
     // the r18/r19 driver runs. Scratch dirs are per-query-tag and the
-    // shared-frame cache is a concurrent TrieMap, so concurrent warm-up
-    // queries don't collide; a duplicate frame build lost to a TrieMap
-    // race is wasted-but-harmless sf0.001 work.
+    // shared-build registry is a concurrent TrieMap timed with a
+    // per-thread build stack, so concurrent warm-up queries don't collide;
+    // a duplicate build lost to a TrieMap race is wasted-but-harmless
+    // sf0.001 work.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       sfDir.replaceAll("/+$", "").replaceAll("sf[0-9.]+$", "sf0.001"))
     val warmOk = warmDir != sfDir && new java.io.File(warmDir).isDirectory
@@ -182,12 +183,15 @@ object Bench {
       .filter(selected)
       .sortBy(n => (-warmSecs.getOrElse(n, 0.0), n))
     // shared-frame attribution: each one-time shared build (persisted frame,
-    // BPE training, PCA model) is reported as its OWN `frame:<tag>` timing
-    // key, measured inside ExtQueries.timedBuild and SUBTRACTED from the
-    // catalog query that happened to force it — so no query's number
-    // conflates frame build with query run, and run-order shifts between
-    // rounds cannot read as per-query regressions (r9 saw x69/x70/x88
-    // "double", r11 saw x07 carry two family frames, for this reason).
+    // BPE training, PCA model, centroids) is reported as its OWN
+    // `frame:<tag>` timing key and SUBTRACTED from the catalog query that
+    // happened to force it — so no query's number conflates frame build
+    // with query run, and run-order shifts between rounds cannot read as
+    // per-query regressions (r9 saw x69/x70/x88 "double", r11 saw x07
+    // carry two family frames, for this reason). The build seconds are
+    // EXCLUSIVE (ExtShared subtracts a nested build from the build that
+    // forced it), so a key's frame rows plus its own time equal its wall
+    // time and each interval is counted once in the total.
     // `shared_frames` still records which query forced each build.
     val frameBuilders = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Raw wall per catalog key (own + any frame builds it forced) — the

@@ -214,8 +214,8 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
   private val analysisBusy = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Testing seam for [[analyzeGuarded]]: the analysis it guards. Specs
-    * override this with a deliberately slow plan to exercise the
-    * timeout/cancellation path without fabricating slow telemetry. */
+    * override this with a blocking or throwing analysis to exercise the
+    * timeout and self-shutdown paths without fabricating telemetry. */
   protected def runGuardedAnalysis(): Dataset[CriticalPathResult] = analyzeNow()
 
   def analyzeGuarded(): Dataset[CriticalPathResult] = {
@@ -224,40 +224,24 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     // The busy flag prevents repeated ticks from stacking analyses; a
-    // timed-out analysis is actively CANCELLED (below), and clears the
-    // flag when its cancellation unwinds.
+    // timed-out analysis is abandoned (it launches no Spark job, so there
+    // is nothing to cancel, ref `QueryInsightsManager.scala:149-178`) and
+    // clears the flag when it finishes.
     if (!analysisBusy.compareAndSet(false, true)) {
       System.err.println("[graft] analysis still running; skipping this tick")
       return spark.createDataset(Seq.empty[CriticalPathResult])
     }
-    // The analysis thread launches its Spark jobs inside a per-invocation
-    // job group so a timeout can cancelJobGroup — the abandoned plan frees
-    // its executors instead of running to completion holding cluster
-    // resources (the reference cannot cancel; we can —
-    // ref `QueryInsightsManager.scala:149-178` only abandons).
-    val jobGroup = s"graft-analysis-${java.util.UUID.randomUUID()}"
     try {
       val out = Await.result(
         Future {
-          try {
-            spark.sparkContext.setJobGroup(jobGroup,
-              "graft guarded analysis", interruptOnCancel = true)
-            try runGuardedAnalysis()
-            finally spark.sparkContext.clearJobGroup()
-          } finally analysisBusy.set(false)
+          try runGuardedAnalysis()
+          finally analysisBusy.set(false)
         },
         config.maxAnalysisTimeSeconds.seconds)
       consecutiveFailures.set(0)
       out
     } catch {
       case e: Throwable =>
-        // cancelJobGroupAndFutureJobs, not cancelJobGroup: a plain cancel
-        // only kills jobs ACTIVE at that instant, so an analysis still in
-        // driver-side planning (or between two jobs) at the timeout would
-        // survive it — the future-jobs variant also kills anything the
-        // abandoned thread submits under the group afterwards.
-        if (e.isInstanceOf[java.util.concurrent.TimeoutException])
-          spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
         System.err.println(s"[graft] analysis failed: ${e.getMessage}")
         if (consecutiveFailures.incrementAndGet() >= config.maxRetries) stop()
         spark.createDataset(Seq(CriticalPathResult(

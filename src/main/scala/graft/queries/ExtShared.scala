@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{Curation, Dedup, Export, Ivf, Multimodal, Pack, Retrieval, Similarity, TextAnalysis}
 
-/** Shared frames, caches, and oracle fragments used across the split
-  * catalog families (one build per (sf, tag) — see sharedFrame). Moved
+/** Shared builds and oracle fragments used across the split catalog
+  * families (one build per (session, sf, tag) — see [[shared]]). Moved
   * verbatim from the monolithic ExtQueries; visibility widened to the
   * queries package so every family file sees them. */
 private[queries] object ExtShared {
@@ -93,19 +93,34 @@ private[queries] object ExtShared {
     * compute-once/consume-many shape of a real pipeline DAG (the pair set,
     * graph, or flag frame is ONE artifact with several consumers), applied
     * to the catalog: built on first use per (session, sfDir, tag),
-    * persisted, returned verbatim afterwards. The tag pins EVERY knob of
-    * the shared frame — a consumer with different knobs gets its own tag.
+    * returned verbatim afterwards. The tag pins EVERY knob of the shared
+    * build — a consumer with different knobs gets its own tag.
     *
     * Sharing is only ever between an operator entry and consumers of the
     * SAME logical computation (its gates, its downstream composites) —
     * never across algorithm variants: x08/x36 deliberately recompute x07's
     * pair set by different algorithms and stay independent, as does the
-    * x12 LSH path. */
-  private[queries] val frameCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+    * x12 LSH path.
+    *
+    * ONE registry holds every shared build, persisted frames and
+    * driver-side values (BPE merges, samples, models, centroids, event
+    * rows) alike, each entry with its exclusive build seconds; the tag
+    * list, the build times and the clear below are views over it, so no
+    * shared value can be left out of any of them. A TrieMap because its
+    * getOrElseUpdate tolerates a builder that forces another shared build
+    * (ConcurrentHashMap.computeIfAbsent throws on that recursive update);
+    * two threads racing on one key both build, and the loser's value is
+    * dropped — wasted-but-harmless warm-up work. */
+  private final case class Built(value: Any, secs: Double)
+  private val registry = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), Built]
+
+  private[queries] def shared[T](s: SparkSession, d: String, tag: String)(mk: => T): T =
+    registry.getOrElseUpdate((s, d, tag), timedBuild(mk)).value.asInstanceOf[T]
+
   private[queries] def sharedFrame(s: SparkSession, d: String, tag: String)
                          (mk: => DataFrame): DataFrame =
-    frameCache.getOrElseUpdate((s, d, tag), timedBuild(d, tag) {
+    shared(s, d, tag) {
       val f = mk.persist()
       // Materialize the cache NOW, inside the timed build, so the one-time
       // cost is attributable to the frame rather than smeared into whatever
@@ -113,50 +128,51 @@ private[queries] object ExtShared {
       // a freshly-persisted frame; consumers then read cached blocks).
       f.count()
       f
-    })
+    }
 
-  /** Wall-clock of each shared build (frames AND driver-value trainings),
-    * keyed by the dir-qualified tag ([[sharedFrameTags]]'s format). A
-    * measurement harness diffs [[sharedFrameTags]] around a timed query,
-    * reads the new tags' build seconds here, and reports them as
-    * first-class `frame:<tag>` entries instead of folding one-time build
-    * cost into whichever catalog query happened to force it. Rebuilds
-    * (e.g. the Bench AQE twin after [[clearSharedFrames]]) overwrite. */
-  private[queries] val buildSecs = scala.collection.concurrent.TrieMap.empty[String, Double]
-  def sharedFrameBuildSecs: Map[String, Double] = buildSecs.toMap
-  private[queries] def qualifiedTag(d: String, tag: String): String =
-    s"${d.replaceAll("/+$", "").split('/').last}:$tag"
-  private[queries] def timedBuild[T](d: String, tag: String)(mk: => T): T = {
+  /** Each build's EXCLUSIVE seconds: a nested shared build forced from
+    * inside a builder is timed as its own entry and subtracted from its
+    * parent, so every interval is attributed to exactly one tag. The
+    * stack is per thread because builds run concurrently (Bench's
+    * warm-up pool); each slot sums the wall time of its direct children. */
+  private val buildStack = ThreadLocal.withInitial[List[Array[Double]]](() => Nil)
+  private def timedBuild(mk: => Any): Built = {
+    val outer = buildStack.get
+    val nested = Array(0.0)
+    buildStack.set(nested :: outer)
     val t0 = System.nanoTime()
-    val v = mk
-    buildSecs.put(qualifiedTag(d, tag), (System.nanoTime() - t0) / 1e9)
-    v
+    val v = try mk finally buildStack.set(outer)
+    val wall = (System.nanoTime() - t0) / 1e9
+    outer.headOption.foreach(_(0) += wall)
+    Built(v, wall - nested(0))
   }
 
-  /** The tags of every shared frame currently cached — lets a measurement
-    * harness attribute each frame's one-time build cost to the catalog
-    * query that first forced it (Bench diffs this set around each timed
-    * query; without the attribution, whichever query alphabetically first
-    * touches an expensive shared subtree looks like a regression whenever
-    * the catalog's run order shifts). */
-  /** Tags are DIR-QUALIFIED (`sf0.1:jacc-n3-t06`): frames are cached per
-    * (session, dir, tag), so the warm-up pass at the tiny SF builds its
-    * own entries and the timed pass at the bench SF builds distinct ones —
-    * an unqualified tag set made the timed pass's diff come up empty
-    * (every bare tag already present from warm-up) and silently blanked
-    * the default pass's attribution block. */
-  def sharedFrameTags: Set[String] = {
-    def base(d: String) = d.replaceAll("/+$", "").split('/').last
-    frameCache.keySet.map { case (_, d, tag) => s"${base(d)}:$tag" }.toSet ++
-      // driver-VALUE caches (BPE merge training, PCA models) attribute the
-      // same way as frame builds: their one-time training cost lands in
-      // whichever timed query first forces them, and without a tag that
-      // cost migrates invisibly when the catalog's run order shifts
-      mergesCache.keySet.map { case (_, d, n) => s"${base(d)}:bpe-train-n$n" } ++
-      pcaCache.keySet.map { case (_, d, k) => s"${base(d)}:pca-model-k$k" } ++
-      sampleCache.keySet.map { case (_, d, c) => s"${base(d)}:emb-sample-n$c" } ++
-      eventRowsCache.keySet.map { case (_, d) => s"${base(d)}:event-rows" }
-  }
+  /** The tags of every shared build currently registered — lets a
+    * measurement harness attribute each build's one-time cost to the
+    * catalog query that first forced it (Bench diffs this set around each
+    * timed query; without the attribution, whichever query alphabetically
+    * first touches an expensive shared subtree looks like a regression
+    * whenever the catalog's run order shifts).
+    *
+    * Tags are DIR-QUALIFIED (`sf0.1:jacc-n3-t06`): builds are registered
+    * per (session, dir, tag), so the warm-up pass at the tiny SF builds
+    * its own entries and the timed pass at the bench SF builds distinct
+    * ones — an unqualified tag set made the timed pass's diff come up
+    * empty (every bare tag already present from warm-up) and silently
+    * blanked the default pass's attribution block. */
+  def sharedFrameTags: Set[String] =
+    registry.keySet.map { case (_, d, tag) => qualifiedTag(d, tag) }.toSet
+
+  /** Exclusive build seconds of every registered build, keyed like
+    * [[sharedFrameTags]]. A harness reads the new tags' seconds here and
+    * reports them as first-class `frame:<tag>` entries; since nested
+    * builds are subtracted from their parents, a query's frame rows plus
+    * its own time add up to its wall time. */
+  def sharedFrameBuildSecs: Map[String, Double] =
+    registry.iterator.map { case ((_, d, tag), b) => qualifiedTag(d, tag) -> b.secs }.toMap
+
+  private def qualifiedTag(d: String, tag: String): String =
+    s"${d.replaceAll("/+$", "").split('/').last}:$tag"
 
   /** x80's export scratch location: ONE deterministic dir per sf-dir
     * (Overwrite reuse bounds disk) with a single process-wide cleanup
@@ -173,18 +189,17 @@ private[queries] object ExtShared {
       java.nio.file.Files.createTempDirectory(s"graft-$tag-export").toString)
   }
 
-  /** Drop every shared frame (unpersist + forget). For measurement
-    * harnesses that re-run the catalog under a different runtime config
-    * (Bench's AQE twin): without this, the second pass would read the
-    * first pass's cached blocks and measure cache hits instead of its own
-    * execution. */
+  /** Drop every shared build (unpersist each frame, forget every entry).
+    * For measurement harnesses that re-run the catalog under a different
+    * runtime config (Bench's AQE twin): without this, the second pass
+    * would read the first pass's cached blocks and driver values and
+    * measure cache hits instead of its own execution. */
   def clearSharedFrames(): Unit = {
-    frameCache.values.foreach(_.unpersist())
-    frameCache.clear()
-    mergesCache.clear()
-    pcaCache.clear()
-    sampleCache.clear()
-    eventRowsCache.clear()
+    registry.values.map(_.value).foreach {
+      case f: org.apache.spark.sql.Dataset[_] => f.unpersist()
+      case _ => ()
+    }
+    registry.clear()
   }
 
   /** x138/x139's shared DSIR weight frame — the per-doc importance scores
@@ -568,13 +583,11 @@ private[queries] object ExtShared {
   /** x90 (sample) and x91 (quota gate): ONE ranked cell assignment —
     * deterministic k-means cells (k pinned for the fixture; production uses
     * the adaptive k ≈ n/targetCell sizing) joined to quality scores and
-    * ranked per cell. The centroids cache separately (driver-side k×dim
-    * doubles, deterministic) so the x91 gate can re-derive cell populations
-    * INDEPENDENTLY of this frame's window path. */
-  private[queries] val centroidCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Array[Double]]]
+    * ranked per cell. The centroids are a shared build of their own
+    * (driver-side k×dim doubles, deterministic) so the x91 gate can
+    * re-derive cell populations INDEPENDENTLY of this frame's window path. */
   private[queries] def diverseCentroids(s: SparkSession, d: String): Array[Array[Double]] =
-    centroidCache.getOrElseUpdate((s, d),
+    shared(s, d, "diverse-centroids-k16")(
       Ivf.trainCentroidsFromSample(embSampleShared(s, d), k = 16, iters = 2))
   private[queries] def diverseRankedShared(s: SparkSession, d: String): DataFrame =
     sharedFrame(s, d, "diverse-k16-ranked") {
@@ -761,44 +774,32 @@ private[queries] object ExtShared {
     }
 
   /** x121 (merge table), x122 (fertility) and x126 (compression curve):
-    * ONE 4-iteration BPE training run. Driver-side value cache parallel
-    * to [[sharedFrame]] (merges + curve are tiny local Seqs, not frames),
-    * cleared by [[clearSharedFrames]] so the Bench AQE twin re-trains
-    * under its own config instead of timing a cache hit. */
-  private[queries] val mergesCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (Seq[String], Seq[Long])]
+    * ONE 4-iteration BPE training run, kept as a driver value (merges +
+    * curve are tiny local Seqs, not frames). */
   private[queries] def bpeTrainedShared(s: SparkSession, d: String,
                                nMerges: Int = 4): (Seq[String], Seq[Long]) =
-    mergesCache.getOrElseUpdate((s, d, nMerges),
-      timedBuild(d, s"bpe-train-n$nMerges")(
-        graft.ext.Bpe.trainWithCurve(Tables.documents(s, d), "text", nMerges)))
+    shared(s, d, s"bpe-train-n$nMerges")(
+      graft.ext.Bpe.trainWithCurve(Tables.documents(s, d), "text", nMerges))
   private[queries] def bpeMergesShared(s: SparkSession, d: String): Seq[String] =
     bpeTrainedShared(s, d)._1
 
   /** The ONE seeded driver sample every sample-based training consumes
     * (PCA k16 AND k32, the PQ m16 codebooks, the diverse-subsample
     * centroids): [[graft.ext.Ivf.collectSample]] is a corpus scan, and
-    * before this cache each model training re-ran it — five identical
-    * scans per catalog pass. Driver-value cache (the [[bpeMergesShared]]
-    * pattern), its one-time cost attributed as its own `frame:` tag. */
-  private[queries] val sampleCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), Array[Array[Double]]]
+    * unshared, each model training would re-run it — five identical scans
+    * per catalog pass. A shared driver value, its one-time cost attributed
+    * as its own `frame:` tag. */
   private[queries] def embSampleShared(s: SparkSession, d: String,
       cap: Int = graft.ext.Ivf.defaultSampleCap): Array[Array[Double]] =
-    sampleCache.getOrElseUpdate((s, d, cap),
-      timedBuild(d, s"emb-sample-n$cap")(
-        graft.ext.Ivf.collectSample(Tables.embeddings(s, d), cap)))
+    shared(s, d, s"emb-sample-n$cap")(
+      graft.ext.Ivf.collectSample(Tables.embeddings(s, d), cap))
 
   /** x123 (projection) and x123b (variance gate): ONE PCA training run
-    * (driver-value cache, the [[bpeMergesShared]] pattern) and ONE
-    * projected frame. */
-  private[queries] val pcaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), graft.ext.Pca.PcaModel]
+    * (a shared driver value) and ONE projected frame. */
   private[queries] def pcaModelShared(s: SparkSession, d: String,
                              k: Int = 16): graft.ext.Pca.PcaModel =
-    pcaCache.getOrElseUpdate((s, d, k),
-      timedBuild(d, s"pca-model-k$k")(
-        graft.ext.Pca.trainFromSample(embSampleShared(s, d), nComponents = k)))
+    shared(s, d, s"pca-model-k$k")(
+      graft.ext.Pca.trainFromSample(embSampleShared(s, d), nComponents = k))
   private[queries] def pcaProjShared(s: SparkSession, d: String): DataFrame =
     sharedFrame(s, d, "pca-proj-k16")(
       graft.ext.Pca.project(Tables.embeddings(s, d), pcaModelShared(s, d))
@@ -863,21 +864,18 @@ private[queries] object ExtShared {
   /** The event stream as driver-side rows in (ms, event_id) order — the
     * ts-ordered delivery both streaming monitors contract on. Bounded by
     * the fixture event table (100 k rows at sf0.1); the gates replay it
-    * through a real MemoryStream in uneven chops. Cached as a driver
-    * value (the mergesCache discipline): FOUR gates (x161b/x161c/x163b/
-    * x163c) replay the same fixture, and re-collecting it per gate was
-    * pure repeated scan cost; the one-time collect attributes to the
-    * `event-rows` tag like any shared build. */
-  private[queries] val eventRowsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, String, Long, Long)]]
+    * through a real MemoryStream in uneven chops. A shared driver value:
+    * FOUR gates (x161b/x161c/x163b/x163c) replay the same fixture, and
+    * re-collecting it per gate was pure repeated scan cost; the one-time
+    * collect attributes to the `event-rows` tag like any shared build. */
   private[queries] def orderedEventRows(s: SparkSession, d: String): Seq[(Long, String, Long, Long)] =
-    eventRowsCache.getOrElseUpdate((s, d), timedBuild(d, "event-rows") {
+    shared(s, d, "event-rows") {
       Tables.events(s, d)
         .select(col("user_id"), col("event_type"), col("ms"), col("event_id"))
         .collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
         .sortBy(r => (r._3, r._4)).toSeq
-    })
+    }
 
   /** The x161b/x163b replay harness, defined ONCE: feed the chopped event
     * rows through `monitor` via a real MemoryStream query, collecting

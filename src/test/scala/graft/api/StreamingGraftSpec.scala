@@ -172,22 +172,18 @@ class StreamingGraftSpec extends SparkSpec {
     } finally g.stop()
   }
 
-  test("a timed-out analysis returns the ERROR row AND its Spark jobs are cancelled") {
+  test("a timed-out analysis returns the single ERROR row at its timeout and later ticks skip") {
     import org.apache.spark.sql.Dataset
     import graft.model.CriticalPathResult
-    // a plan whose job runs ~100 s if left alone: 8 tasks x 15 s sleep —
-    // if cancellation works, the executors free within a few seconds of
-    // the 1 s timeout instead of holding 8 cores for the full duration
-    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // an analysis that blocks far past the 1 s timeout and, like
+    // analyzeNow(), launches no Spark job
+    val release = new java.util.concurrent.CountDownLatch(1)
     val g = new StreamingGraft(spark, Map(
       "streamingLens.maxAnalysisTimeSeconds" -> "1",
       "streamingLens.shouldLogResults" -> "false")) {
       override protected def runGuardedAnalysis(): Dataset[CriticalPathResult] = {
         import spark.implicits._
-        spark.range(0, 8, 1, 8).mapPartitions { it =>
-          Thread.sleep(15000); it
-        }.count()
-        slowDone.set(true)
+        release.await(60, java.util.concurrent.TimeUnit.SECONDS)
         spark.createDataset(Seq.empty[CriticalPathResult])
       }
     }
@@ -199,19 +195,46 @@ class StreamingGraftSpec extends SparkSpec {
         s"expected the single ERROR row, got ${out.toSeq}")
       // generous bound: the guard returns ~1s after its timeout, but a
       // loaded machine can delay the Await wake-up — what matters is that
-      // it returns in a small fraction of the 100s the plan would run
-      assert(guardedSecs < 30, s"guard blocked ${guardedSecs}s past its 1s timeout")
-      // the abandoned job must actually die: poll the status tracker until
-      // no active jobs remain — well before the 15 s a surviving task
-      // would need (interruptOnCancel breaks the sleep immediately)
-      val tracker = spark.sparkContext.statusTracker
-      var waitedMs = 0
-      while (tracker.getActiveJobIds().nonEmpty && waitedMs < 12000) {
-        Thread.sleep(200); waitedMs += 200
+      // it returns long before the 60 s the analysis would block
+      assert(guardedSecs >= 1.0 && guardedSecs < 30,
+        s"guard returned after ${guardedSecs}s for a 1s timeout")
+      // the abandoned analysis still holds the busy flag: the next tick
+      // skips instead of stacking a second analysis
+      assert(g.analyzeGuarded().collect().isEmpty)
+    } finally {
+      release.countDown()
+      g.stop()
+    }
+  }
+
+  test("maxRetries consecutive failures detach the instance; a success resets the count") {
+    import org.apache.spark.sql.Dataset
+    import graft.model.CriticalPathResult
+    val fail = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val others = SparkTestHooks.sources("StreamingGraft").toSet
+    val g = new StreamingGraft(spark, Map(
+      "streamingLens.maxRetries" -> "2",
+      "streamingLens.shouldLogResults" -> "false")) {
+      override protected def runGuardedAnalysis(): Dataset[CriticalPathResult] = {
+        import spark.implicits._
+        if (fail.get) throw new IllegalStateException("injected analysis failure")
+        spark.createDataset(Seq.empty[CriticalPathResult])
       }
-      assert(tracker.getActiveJobIds().isEmpty,
-        s"analysis jobs still running ${waitedMs}ms after cancellation")
-      assert(!slowDone.get, "slow analysis ran to completion despite cancellation")
+    }
+    // stop() unregisters the instance's metrics source
+    def attached = SparkTestHooks.sources("StreamingGraft").exists(src => !others.contains(src))
+    def states = g.analyzeGuarded().collect().map(_.streamingQueryState).toSeq
+    try {
+      assert(attached)
+      assert(states === Seq("ERROR"))
+      assert(attached, "one failure detached the instance")
+      fail.set(false)
+      assert(states === Seq.empty)
+      fail.set(true)
+      assert(states === Seq("ERROR"))
+      assert(attached, "a success did not reset the failure count")
+      assert(states === Seq("ERROR"))
+      assert(!attached, "two consecutive failures left the instance attached")
     } finally g.stop()
   }
 

@@ -20,6 +20,10 @@ object SparkTestHooks {
     SparkEnv.get.metricsSystem.getSourcesByName(source).last
       .metricRegistry.getGauges.get(gauge).getValue
 
+  /** Every metrics source registered under the name `source`. */
+  def sources(source: String): Seq[AnyRef] =
+    SparkEnv.get.metricsSystem.getSourcesByName(source).toSeq
+
   /** A task-end event as the scheduler posts it, for a task of stage
     * `stageId` that ran on `executorId` from `launch` to `finish`. */
   def taskEnd(stageId: Int, taskId: Long, executorId: String, launch: Long, finish: Long,

@@ -101,8 +101,8 @@ object Bench {
     // the r18/r19 driver runs. Scratch dirs are per-query-tag and the
     // shared-build registry is a concurrent TrieMap timed with a
     // per-thread build stack, so concurrent warm-up queries don't collide;
-    // a duplicate build lost to a TrieMap race is wasted-but-harmless
-    // sf0.001 work.
+    // two queries forcing one shared build wait on its per-key lock, so
+    // it is built once.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       sfDir.replaceAll("/+$", "").replaceAll("sf[0-9.]+$", "sf0.001"))
     val warmOk = warmDir != sfDir && new java.io.File(warmDir).isDirectory

@@ -117,15 +117,6 @@ object Dedup {
           .as("n_over_cap"))
   }
 
-  /** Shared-shingle intersection counts per doc pair, via postings lists:
-    * group the exploded shingles by shingle, emit every ordered id pair
-    * inside each posting, count per pair. The per-doc shingle-set size
-    * rides INSIDE the postings structs, so the pair rows come out with
-    * (`ia < ib`, `na`, `nb`, `inter`) and Jaccard needs no further joins
-    * (each join back to a sizes table would re-evaluate the whole shingle
-    * subtree — measured ~2 s per join at sf0.1). One evaluation, two
-    * key-partitioned shuffles. Quadratic only in per-shingle document
-    * frequency, which an opt-in `maxDf` ([[recommendedScaleMaxDf]]) caps. */
   /** Hash-partition on `keys` with an EXPLICIT partition count (the
     * session's shuffle parallelism) — the SOAK-measured AQE lever for the
     * hashed-shingle mining family, baked into the plan: AQE never
@@ -141,6 +132,15 @@ object Dedup {
     df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
 
+  /** Shared-shingle intersection counts per doc pair, via postings lists:
+    * group the exploded shingles by shingle, emit every ordered id pair
+    * inside each posting, count per pair. The per-doc shingle-set size
+    * rides INSIDE the postings structs, so the pair rows come out with
+    * (`ia < ib`, `na`, `nb`, `inter`) and Jaccard needs no further joins
+    * (each join back to a sizes table would re-evaluate the whole shingle
+    * subtree — measured ~2 s per join at sf0.1). One evaluation, two
+    * key-partitioned shuffles. Quadratic only in per-shingle document
+    * frequency, which an opt-in `maxDf` ([[recommendedScaleMaxDf]]) caps. */
   private def pairIntersections(sh: DataFrame, maxDf: Int): DataFrame = {
     val ex = sh
       .select(col("doc_id"), col("n_sh"), explode_outer(col("shs")).as("g"))
@@ -261,6 +261,26 @@ object Dedup {
       .select(col("ia"), col("ib"), round(col("cont"), 4).as("cont"))
   }
 
+  /** Rarest-first per-document prefix of the exploded shingle postings:
+    * keeps each doc's first `|A| − ⌈t·|A|⌉ + 1` shingles under the global
+    * (df asc, hash asc) total order. α = ⌈t·|A|⌉ is computed with a
+    * downward nudge: if t·|A| lands on an integer, fp error must not round
+    * the ceiling UP (a too-short prefix loses pairs; a one-longer prefix
+    * only adds candidates). */
+  private def prefixPostings(sh: DataFrame, threshold: Double): DataFrame = {
+    val ex = sh
+      .select(col("doc_id"), col("n_sh"), explode_outer(col("shs")).as("g"))
+      .filter(col("g").isNotNull)
+    val dfTab = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
+    val alpha = ceil(col("n_sh") * threshold - 1e-9)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("doc_id")).orderBy(col("df").asc, col("g").asc)
+    ex.join(dfTab, "g")
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= (col("n_sh") - alpha + 1))
+      .select(col("doc_id"), col("n_sh"), col("g"))
+  }
+
   /** Exact n-gram Jaccard near-dup pairs with AllPairs/PPJoin-style PREFIX
     * FILTERING — the scale path that stays exact. Same output contract as
     * [[ngramJaccardPairs]] (`ia < ib`, `jacc` 4dp), but only each document's
@@ -285,26 +305,6 @@ object Dedup {
     * shingle), two verify joins (shuffles on id) — every stage linear in
     * the postings volume, never quadratic in df. The shingle subtree is
     * re-evaluated by the verify joins (map-side CPU, no extra shuffle). */
-  /** Rarest-first per-document prefix of the exploded shingle postings:
-    * keeps each doc's first `|A| − ⌈t·|A|⌉ + 1` shingles under the global
-    * (df asc, hash asc) total order. α = ⌈t·|A|⌉ is computed with a
-    * downward nudge: if t·|A| lands on an integer, fp error must not round
-    * the ceiling UP (a too-short prefix loses pairs; a one-longer prefix
-    * only adds candidates). */
-  private def prefixPostings(sh: DataFrame, threshold: Double): DataFrame = {
-    val ex = sh
-      .select(col("doc_id"), col("n_sh"), explode_outer(col("shs")).as("g"))
-      .filter(col("g").isNotNull)
-    val dfTab = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val alpha = ceil(col("n_sh") * threshold - 1e-9)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df").asc, col("g").asc)
-    ex.join(dfTab, "g")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= (col("n_sh") - alpha + 1))
-      .select(col("doc_id"), col("n_sh"), col("g"))
-  }
-
   def ngramJaccardPairsPrefix(docs: DataFrame, textCol: String, idCol: String,
                               n: Int, threshold: Double): DataFrame =
     ngramJaccardPairsPrefixOf(hashedShingles(docs, textCol, idCol, n), threshold)
@@ -599,32 +599,12 @@ object Dedup {
     }
   }
 
-  /** Flag documents that are n-gram-Jaccard near-dups of a STATIC reference
-    * corpus — [[ngramJaccardPairs]] with one side pinned, which is what
-    * makes it STREAMING-ready (the [[bloomFlagger]] build/apply split): the
-    * reference's shingle postings and doc sizes are computed ONCE and
-    * persisted; the returned function flags ANY frame — a batch corpus or
-    * each `foreachBatch` micro-batch — by a map-side shingle hash and an
-    * 8-byte-key equi-join against the postings. Never batch × reference.
-    * Per-pair intersection counts are confined to one micro-batch row, so
-    * streaming output ≡ batch output on the same rows (StreamingSpec).
-    *
-    * `maxDf` caps the REFERENCE-side document frequency — the side that
-    * exists before the stream starts; a boilerplate shingle would otherwise
-    * pair every arriving doc with half the reference. Output: (`doc_id`,
-    * `ref_id`, `jacc` ≥ threshold, 4dp — the [[ngramJaccardPairs]]
-    * contract with the pair oriented stream-side first). */
-  /** The capped reference postings (`g`, `ref_id`, `nb`) behind
-    * [[nearDupFlagger]] — shared by the in-memory build and the persisted
-    * [[saveNearDupIndex]]/[[loadNearDupFlagger]] lifecycle. */
-  private def nearDupPostings(reference: DataFrame, textCol: String,
-                              idCol: String, n: Int, maxDf: Int): DataFrame =
-    nearDupPostingsOf(hashedShingles(reference, textCol, idCol, n), maxDf)
-
-  /** [[nearDupPostings]] over a PREBUILT [[hashedShingles]] frame — the
-    * flagger-build twin of [[containmentPairsOf]]: a pipeline that already
-    * carries the corpus shingle frame (the shared-upstream discipline)
-    * freezes its reference postings from it without re-tokenizing. */
+  /** The capped reference postings (`g`, `ref_id`, `nb`) frozen from a
+    * PREBUILT [[hashedShingles]] frame — the ONE index table behind
+    * [[nearDupFlagger]], [[containmentFlaggerOf]] and [[saveNearDupIndex]]:
+    * a pipeline that already carries the corpus shingle frame (the
+    * shared-upstream discipline) freezes its reference postings from it
+    * without re-tokenizing. */
   private def nearDupPostingsOf(sh: DataFrame, maxDf: Int): DataFrame = {
     val postings = sh
       .select(col("doc_id").as("ref_id"), col("n_sh").as("nb"),
@@ -643,17 +623,13 @@ object Dedup {
     }
   }
 
-  /** The probe side of the flagger lifecycle: flag `docs` against a
-    * (persisted) capped postings frame. */
   /** The ONE probe pipeline every shingle flagger runs (batch doc explode →
     * frozen-postings join → per-(doc, ref) intersection count), scored by
     * the caller's metric — so a fix to the probe path reaches the Jaccard
     * and containment twins alike. */
   private def scoredAgainst(capped: DataFrame, textCol: String, idCol: String,
                             n: Int, threshold: Double, scoreName: String)(
-      score: (org.apache.spark.sql.Column, org.apache.spark.sql.Column,
-              org.apache.spark.sql.Column) => org.apache.spark.sql.Column)(
-      docs: DataFrame): DataFrame = {
+      score: (Column, Column, Column) => Column)(docs: DataFrame): DataFrame = {
     // Probe batches arrive as MemoryStream/local frames, where
     // Par.fanOutScan deliberately declines (no file stats to size by) —
     // so the batch tokenize+shingle ran 1-wide (r21, measured ~1 s per
@@ -677,18 +653,35 @@ object Dedup {
         round(col(scoreName), 4).as(scoreName))
   }
 
+  /** The probe side of the flagger lifecycle: flag `docs` against a
+    * (persisted) capped postings frame. */
   private def flagAgainst(capped: DataFrame, textCol: String, idCol: String,
                           n: Int, threshold: Double)(docs: DataFrame): DataFrame =
     scoredAgainst(capped, textCol, idCol, n, threshold, "jacc")(
       (inter, na, nb) => inter.cast("double") / (na + nb - inter))(docs)
 
+  /** Flag documents that are n-gram-Jaccard near-dups of a STATIC reference
+    * corpus — [[ngramJaccardPairs]] with one side pinned, which is what
+    * makes it STREAMING-ready (the [[bloomFlagger]] build/apply split): the
+    * reference's shingle postings and doc sizes are computed ONCE and
+    * persisted; the returned function flags ANY frame — a batch corpus or
+    * each `foreachBatch` micro-batch — by a map-side shingle hash and an
+    * 8-byte-key equi-join against the postings. Never batch × reference.
+    * Per-pair intersection counts are confined to one micro-batch row, so
+    * streaming output ≡ batch output on the same rows (StreamingSpec).
+    *
+    * `maxDf` caps the REFERENCE-side document frequency — the side that
+    * exists before the stream starts; a boilerplate shingle would otherwise
+    * pair every arriving doc with half the reference. Output: (`doc_id`,
+    * `ref_id`, `jacc` ≥ threshold, 4dp — the [[ngramJaccardPairs]]
+    * contract with the pair oriented stream-side first). */
   def nearDupFlagger(reference: DataFrame, textCol: String, idCol: String,
                      n: Int, threshold: Double,
-                     maxDf: Int = Int.MaxValue): Retriever = {
-    val capped = nearDupPostings(reference, textCol, idCol, n, maxDf).persist()
-    new Retriever(flagAgainst(capped, textCol, idCol, n, threshold),
-      () => capped.unpersist())
-  }
+                     maxDf: Int = Int.MaxValue): Retriever =
+    Retriever.freeze(
+        nearDupPostingsOf(hashedShingles(reference, textCol, idCol, n), maxDf)) {
+      case Seq(capped) => flagAgainst(capped, textCol, idCol, n, threshold)
+    }
 
   /** [[flagAgainst]] with the CONTAINMENT score — same probe pipeline, the
     * smaller side's containment instead of Jaccard. */
@@ -711,11 +704,9 @@ object Dedup {
     * membership (DedupSpec). Output: (`doc_id`, `ref_id`, `cont`). */
   def containmentFlagger(reference: DataFrame, textCol: String, idCol: String,
                          n: Int, threshold: Double,
-                         maxDf: Int = Int.MaxValue): Retriever = {
-    val capped = nearDupPostings(reference, textCol, idCol, n, maxDf).persist()
-    new Retriever(containAgainst(capped, textCol, idCol, n, threshold),
-      () => capped.unpersist())
-  }
+                         maxDf: Int = Int.MaxValue): Retriever =
+    containmentFlaggerOf(hashedShingles(reference, textCol, idCol, n),
+      textCol, idCol, n, threshold, maxDf)
 
   /** [[containmentFlagger]] with the reference postings frozen from a
     * PREBUILT [[hashedShingles]] frame (filter the shared corpus shingle
@@ -725,12 +716,10 @@ object Dedup {
     * names the probe-side shingling). */
   def containmentFlaggerOf(sh: DataFrame, textCol: String, idCol: String,
                            n: Int, threshold: Double,
-                           maxDf: Int = Int.MaxValue): Retriever = {
-    val capped = nearDupPostingsOf(sh, maxDf).persist()
-    capped.count()
-    new Retriever(containAgainst(capped, textCol, idCol, n, threshold),
-      () => capped.unpersist())
-  }
+                           maxDf: Int = Int.MaxValue): Retriever =
+    Retriever.freeze(nearDupPostingsOf(sh, maxDf)) {
+      case Seq(capped) => containAgainst(capped, textCol, idCol, n, threshold)
+    }
 
   /** Reload a [[saveNearDupIndex]] directory as a CONTAINMENT flagger —
     * the postings index is score-agnostic, so the same saved build serves
@@ -740,39 +729,25 @@ object Dedup {
   def loadContainmentFlagger(spark: org.apache.spark.sql.SparkSession,
                              dir: String, threshold: Double,
                              textCol: String = "text",
-                             idCol: String = "doc_id"): Retriever = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val n = m.getAs[Int]("n")
-    val capped = spark.read.parquet(s"$dir/postings").persist()
-    capped.count()
-    new Retriever(containAgainst(capped, textCol, idCol, n, threshold),
-      () => capped.unpersist())
-  }
+                             idCol: String = "doc_id"): Retriever =
+    Retriever.load(spark, dir, "postings") { case (m, Seq(capped)) =>
+      containAgainst(capped, textCol, idCol, m.getAs[Int]("n"), threshold)
+    }
 
   /** Persist a [[nearDupFlagger]] reference index so the build survives the
     * session — the [[Ivf.saveIndex]] shape for shingle dedup: build the
     * capped postings ONCE on the cluster that owns the reference corpus,
     * then any later job (nightly incremental dedup, a different cluster)
     * [[loadNearDupFlagger]]s and probes without re-shingling 100 TB.
-    * Layout: `dir/postings` — the (g, ref_id, nb) table, 24 B/posting; and
-    * `dir/meta` — one row (n, threshold, max_df) so a loaded flagger
-    * reproduces the build's semantics without the caller re-supplying
-    * them. Hadoop-FS URIs throughout (the Export lesson). An empty
-    * reference writes an empty, schema-complete postings table and
-    * round-trips (no partitionBy → no missing-directory trap). */
+    * Layout ([[Retriever]] companion): `dir/postings` — the (g, ref_id, nb)
+    * table, 24 B/posting; and `dir/meta` — one row (n, threshold, max_df). */
   def saveNearDupIndex(reference: DataFrame, dir: String,
                        textCol: String = "text", idCol: String = "doc_id",
                        n: Int = 3, threshold: Double = 0.8,
-                       maxDf: Int = Int.MaxValue): Unit = {
-    val spark = reference.sparkSession
-    import spark.implicits._
-    nearDupPostings(reference, textCol, idCol, n, maxDf)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/postings")
-    Seq((n, threshold, maxDf)).toDF("n", "threshold", "max_df")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/meta")
-  }
+                       maxDf: Int = Int.MaxValue): Unit =
+    Retriever.save(dir, "postings" ->
+        nearDupPostingsOf(hashedShingles(reference, textCol, idCol, n), maxDf))(
+      lit(n).as("n"), lit(threshold).as("threshold"), lit(maxDf).as("max_df"))
 
   /** Reload a [[saveNearDupIndex]] directory as a ready [[Retriever]]:
     * postings persist in memory for probe-many reuse (materialized now,
@@ -781,15 +756,11 @@ object Dedup {
     * in-memory flagger). `textCol`/`idCol` describe the PROBE frames. */
   def loadNearDupFlagger(spark: org.apache.spark.sql.SparkSession, dir: String,
                          textCol: String = "text",
-                         idCol: String = "doc_id"): Retriever = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val n = m.getAs[Int]("n")
-    val threshold = m.getAs[Double]("threshold")
-    val capped = spark.read.parquet(s"$dir/postings").persist()
-    capped.count()
-    new Retriever(flagAgainst(capped, textCol, idCol, n, threshold),
-      () => capped.unpersist())
-  }
+                         idCol: String = "doc_id"): Retriever =
+    Retriever.load(spark, dir, "postings") { case (m, Seq(capped)) =>
+      flagAgainst(capped, textCol, idCol, m.getAs[Int]("n"),
+        m.getAs[Double]("threshold"))
+    }
 
   /** Refuse null group keys up front (the Export shard-null discipline):
     * the grouped band join is an INNER using-column join, so a row whose
@@ -1071,20 +1042,6 @@ object Dedup {
       .select(col("doc_id"),
         org.apache.spark.sql.graft.VectorFunctions.simHashF(col("toks")).as("simhash"))
 
-  /** SimHash near-dup PAIRS: all (ia < ib) whose 64-bit [[simHash]]
-    * signatures sit within Hamming distance `hMax` — the constant-space
-    * sketch dedup for when shingle postings are too big (one long per doc
-    * vs a posting per shingle). Blocking is the classic 4×16-bit band
-    * split, and for `hMax` ≤ 3 it is COMPLETE by pigeonhole: ≤ 3 flipped
-    * bits touch ≤ 3 of the 4 bands, so every qualifying pair shares at
-    * least one intact band — [[simHashBandCompletenessGate]] (x111b)
-    * asserts the banded set equals brute force on the fixture. Band keys
-    * pack to one BIGINT (k·2¹⁶ + bits): the candidate join shuffles
-    * 8-byte keys, per-bucket blowup is postings-bounded with the
-    * `graft_simhash_bucket_cap` drop audit (the x12 cap pattern), and
-    * verification is one `bit_count(xor)` per candidate. Signature bits
-    * are engine-specific (XXH64) → the catalog row is rows-only, pinned
-    * by x111b + DedupSpec. */
   /** Blank-filtered (doc_id, simhash) signature frame — the shared input
     * of the x111 pair miner, [[simHashFlagger]], and the x111b gate. */
   private def simHashSigs(docs: DataFrame, textCol: String,
@@ -1092,22 +1049,34 @@ object Dedup {
     simHash(docs.filter(length(trim(col(textCol))) > 0), textCol, idCol)
       .select(col("doc_id").cast("long").as("doc_id"), col("simhash"))
 
-  /** The 4×16-bit packed band explosion of a signature frame — the
-    * completeness-critical invariant (k·2¹⁶ + the k-th slice; `&` masks
-    * away the arithmetic shift's sign extension on the top band), defined
-    * ONCE for the miner, the flagger, and the gate. The signature rides
-    * along so verification never needs a join back. */
-  private def simHashBandsOf(sigs: DataFrame): DataFrame = sigs
+  /** The 4×16-bit packed band explosion of ANY 64-bit signature frame
+    * (`<idCol>`, `<sigCol>`) — the completeness-critical invariant (k·2¹⁶ +
+    * the k-th slice; `&` masks away the arithmetic shift's sign extension
+    * on the top band), defined ONCE for the miner, the flagger, and the
+    * gate. The signature rides along as `simhash` so verification never
+    * needs a join back. Null signatures (undecodable media) band to null
+    * keys, which drop here: kept, they would all land in the same null-key
+    * buckets — corpus-scale collect_sets that can never verify
+    * (ham = NULL). The null filter sits on the generator OUTPUT: on the
+    * signature column it would be pushed below the projection, into the
+    * scan, and compute every signature twice. */
+  private def sigBandsOf(sigs: DataFrame, sigCol: String,
+                         idCol: String): DataFrame = sigs
+    .select(col(idCol).cast("long").as("doc_id"),
+      col(sigCol).cast("long").as("simhash"))
     .select(col("doc_id"), col("simhash"),
       explode(expr(
         """transform(sequence(0, 3),
                      k -> k * 65536L + (shiftright(simhash, 16 * k) & 65535L))"""))
         .as("band"))
+    .filter(col("band").isNotNull)
 
-  /** [[simHashNearDupPairs]] over a prebuilt signature frame. */
-  private def simHashNearDupPairsOf(sigs: DataFrame, hMax: Int,
-                                    maxBucket: Int): DataFrame =
-    simHashBandsOf(sigs)
+  /** The banded-Hamming pair miner over a [[sigBandsOf]] frame, without
+    * the `hMax` bound (the x111b gate measures completeness, so it must
+    * be able to run outside it). */
+  private def bandedPairs(bands: DataFrame, hMax: Int,
+                          maxBucket: Int): DataFrame =
+    bands
       .groupBy(col("band"))
       // signatures ride the bucket rows (16 B/doc instead of 8), which
       // buys verification WITHOUT joining back to the corpus: the whole
@@ -1127,14 +1096,30 @@ object Dedup {
       .filter(col("ham") <= hMax)
       .dropDuplicates("ia", "ib")
 
+  private def requireBandable(hMax: Int): Unit =
+    require(hMax >= 0 && hMax <= 3,
+      s"4-band blocking is complete only for hMax <= 3, got $hMax")
+
+  /** SimHash near-dup PAIRS: all (ia < ib) whose 64-bit [[simHash]]
+    * signatures sit within Hamming distance `hMax` — the constant-space
+    * sketch dedup for when shingle postings are too big (one long per doc
+    * vs a posting per shingle). Blocking is the classic 4×16-bit band
+    * split, and for `hMax` ≤ 3 it is COMPLETE by pigeonhole: ≤ 3 flipped
+    * bits touch ≤ 3 of the 4 bands, so every qualifying pair shares at
+    * least one intact band — [[simHashBandCompletenessGate]] (x111b)
+    * asserts the banded set equals brute force on the fixture. Band keys
+    * pack to one BIGINT (k·2¹⁶ + bits): the candidate join shuffles
+    * 8-byte keys, per-bucket blowup is postings-bounded with the
+    * `graft_simhash_bucket_cap` drop audit (the x12 cap pattern), and
+    * verification is one `bit_count(xor)` per candidate. Signature bits
+    * are engine-specific (XXH64) → the catalog row is rows-only, pinned
+    * by x111b + DedupSpec. */
   def simHashNearDupPairs(docs: DataFrame, hMax: Int = 3,
                           maxBucket: Int = 10000,
                           textCol: String = "text",
-                          idCol: String = "doc_id"): DataFrame = {
-    require(hMax >= 0 && hMax <= 3,
-      s"4-band blocking is complete only for hMax <= 3, got $hMax")
-    simHashNearDupPairsOf(simHashSigs(docs, textCol, idCol), hMax, maxBucket)
-  }
+                          idCol: String = "doc_id"): DataFrame =
+    hammingNearDupPairsOf(simHashSigs(docs, textCol, idCol), "simhash",
+      hMax, maxBucket)
 
   /** The x111 banded-Hamming machinery over ANY 64-bit signature frame
     * `(<idCol>, <sigCol>)` — text SimHash and pixel dHash (x167) share one
@@ -1144,141 +1129,23 @@ object Dedup {
   def hammingNearDupPairsOf(sigs: DataFrame, sigCol: String,
                             hMax: Int = 3, maxBucket: Int = 10000,
                             idCol: String = "doc_id"): DataFrame = {
-    require(hMax >= 0 && hMax <= 3,
-      s"4-band blocking is complete only for hMax <= 3, got $hMax")
-    // drop null signatures (undecodable media) HERE, not per call site:
-    // un-filtered nulls would all band to the same null-key buckets —
-    // corpus-scale collect_sets that can never verify (ham = NULL)
-    simHashNearDupPairsOf(
-      sigs.filter(col(sigCol).isNotNull)
-        .select(col(idCol).cast("long").as("doc_id"),
-          col(sigCol).cast("long").as("simhash")),
-      hMax, maxBucket)
+    requireBandable(hMax)
+    bandedPairs(sigBandsOf(sigs, sigCol, idCol), hMax, maxBucket)
   }
 
-  /** Freeze the corpus's SimHash band table ONCE and return the per-batch
-    * near-dup flagger — x111 as a build/apply split (the [[nearDupFlagger]]
-    * lifecycle, at 1/10th the state: 4 packed band rows + one signature
-    * per corpus doc ≈ 48 B/doc, vs a posting per shingle). A batch doc
-    * pairs with every corpus doc OTHER THAN ITSELF within Hamming `hMax`
-    * of its signature (complete for hMax ≤ 3 by the 4-band pigeonhole), so
-    * corpus-self flagging reproduces exactly the x111 pair set (DedupSpec)
-    * and streaming ≡ batch (StreamingSpec). Output: (`doc_id`, `ref_id`,
-    * `ham`), batch-side first. `close()` releases the persisted band and
-    * signature tables when the corpus version retires. */
-  def simHashFlagger(corpus: DataFrame, hMax: Int = 3,
-                     textCol: String = "text",
-                     idCol: String = "doc_id"): Retriever = {
-    require(hMax >= 0 && hMax <= 3,
-      s"4-band blocking is complete only for hMax <= 3, got $hMax")
-    // ONE frozen table, built from ONE corpus pass: the band explosion
-    // with the reference signature riding along (~64 B/doc), so a probe
-    // is a single band equi-join with no signature join-back on either
-    // side.
-    val refBands = simHashBandsOf(simHashSigs(corpus, textCol, idCol))
-      .select(col("band"), col("doc_id").as("ref_id"),
-        col("simhash").as("sb"))
-      .persist()
-    // build-time job: materialize the frozen table now, not on first batch
-    refBands.count()
-    new Retriever(simHashProbe(refBands, hMax, textCol, idCol),
-      () => refBands.unpersist())
-  }
-
-  /** The probe side of the SimHash flagger lifecycle, defined ONCE for the
-    * in-memory [[simHashFlagger]] and the reloaded [[loadSimHashFlagger]]
-    * so the two cannot drift: one band equi-join against the frozen
-    * (band, ref_id, sb) table, `bit_count(xor)` verification, self-pairs
-    * excluded. */
-  private def simHashProbe(refBands: DataFrame, hMax: Int, textCol: String,
-                           idCol: String)(docs: DataFrame): DataFrame =
-    simHashBandsOf(simHashSigs(docs, textCol, idCol))
-      .join(refBands, "band")
-      .filter(col("doc_id") =!= col("ref_id"))
-      .select(col("doc_id"), col("ref_id"),
-        expr("bit_count(simhash ^ sb)").cast("long").as("ham"))
-      .filter(col("ham") <= hMax)
-      .dropDuplicates("doc_id", "ref_id")
-
-  /** Persist a [[simHashFlagger]] reference index so the ~48 B/doc frozen
-    * state survives the session — the [[saveNearDupIndex]] lifecycle for
-    * the sketch-dedup family (previously the ONE index family that could
-    * not survive a driver restart). Layout: `dir/bands` — the
-    * (band, ref_id, sb) table, 4 rows per corpus doc, 24 B each; and
-    * `dir/meta` — one row (`h_max`) so a loaded flagger reproduces the
-    * build's Hamming radius without the caller re-supplying it. Hadoop-FS
-    * URIs throughout. An empty corpus writes an empty, schema-complete
-    * bands table and round-trips (no partitionBy → no missing-directory
-    * trap). */
-  def saveSimHashIndex(corpus: DataFrame, dir: String, hMax: Int = 3,
-                       textCol: String = "text",
-                       idCol: String = "doc_id"): Unit = {
-    require(hMax >= 0 && hMax <= 3,
-      s"4-band blocking is complete only for hMax <= 3, got $hMax")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    simHashBandsOf(simHashSigs(corpus, textCol, idCol))
+  /** The frozen (band, ref_id, sb) index of the Hamming flagger family:
+    * the band explosion with the reference signature riding along
+    * (~64 B/doc), built from ONE corpus pass, so a probe is a single band
+    * equi-join with no signature join-back on either side. */
+  private def hammingIndex(refSigs: DataFrame, sigCol: String,
+                           idCol: String): DataFrame =
+    sigBandsOf(refSigs, sigCol, idCol)
       .select(col("band"), col("doc_id").as("ref_id"), col("simhash").as("sb"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/bands")
-    Seq(hMax).toDF("h_max")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/meta")
-  }
 
-  /** Reload a [[saveSimHashIndex]] directory as a ready [[Retriever]]: the
-    * band table persists in memory for probe-many reuse (materialized now,
-    * not on first batch), `hMax` comes from the saved meta, and the probe
-    * plan is [[simHashProbe]] — identical to the in-memory flagger's, so a
-    * reloaded index reproduces the x111 pair membership exactly (pinned in
-    * DedupSpec). `textCol`/`idCol` describe the PROBE frames. */
-  def loadSimHashFlagger(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         textCol: String = "text",
-                         idCol: String = "doc_id"): Retriever = {
-    val hMax = spark.read.parquet(s"$dir/meta").collect()(0).getAs[Int]("h_max")
-    val refBands = spark.read.parquet(s"$dir/bands").persist()
-    refBands.count()
-    new Retriever(simHashProbe(refBands, hMax, textCol, idCol),
-      () => refBands.unpersist())
-  }
-
-  /** [[simHashBandsOf]] for an ARBITRARY 64-bit signature frame
-    * (`<idCol>`, `<sigCol>`) — null signatures (undecodable media) drop
-    * out before banding. */
-  private def sigBandsOf(sigs: DataFrame, sigCol: String,
-                         idCol: String): DataFrame =
-    simHashBandsOf(sigs.filter(col(sigCol).isNotNull)
-      .select(col(idCol).cast("long").as("doc_id"),
-        col(sigCol).cast("long").as("simhash")))
-
-  /** [[simHashFlagger]] generalized to any 64-bit signature frame — the
-    * build/apply split for the pixel-dHash (x167) and audio-envelope
-    * (x173) families: freeze a reference corpus's band table once
-    * (~48 B/item), then flag each arriving batch of SIGNATURES against it
-    * (one band equi-join + `bit_count(xor)` verify, complete for
-    * hMax ≤ 3). The caller computes signatures with the matching operator
-    * ([[Multimodal.perceptualHashes]] / [[Multimodal.audioFingerprints]] /
-    * [[simHash]]) on both sides — the flagger is modality-agnostic.
-    * Probe contract: frames with (`<idCol>`, `<sigCol>`); output
-    * (`<idCol>`, `ref_id`, `ham`), self-pairs excluded. Corpus-self
-    * probing reproduces exactly the [[hammingNearDupPairsOf]] pair
-    * membership (MultimodalSpec). */
-  def hammingFlagger(refSigs: DataFrame, sigCol: String, hMax: Int = 3,
-                     idCol: String = "doc_id"): Retriever = {
-    require(hMax >= 0 && hMax <= 3,
-      s"4-band blocking is complete only for hMax <= 3, got $hMax")
-    val refBands = sigBandsOf(refSigs, sigCol, idCol)
-      .select(col("band"), col("doc_id").as("ref_id"),
-        col("simhash").as("sb"))
-      .persist()
-    refBands.count()
-    new Retriever(hammingProbe(refBands, hMax, sigCol, idCol),
-      () => refBands.unpersist())
-  }
-
-  /** The probe side of [[hammingFlagger]], shared with
-    * [[loadHammingFlagger]] so in-memory and reloaded probes cannot
-    * drift. */
+  /** The probe side of the Hamming flagger family, shared by every
+    * in-memory and reloaded flagger so the probes cannot drift: one band
+    * equi-join against the frozen index, `bit_count(xor)` verification,
+    * self-pairs excluded. */
   private def hammingProbe(refBands: DataFrame, hMax: Int, sigCol: String,
                            idCol: String)(sigs: DataFrame): DataFrame =
     sigBandsOf(sigs, sigCol, idCol)
@@ -1289,38 +1156,89 @@ object Dedup {
       .filter(col("ham") <= hMax)
       .dropDuplicates(idCol, "ref_id")
 
-  /** Persist a [[hammingFlagger]] reference index (the
-    * [[saveSimHashIndex]] layout: `dir/bands` + one-row `dir/meta` with
-    * the Hamming radius and signature column name). */
+  /** Freeze the corpus's SimHash band table ONCE and return the per-batch
+    * near-dup flagger — x111 as a build/apply split: [[hammingFlagger]]
+    * over the corpus's [[simHash]] signatures (sig column `simhash`), each
+    * arriving batch of DOCUMENTS signed the same way before its probe (at
+    * 1/10th the [[nearDupFlagger]] state: 4 packed band rows + one
+    * signature per corpus doc ≈ 48 B/doc, vs a posting per shingle). A
+    * batch doc pairs with every corpus doc OTHER THAN ITSELF within
+    * Hamming `hMax` of its signature (complete for hMax ≤ 3 by the 4-band
+    * pigeonhole), so corpus-self flagging reproduces exactly the x111 pair
+    * set (DedupSpec) and streaming ≡ batch (StreamingSpec). Output:
+    * (`doc_id`, `ref_id`, `ham`), batch-side first. `close()` releases the
+    * persisted band table when the corpus version retires. */
+  def simHashFlagger(corpus: DataFrame, hMax: Int = 3,
+                     textCol: String = "text",
+                     idCol: String = "doc_id"): Retriever =
+    hammingFlagger(simHashSigs(corpus, textCol, idCol), "simhash", hMax)
+      .probing(simHashSigs(_, textCol, idCol))
+
+  /** Persist a [[simHashFlagger]] reference index so the ~48 B/doc frozen
+    * state survives the session: [[saveHammingIndex]] over the corpus's
+    * SimHash signatures — `dir/bands`, the (band, ref_id, sb) table, 4 rows
+    * per corpus doc, 24 B each; and `dir/meta`, one row (`h_max`,
+    * `sig_col` = `simhash`). */
+  def saveSimHashIndex(corpus: DataFrame, dir: String, hMax: Int = 3,
+                       textCol: String = "text",
+                       idCol: String = "doc_id"): Unit =
+    saveHammingIndex(simHashSigs(corpus, textCol, idCol), "simhash", dir, hMax)
+
+  /** Reload a [[saveSimHashIndex]] directory as a ready [[Retriever]]:
+    * [[loadHammingFlagger]] with the probe batches signed by [[simHash]],
+    * so a reloaded index reproduces the x111 pair membership exactly
+    * (pinned in DedupSpec). A directory whose meta predates `sig_col`
+    * (only `h_max`) loads the same way. `textCol`/`idCol` describe the
+    * PROBE frames. */
+  def loadSimHashFlagger(spark: org.apache.spark.sql.SparkSession, dir: String,
+                         textCol: String = "text",
+                         idCol: String = "doc_id"): Retriever =
+    loadHammingFlagger(spark, dir).probing(simHashSigs(_, textCol, idCol))
+
+  /** The build/apply split of the banded-Hamming miner for any 64-bit
+    * signature — text SimHash, pixel dHash (x167), audio envelope (x173):
+    * freeze a reference corpus's band table once (~48 B/item), then flag
+    * each arriving batch of SIGNATURES against it (one band equi-join +
+    * `bit_count(xor)` verify, complete for hMax ≤ 3). The caller computes
+    * signatures with the matching operator
+    * ([[Multimodal.perceptualHashes]] / [[Multimodal.audioFingerprints]] /
+    * [[simHash]]) on both sides; [[simHashFlagger]] is this flagger over
+    * text SimHash. Probe contract: frames with (`<idCol>`, `<sigCol>`);
+    * output (`<idCol>`, `ref_id`, `ham`), self-pairs excluded. Corpus-self
+    * probing reproduces exactly the [[hammingNearDupPairsOf]] pair
+    * membership (MultimodalSpec). */
+  def hammingFlagger(refSigs: DataFrame, sigCol: String, hMax: Int = 3,
+                     idCol: String = "doc_id"): Retriever = {
+    requireBandable(hMax)
+    Retriever.freeze(hammingIndex(refSigs, sigCol, idCol)) {
+      case Seq(bands) => hammingProbe(bands, hMax, sigCol, idCol)
+    }
+  }
+
+  /** Persist a [[hammingFlagger]] reference index ([[Retriever]] companion
+    * layout): `dir/bands` — the (band, ref_id, sb) table; and `dir/meta` —
+    * one row (`h_max`, `sig_col`), the Hamming radius and the signature
+    * column name. */
   def saveHammingIndex(refSigs: DataFrame, sigCol: String, dir: String,
                        hMax: Int = 3, idCol: String = "doc_id"): Unit = {
-    require(hMax >= 0 && hMax <= 3,
-      s"4-band blocking is complete only for hMax <= 3, got $hMax")
-    val spark = refSigs.sparkSession
-    import spark.implicits._
-    sigBandsOf(refSigs, sigCol, idCol)
-      .select(col("band"), col("doc_id").as("ref_id"), col("simhash").as("sb"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/bands")
-    Seq((hMax, sigCol)).toDF("h_max", "sig_col")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/meta")
+    requireBandable(hMax)
+    Retriever.save(dir, "bands" -> hammingIndex(refSigs, sigCol, idCol))(
+      lit(hMax).as("h_max"), lit(sigCol).as("sig_col"))
   }
 
   /** Reload a [[saveHammingIndex]] directory as a ready [[Retriever]]
     * (probe plan identical to the in-memory flagger's — reload parity in
     * MultimodalSpec). `idCol` describes the PROBE frames; the signature
-    * column name comes from the saved meta. */
+    * column name comes from the saved meta — `simhash` when the meta has
+    * none (a SimHash index saved before the meta carried it). */
   def loadHammingFlagger(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, idCol: String = "doc_id"): Retriever = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val refBands = spark.read.parquet(s"$dir/bands").persist()
-    refBands.count()
-    new Retriever(
-      hammingProbe(refBands, m.getAs[Int]("h_max"),
-        m.getAs[String]("sig_col"), idCol),
-      () => refBands.unpersist())
-  }
+                         dir: String, idCol: String = "doc_id"): Retriever =
+    Retriever.load(spark, dir, "bands") { case (m, Seq(bands)) =>
+      val sigCol =
+        if (m.schema.fieldNames.contains("sig_col")) m.getAs[String]("sig_col")
+        else "simhash"
+      hammingProbe(bands, m.getAs[Int]("h_max"), sigCol, idCol)
+    }
 
   /** Exact-substring duplication stats — the Lee et al. 2022
     * ("Deduplicating Training Data Makes Language Models Better") rule,
@@ -1444,10 +1362,20 @@ object Dedup {
     val scrubWins = wins.join(canon, "h")
       .filter(col("occ") >= minOcc &&
         !(col("doc_id") === col("keep.doc_id") && col("pos") === col("keep.pos")))
-    val covered = scrubWins
-      .select(col("doc_id"),
-        explode(sequence(col("pos"), col("pos") + lit(w.toLong) - 1L)).as("p"))
-      .distinct()
+    scrubCovered(docs, coveredPositions(scrubWins, w), textCol, idCol)
+  }
+
+  /** The distinct (doc_id, p) token positions a window table covers. */
+  private def coveredPositions(wins: DataFrame, w: Int): DataFrame = wins
+    .select(col("doc_id"),
+      explode(sequence(col("pos"), col("pos") + lit(w.toLong) - 1L)).as("p"))
+    .distinct()
+
+  /** Drop the `covered` token positions of `docs` and rejoin the survivors
+    * in order (x97's ordered rebuild aggregate) — the tail shared by
+    * [[substringScrub]] and [[substringScrubber]]; total over `docs`. */
+  private def scrubCovered(docs: DataFrame, covered: DataFrame,
+                           textCol: String, idCol: String): DataFrame = {
     val toks = docs.filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).cast("long").as("doc_id"),
         posexplode(graft.ext.TextAnalysis.tokens(col(textCol))).as(Seq("p", "tok")))
@@ -1480,40 +1408,24 @@ object Dedup {
     * `n_scrubbed`, `scrub_text`); `close()` releases the frozen set. */
   def substringScrubber(corpus: DataFrame, textCol: String = "text",
                         idCol: String = "doc_id", windowTokens: Int = 50,
-                        minOcc: Long = 2): Retriever = {
+                        minOcc: Long = 2): Retriever =
+    Retriever.freeze(substringDups(corpus, textCol, idCol, windowTokens, minOcc)) {
+      case Seq(dups) => docs => scrubCovered(docs, coveredPositions(
+        windowHashes(docs, textCol, idCol, windowTokens)
+          .join(dups, Seq("h"), "left_semi"), windowTokens), textCol, idCol)
+    }
+
+  /** The frozen index of the substring family: the hashes of the windows
+    * occurring ≥ `minOcc` times in `corpus` (8 B per duplicated window —
+    * dup-volume-sized, not corpus-sized), built ONCE for
+    * [[substringFlagger]], [[saveSubstringIndex]] and [[substringScrubber]]. */
+  private def substringDups(corpus: DataFrame, textCol: String, idCol: String,
+                            windowTokens: Int, minOcc: Long): DataFrame = {
     require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
     require(minOcc >= 1, s"minOcc must be >= 1, got $minOcc")
-    val w = windowTokens
-    val dups = windowHashes(corpus, textCol, idCol, w)
+    windowHashes(corpus, textCol, idCol, windowTokens)
       .groupBy(col("h")).agg(count(lit(1)).as("occ"))
       .filter(col("occ") >= minOcc).select(col("h"))
-      .persist()
-    dups.count()
-    new Retriever(docs => {
-      val covered = windowHashes(docs, textCol, idCol, w)
-        .join(dups, Seq("h"), "left_semi")
-        .select(col("doc_id"),
-          explode(sequence(col("pos"), col("pos") + lit(w.toLong) - 1L)).as("p"))
-        .distinct()
-      val toks = docs.filter(length(trim(col(textCol))) > 0)
-        .select(col(idCol).cast("long").as("doc_id"),
-          posexplode(graft.ext.TextAnalysis.tokens(col(textCol))).as(Seq("p", "tok")))
-        .select(col("doc_id"), col("p").cast("long").as("p"), col("tok"))
-      val kept = toks.join(covered, Seq("doc_id", "p"), "left_anti")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_kept"),
-          expr("""array_join(transform(array_sort(collect_list(struct(p, tok))),
-                                       x -> x.tok), ' ')""").as("scrub_text"))
-      val totals = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tokens"))
-      docs.select(col(idCol).cast("long").as("doc_id"))
-        .join(totals, Seq("doc_id"), "left")
-        .join(kept, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-          (coalesce(col("n_tokens"), lit(0L)) - coalesce(col("n_kept"), lit(0L)))
-            .as("n_scrubbed"),
-          coalesce(col("scrub_text"), lit("")).as("scrub_text"))
-    }, () => dups.unpersist())
   }
 
   /** The probe side of the substring-flagger lifecycle, defined ONCE for
@@ -1543,54 +1455,31 @@ object Dedup {
     * the persisted set. */
   def substringFlagger(corpus: DataFrame, textCol: String = "text",
                        idCol: String = "doc_id", windowTokens: Int = 50,
-                       minOcc: Long = 2): Retriever = {
-    require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
-    require(minOcc >= 1, s"minOcc must be >= 1, got $minOcc")
-    val dups = windowHashes(corpus, textCol, idCol, windowTokens)
-      .groupBy(col("h")).agg(count(lit(1)).as("occ"))
-      .filter(col("occ") >= minOcc).select(col("h"))
-      .persist()
-    // build-time job: materialize the frozen set now, not on first batch
-    dups.count()
-    new Retriever(substringProbe(dups, windowTokens, textCol, idCol),
-      () => dups.unpersist())
-  }
+                       minOcc: Long = 2): Retriever =
+    Retriever.freeze(substringDups(corpus, textCol, idCol, windowTokens, minOcc)) {
+      case Seq(dups) => substringProbe(dups, windowTokens, textCol, idCol)
+    }
 
-  /** Persist a [[substringFlagger]] duplicated-window index (the
-    * [[saveNearDupIndex]] lifecycle): `dir/dups` — the 8 B/window hash set;
-    * `dir/meta` — one row (window_tokens, min_occ) so a loaded flagger
-    * reproduces the build's semantics. An empty or dup-free corpus writes
+  /** Persist a [[substringFlagger]] duplicated-window index ([[Retriever]]
+    * companion layout): `dir/dups` — the 8 B/window hash set; `dir/meta` —
+    * one row (window_tokens, min_occ). An empty or dup-free corpus writes
     * an empty, schema-complete set and round-trips. */
   def saveSubstringIndex(corpus: DataFrame, dir: String,
                          textCol: String = "text", idCol: String = "doc_id",
-                         windowTokens: Int = 50, minOcc: Long = 2): Unit = {
-    require(windowTokens >= 1 && minOcc >= 1,
-      s"need windowTokens >= 1 and minOcc >= 1, got $windowTokens/$minOcc")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    windowHashes(corpus, textCol, idCol, windowTokens)
-      .groupBy(col("h")).agg(count(lit(1)).as("occ"))
-      .filter(col("occ") >= minOcc).select(col("h"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/dups")
-    Seq((windowTokens, minOcc)).toDF("window_tokens", "min_occ")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/meta")
-  }
+                         windowTokens: Int = 50, minOcc: Long = 2): Unit =
+    Retriever.save(dir,
+        "dups" -> substringDups(corpus, textCol, idCol, windowTokens, minOcc))(
+      lit(windowTokens).as("window_tokens"), lit(minOcc).as("min_occ"))
 
   /** Reload a [[saveSubstringIndex]] directory as a ready [[Retriever]]
     * with the identical probe plan as the in-memory [[substringFlagger]]
     * (reload parity pinned in DedupSpec). */
   def loadSubstringFlagger(spark: org.apache.spark.sql.SparkSession,
                            dir: String, textCol: String = "text",
-                           idCol: String = "doc_id"): Retriever = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val w = m.getAs[Int]("window_tokens")
-    val dups = spark.read.parquet(s"$dir/dups").persist()
-    dups.count()
-    new Retriever(substringProbe(dups, w, textCol, idCol),
-      () => dups.unpersist())
-  }
+                           idCol: String = "doc_id"): Retriever =
+    Retriever.load(spark, dir, "dups") { case (m, Seq(dups)) =>
+      substringProbe(dups, m.getAs[Int]("window_tokens"), textCol, idCol)
+    }
 
   /** x111b: in-engine completeness gate for [[simHashNearDupPairs]] — on a
     * bounded corpus the banded pair set must EQUAL the brute-force
@@ -1613,7 +1502,8 @@ object Dedup {
         .select(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"),
           expr("bit_count(a.simhash ^ b.simhash)").cast("long").as("ham"))
         .filter(col("ham") <= hMax)
-      val banded = simHashNearDupPairsOf(sigs, hMax, Int.MaxValue)
+      val banded = bandedPairs(sigBandsOf(sigs, "simhash", "doc_id"), hMax,
+        Int.MaxValue)
       // ONE job: full-outer join answers |banded|, missing, and extra
       // together (brute's n² compare and banded's bucket shuffle each
       // execute exactly once)
@@ -1693,14 +1583,14 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** The df-capped (fp, doc_id) fingerprint table — the ONE artifact behind
+  /** The df-capped (fp, ref_id) fingerprint table — the ONE artifact behind
     * [[winnowPairs]], [[winnowFlagger]] and [[saveWinnowIndex]]. */
   private def winnowKeptFps(docs: DataFrame, k: Int, window: Int, maxDf: Long,
                             textCol: String, idCol: String): DataFrame = {
     val fps = winnowFingerprints(docs, k, window, textCol, idCol)
     val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select(col("fp"))
-    fps.join(keep, Seq("fp")).select(col("fp"), col("doc_id"))
+    fps.join(keep, Seq("fp")).select(col("fp"), col("doc_id").as("ref_id"))
   }
 
   /** The probe side shared by the in-memory and reloaded winnow flaggers:
@@ -1726,47 +1616,33 @@ object Dedup {
     * (`doc_id`, `n_matches`, `max_shared`). */
   def winnowFlagger(corpus: DataFrame, k: Int = 3, window: Int = 4,
                     minShared: Long = 2L, maxDf: Long = 64L,
-                    textCol: String = "text", idCol: String = "doc_id"): Retriever = {
-    val ref = winnowKeptFps(corpus, k, window, maxDf, textCol, idCol)
-      .toDF("fp", "ref_id").persist()
-    new Retriever(winnowProbe(ref, k, window, minShared, textCol, idCol),
-      () => ref.unpersist())
-  }
+                    textCol: String = "text", idCol: String = "doc_id"): Retriever =
+    Retriever.freeze(winnowKeptFps(corpus, k, window, maxDf, textCol, idCol)) {
+      case Seq(ref) => winnowProbe(ref, k, window, minShared, textCol, idCol)
+    }
 
-  /** Persist a [[winnowFlagger]] index so the build survives the session —
-    * the [[saveNearDupIndex]] shape for winnow fingerprints: 16 B/selected
-    * fingerprint (≈ 2/(window+1) of the corpus k-gram count) plus a one-row
-    * meta (k, window, min_shared, max_df) so a loaded flagger reproduces
-    * the build's semantics without the caller re-supplying them. */
+  /** Persist a [[winnowFlagger]] index so the build survives the session
+    * ([[Retriever]] companion layout): `dir/fingerprints` — 16 B/selected
+    * fingerprint (≈ 2/(window+1) of the corpus k-gram count); `dir/meta` —
+    * one row (k, window, min_shared, max_df). */
   def saveWinnowIndex(corpus: DataFrame, dir: String, k: Int = 3,
                       window: Int = 4, minShared: Long = 2L, maxDf: Long = 64L,
-                      textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    winnowKeptFps(corpus, k, window, maxDf, textCol, idCol)
-      .toDF("fp", "ref_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/fingerprints")
-    Seq((k, window, minShared, maxDf))
-      .toDF("k", "window", "min_shared", "max_df")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/meta")
-  }
+                      textCol: String = "text", idCol: String = "doc_id"): Unit =
+    Retriever.save(dir,
+        "fingerprints" -> winnowKeptFps(corpus, k, window, maxDf, textCol, idCol))(
+      lit(k).as("k"), lit(window).as("window"), lit(minShared).as("min_shared"),
+      lit(maxDf).as("max_df"))
 
   /** Reload a [[saveWinnowIndex]] directory as a ready [[Retriever]]
     * (materialized now, not on first batch; semantics from the saved
     * meta — WinnowSpec pins reload parity with the in-memory flagger). */
   def loadWinnowFlagger(spark: org.apache.spark.sql.SparkSession, dir: String,
                         textCol: String = "text",
-                        idCol: String = "doc_id"): Retriever = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val ref = spark.read.parquet(s"$dir/fingerprints").persist()
-    ref.count()
-    new Retriever(
+                        idCol: String = "doc_id"): Retriever =
+    Retriever.load(spark, dir, "fingerprints") { case (m, Seq(ref)) =>
       winnowProbe(ref, m.getAs[Int]("k"), m.getAs[Int]("window"),
-        m.getAs[Long]("min_shared"), textCol, idCol),
-      () => ref.unpersist())
-  }
+        m.getAs[Long]("min_shared"), textCol, idCol)
+    }
 
   /** Exact token-MULTISET overlap scores for candidate pairs — the verify
     * step that grades what a candidate miner found: per pair (`ia`, `ib`),

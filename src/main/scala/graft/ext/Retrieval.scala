@@ -11,11 +11,14 @@ import org.apache.spark.sql.functions._
   * training-data pipeline needs for eval-set mining, dedup triage, and
   * RAG-corpus curation.
   *
-  * Scale shape: BM25 is ONE token scan with the query-term filter pushed
-  * into it (an `isin` over a literal handful of terms — the scan prunes to
-  * matching rows before any shuffle), two tiny aggregates over matched
-  * docs, and a corpus-sized-but-2-column length frame; nothing quadratic,
-  * no windows over the corpus. Fusion is a join of two (id, rank) frames.
+  * Scale shape: every ranker scores against ONE corpus build,
+  * [[bm25Postings]] — a token scan, one (doc, term) aggregate with the
+  * term's df and cf attached, and a 2-column length frame — which a
+  * pipeline persists once and shares. Single-query entries filter it with
+  * an `isin` over a literal handful of terms; multi-query entries broadcast
+  * the (query, term) rows against it and rank per query. Nothing
+  * quadratic, no windows over the corpus. Fusion is a join of two
+  * (id, rank) frames.
   *
   * Determinism: every per-(doc, term) contribution quantizes to integer
   * micro-units (`round(x * 1e6)` BIGINT) BEFORE the per-doc sum — the
@@ -36,31 +39,15 @@ object Retrieval {
   def bm25(docs: DataFrame, terms: Seq[String],
            k1: Double = 1.2, b: Double = 0.75,
            textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    require(terms.nonEmpty, "bm25 needs at least one query term")
-    val (dl, stats, tokenizable) = corpusStats(docs, textCol, idCol)
-    // the term filter rides the exploded scan: `isin` over a literal list —
-    // only matching (doc, term) rows survive into the aggregate
-    val tf = tokenizable
-      .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-      .filter(col("tok").isin(terms: _*))
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfreq), "tok")
-      .join(dl, idCol)
-      .crossJoin(broadcast(stats))
-      .withColumn("c_micro", contributionMicro(k1, b))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_hit_terms"), sum(col("c_micro")).as("score_micro"))
+    val (postings, stats) = bm25Postings(docs, textCol, idCol)
+    bm25Of(postings, stats, terms, k1, b, idCol)
   }
 
-  /** [[bm25]] over a PREBUILT [[buildPostings]] postings frame (columns
-    * `idCol`, `tok`, `tf`, `df`, `dl`) plus its one-row stats. Selection-
-    * identical to [[bm25]]: postings' per-term `df` equals the filtered-tf
-    * df for every matched term (both count the docs containing the term),
-    * `tf`/`dl` and the (n_docs, sum_dl) totals are the same values, and
-    * the contribution is the shared [[contributionMicro]] — so a catalog
-    * that persists ONE postings frame serves every BM25 entry point from
-    * cache instead of re-tokenizing the corpus per query (r21). */
+  /** The BM25 kernel over a PREBUILT [[bm25Postings]] (postings, stats)
+    * pair (postings columns `idCol`, `tok`, `tf`, `df`, `dl`): [[bm25]]
+    * builds the pair and calls it, so a catalog that persists ONE postings
+    * frame serves every BM25 entry point from cache instead of
+    * re-tokenizing the corpus per query (r21). */
   def bm25Of(postings: DataFrame, stats: DataFrame, terms: Seq[String],
              k1: Double = 1.2, b: Double = 0.75,
              idCol: String = "doc_id"): DataFrame = {
@@ -73,33 +60,17 @@ object Retrieval {
   }
 
   /** The one-row (n_docs, sum_dl) totals recomputed from a postings frame
-    * — identical to [[corpusStats]]'s stats: postings hold one row per
+    * — identical to [[bm25Postings]]'s stats: postings hold one row per
     * (tokenizable doc, distinct term), so distinct (id, dl) is exactly the
     * per-doc length frame (every tokenizable doc has ≥ 1 token). */
   def statsOfPostings(postings: DataFrame, idCol: String = "doc_id"): DataFrame =
     postings.select(col(idCol), col("dl")).distinct()
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
 
-  /** (per-doc lengths, corpus totals, tokenizable docs) — the corpus-side
-    * statistics both BM25 entry points build on. */
-  private def corpusStats(docs: DataFrame, textCol: String,
-                          idCol: String): (DataFrame, DataFrame, DataFrame) = {
-    // Fan a starved single-split scan out across the cores (Par scaladoc);
-    // both tokenize passes below consume the SAME exchange via
-    // ReuseExchange, so the corpus is scanned once either way.
-    val tokenizable = Par.fanOutScan(docs, col(idCol))
-      .filter(length(trim(col(textCol))) > 0)
-    // dl from the codegen'd token count — no second tokenize of the corpus
-    val dl = tokenizable.select(col(idCol),
-      TextAnalysis.wsTokenCount(col(textCol)).cast("long").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    (dl, stats, tokenizable)
-  }
-
   /** The per-(doc, term) BM25 contribution in integer micro-units, over
     * columns `tf`, `df`, `dl`, `n_docs`, `sum_dl` — ONE definition shared
-    * by [[bm25]] and [[bm25Retriever]] so the two paths cannot drift (and
-    * so the SQL oracles mirror a single expression). */
+    * by [[bm25Of]] and the multi-query scorers so the paths cannot drift
+    * (and so the SQL oracles mirror a single expression). */
   private def contributionMicro(k1: Double, b: Double): Column = expr(
     s"""CAST(round(
           ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) *
@@ -123,12 +94,19 @@ object Retrieval {
   def bm25Retriever(docs: DataFrame, kTop: Int,
                     k1: Double = 1.2, b: Double = 0.75,
                     textCol: String = "text",
-                    idCol: String = "doc_id"): Retriever = {
-    val (postings, stats) = buildPostings(docs, textCol, idCol)
+                    idCol: String = "doc_id"): Retriever =
+    postingsRetriever(docs, textCol, idCol)(
+      (postings, stats) => bm25CrossTopKOf(postings, stats, _, kTop, k1, b, idCol))
+
+  /** Persist the [[bm25Postings]] pair of `docs` (the first batch
+    * materializes it) and score every query batch against it; `close()`
+    * releases it. */
+  private def postingsRetriever(docs: DataFrame, textCol: String, idCol: String)(
+      score: (DataFrame, DataFrame) => DataFrame => DataFrame): Retriever = {
+    val (postings, stats) = bm25Postings(docs, textCol, idCol)
     val postingsP = postings.persist()
     val statsP = stats.persist()
-    new Retriever(
-      scoreBatch(postingsP, statsP, kTop, k1, b, idCol),
+    new Retriever(score(postingsP, statsP),
       () => { postingsP.unpersist(); statsP.unpersist() })
   }
 
@@ -139,29 +117,39 @@ object Retrieval {
                     k1: Double = 1.2, b: Double = 0.75,
                     textCol: String = "text",
                     idCol: String = "doc_id"): DataFrame = {
-    val (postings, stats) = buildPostings(docs, textCol, idCol)
-    scoreBatch(postings, stats, kTop, k1, b, idCol)(queries)
+    val (postings, stats) = bm25Postings(docs, textCol, idCol)
+    bm25CrossTopKOf(postings, stats, queries, kTop, k1, b, idCol)
   }
 
-  /** [[bm25CrossTopK]] over a PREBUILT (postings, stats) pair — the
-    * cached-frame entry (see [[bm25Of]]). */
+  /** The multi-query BM25 kernel over a PREBUILT [[bm25Postings]] pair —
+    * the cached-frame entry (see [[bm25Of]]): each query's distinct terms
+    * broadcast against the postings, exact micro-unit sums per
+    * (query, doc), top-`kTop` per query. */
   def bm25CrossTopKOf(postings: DataFrame, stats: DataFrame,
                       queries: DataFrame, kTop: Int,
                       k1: Double = 1.2, b: Double = 0.75,
                       idCol: String = "doc_id"): DataFrame =
-    scoreBatch(postings, stats, kTop, k1, b, idCol)(queries)
+    scoreTerms(postings, stats, kTop, k1, b, idCol)(
+      queries.select(col("query_id"),
+        explode(array_distinct(col("terms"))).as("tok")))
 
-  /** The corpus-side (postings, stats) pair as a public build — what the
-    * catalog's shared postings frame materializes once (r21). */
+  /** Corpus-side BM25/QL state, built ONCE: postings (doc, term, tf) with
+    * the term's df and cf and the doc's length attached, plus the one-row
+    * (n_docs, sum_dl) totals. Statistics cover the tokenizable universe
+    * (`length(trim(text)) > 0`), document length in whitespace tokens.
+    * This is what the catalog's shared postings frame materializes once
+    * (r21). */
   def bm25Postings(docs: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id"): (DataFrame, DataFrame) =
-    buildPostings(docs, textCol, idCol)
-
-  /** Corpus-side BM25 state: postings (doc, term, tf) with the term's df
-    * and the doc's length attached, plus the (n_docs, sum_dl) totals. */
-  private def buildPostings(docs: DataFrame, textCol: String,
-                            idCol: String): (DataFrame, DataFrame) = {
-    val (dl, stats, tokenizable) = corpusStats(docs, textCol, idCol)
+                   idCol: String = "doc_id"): (DataFrame, DataFrame) = {
+    // Fan a starved single-split scan out across the cores (Par scaladoc);
+    // both tokenize passes below consume the SAME exchange via
+    // ReuseExchange, so the corpus is scanned once either way.
+    val tokenizable = Par.fanOutScan(docs, col(idCol))
+      .filter(length(trim(col(textCol))) > 0)
+    // dl from the codegen'd token count — no second tokenize of the corpus
+    val dl = tokenizable.select(col(idCol),
+      TextAnalysis.wsTokenCount(col(textCol)).cast("long").as("dl"))
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val tf = tokenizable
       .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
@@ -178,14 +166,7 @@ object Retrieval {
     (postings, stats)
   }
 
-  private def scoreBatch(postings: DataFrame, stats: DataFrame, kTop: Int,
-                         k1: Double, b: Double,
-                         idCol: String): DataFrame => DataFrame = queries =>
-    scoreTerms(postings, stats, kTop, k1, b, idCol)(
-      queries.select(col("query_id"),
-        explode(array_distinct(col("terms"))).as("tok")))
-
-  /** [[scoreBatch]] over an already-exploded (`query_id`, `tok`) frame —
+  /** [[bm25CrossTopKOf]] over an already-exploded (`query_id`, `tok`) frame —
     * the entry [[bm25Prf]] uses to feed PLAN-DERIVED terms (no driver
     * collect between expansion and re-scoring). */
   private def scoreTerms(postings: DataFrame, stats: DataFrame, kTop: Int,
@@ -218,7 +199,7 @@ object Retrieval {
               kDocs: Int = 3, kExpand: Int = 2, kTop: Int = 10,
               k1: Double = 1.2, b: Double = 0.75,
               textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val (postings, stats) = buildPostings(docs, textCol, idCol)
+    val (postings, stats) = bm25Postings(docs, textCol, idCol)
     bm25PrfOf(postings, stats, seedTerms, kDocs, kExpand, kTop, k1, b, idCol)
   }
 
@@ -238,10 +219,6 @@ object Retrieval {
     // Stage-1 seed scoring runs off the SAME postings stage-2 uses —
     // calling bm25(docs, ...) here re-built tf/df/dl from a second
     // corpus tokenize (r20; two redundant passes measured on x132).
-    // scoreTerms over postings is selection-identical: postings' per-term
-    // df equals bm25's filtered-tf df for every matched term, the
-    // contribution expression is the shared contributionMicro, and the
-    // (score desc, id) tie-break matches the orderBy+limit.
     val seedQt = seedTerms.distinct.toDF("tok")
       .select(lit(0L).as("query_id"), col("tok"))
     val feedback = scoreTerms(postings, stats, kDocs, k1, b, idCol)(seedQt)
@@ -282,24 +259,6 @@ object Retrieval {
         (rrfTerm(col("rnk_l"), k) + rrfTerm(col("rnk_r"), k)).as("rrf_micro"))
   }
 
-  /** Dirichlet-smoothed query-likelihood retrieval (Zhai/Lafferty 2001 —
-    * the language-modeling ranker beside BM25's probabilistic one): top-`kTop`
-    * docs by `log p(q|d)` with `p(t|d) = (tf + μ·p(t|C)) / (dl + μ)`,
-    * `p(t|C) = cf_t / |C|`. Scores are RANK-EQUIVALENT to the full query
-    * likelihood — the doc-independent `Σ_t ln(μ·p(t|C))` constant is
-    * dropped, leaving per matched term `ln(1 + tf·|C| / (μ·cf))` minus the
-    * per-doc length norm `|q|·ln(dl + μ)`; as usual for posting-list
-    * retrieval only docs matching ≥ 1 term are candidates.
-    *
-    * Same plan shape as [[bm25]]: the term `isin` filter rides the exploded
-    * scan, `cf` is one tiny aggregate over the SAME filtered rows (the sum
-    * over all docs of a query term's tf IS its collection frequency — no
-    * second corpus pass), stats broadcast. Both log factors quantize to
-    * integer micro-nats BEFORE the sum (the object's determinism contract),
-    * so `score_micro` is an exact integer cross-engine. `mu` defaults to
-    * 300 — the classic 500–2000 range assumes web-length docs; set it
-    * relative to the corpus avgdl. Output: (`doc_id`, `n_hit_terms`,
-    * `score_micro`, `rnk`), ties on doc id. */
   /** Build the QL corpus state ONCE — postings with each term's collection
     * frequency and the doc length attached, plus corpus totals — and return
     * the per-batch scorer: [[bm25Retriever]]'s build/apply split for the
@@ -310,50 +269,24 @@ object Retrieval {
     * streaming output ≡ batch output on the same rows (StreamingSpec). */
   def qlRetriever(docs: DataFrame, kTop: Int, mu: Double = 300.0,
                   textCol: String = "text",
-                  idCol: String = "doc_id"): Retriever = {
-    require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    val (postings, stats) = buildPostings(docs, textCol, idCol)
-    val postingsP = postings.persist()
-    val statsP = stats.persist()
-    new Retriever(
-      qlScoreBatch(postingsP, statsP, kTop, mu, idCol),
-      () => { postingsP.unpersist(); statsP.unpersist() })
-  }
+                  idCol: String = "doc_id"): Retriever =
+    postingsRetriever(docs, textCol, idCol)(
+      (postings, stats) => qlCrossTopKOf(postings, stats, _, kTop, mu, idCol))
 
   /** One-shot multi-query QL retrieval: [[qlRetriever]]'s exact plan
     * without the persistence split — the catalog-entry shape. */
   def qlCrossTopK(docs: DataFrame, queries: DataFrame, kTop: Int,
                   mu: Double = 300.0, textCol: String = "text",
                   idCol: String = "doc_id"): DataFrame = {
-    require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    val (postings, stats) = buildPostings(docs, textCol, idCol)
-    qlScoreBatch(postings, stats, kTop, mu, idCol)(queries)
+    val (postings, stats) = bm25Postings(docs, textCol, idCol)
+    qlCrossTopKOf(postings, stats, queries, kTop, mu, idCol)
   }
 
-  /** [[qlCrossTopK]] over a PREBUILT (postings, stats) pair — the
+  /** The multi-query QL kernel over a PREBUILT [[bm25Postings]] pair — the
     * cached-frame entry (see [[bm25Of]]). */
   def qlCrossTopKOf(postings: DataFrame, stats: DataFrame,
                     queries: DataFrame, kTop: Int, mu: Double = 300.0,
                     idCol: String = "doc_id"): DataFrame = {
-    require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    qlScoreBatch(postings, stats, kTop, mu, idCol)(queries)
-  }
-
-  /** The per-(doc, term) QL contribution in integer micro-nats, over
-    * columns `tf`, `cf`, `sum_dl` — ONE definition shared by [[qlTopK]]
-    * and the batch paths so the two cannot drift (the [[contributionMicro]]
-    * rule for the LM ranker). */
-  private def qlContributionMicro(mu: Double): Column = expr(
-    s"""CAST(round(ln(1.0 + CAST(tf AS DOUBLE) * CAST(sum_dl AS DOUBLE) /
-          ($mu * CAST(cf AS DOUBLE))) * 1e6) AS BIGINT)""")
-
-  /** The per-doc QL length norm `ln(dl + mu)` in integer micro-nats. */
-  private def qlNormMicro(mu: Double): Column = expr(
-    s"CAST(round(ln(CAST(dl AS DOUBLE) + $mu) * 1e6) AS BIGINT)")
-
-  private def qlScoreBatch(postings: DataFrame, stats: DataFrame, kTop: Int,
-                           mu: Double,
-                           idCol: String): DataFrame => DataFrame = queries => {
     val qt = queries.select(col("query_id"),
       size(array_distinct(col("terms"))).cast("long").as("nq"),
       explode(array_distinct(col("terms"))).as("tok"))
@@ -371,22 +304,53 @@ object Retrieval {
       .filter(col("rnk") <= kTop)
   }
 
+  /** The per-(doc, term) QL contribution in integer micro-nats, over
+    * columns `tf`, `cf`, `sum_dl` — ONE definition shared by [[qlTopKOf]]
+    * and [[qlCrossTopKOf]] so the two cannot drift (the
+    * [[contributionMicro]] rule for the LM ranker), and the one place the
+    * Dirichlet `mu` is checked. */
+  private def qlContributionMicro(mu: Double): Column = {
+    require(mu > 0, s"Dirichlet mu must be positive, got $mu")
+    expr(
+      s"""CAST(round(ln(1.0 + CAST(tf AS DOUBLE) * CAST(sum_dl AS DOUBLE) /
+            ($mu * CAST(cf AS DOUBLE))) * 1e6) AS BIGINT)""")
+  }
+
+  /** The per-doc QL length norm `ln(dl + mu)` in integer micro-nats. */
+  private def qlNormMicro(mu: Double): Column = expr(
+    s"CAST(round(ln(CAST(dl AS DOUBLE) + $mu) * 1e6) AS BIGINT)")
+
+  /** Dirichlet-smoothed query-likelihood retrieval (Zhai/Lafferty 2001 —
+    * the language-modeling ranker beside BM25's probabilistic one): top-`kTop`
+    * docs by `log p(q|d)` with `p(t|d) = (tf + μ·p(t|C)) / (dl + μ)`,
+    * `p(t|C) = cf_t / |C|`. Scores are RANK-EQUIVALENT to the full query
+    * likelihood — the doc-independent `Σ_t ln(μ·p(t|C))` constant is
+    * dropped, leaving per matched term `ln(1 + tf·|C| / (μ·cf))` minus the
+    * per-doc length norm `|q|·ln(dl + μ)`; as usual for posting-list
+    * retrieval only docs matching ≥ 1 term are candidates.
+    *
+    * Same plan shape as [[bm25]]: the term `isin` filter over the shared
+    * [[bm25Postings]] frame, whose per-term `cf` (the sum over all docs of
+    * a query term's tf IS its collection frequency) rides the same
+    * aggregate as BM25's df, stats broadcast. Both log factors quantize to
+    * integer micro-nats BEFORE the sum (the object's determinism contract),
+    * so `score_micro` is an exact integer cross-engine. `mu` defaults to
+    * 300 — the classic 500–2000 range assumes web-length docs; set it
+    * relative to the corpus avgdl. Output: (`doc_id`, `n_hit_terms`,
+    * `score_micro`, `rnk`), ties on doc id. */
   def qlTopK(docs: DataFrame, terms: Seq[String], mu: Double = 300.0,
              kTop: Int = 10, textCol: String = "text",
              idCol: String = "doc_id"): DataFrame = {
-    val (postings, stats) = buildPostings(docs, textCol, idCol)
+    val (postings, stats) = bm25Postings(docs, textCol, idCol)
     qlTopKOf(postings, stats, terms, mu, kTop, idCol)
   }
 
-  /** [[qlTopK]] over a PREBUILT [[buildPostings]] (postings, stats) pair —
-    * the cached-frame entry (see [[bm25Of]]); postings' `cf` equals the
-    * filtered build's (docs without a term contribute no rows to its Σ tf
-    * either way). */
+  /** The QL kernel over a PREBUILT [[bm25Postings]] (postings, stats) pair
+    * — the cached-frame entry (see [[bm25Of]]). */
   def qlTopKOf(postings: DataFrame, stats: DataFrame, terms: Seq[String],
                mu: Double = 300.0, kTop: Int = 10,
                idCol: String = "doc_id"): DataFrame = {
     require(terms.nonEmpty, "qlTopK needs at least one query term")
-    require(mu > 0, s"Dirichlet mu must be positive, got $mu")
     val nTerms = terms.distinct.size
     postings.filter(col("tok").isin(terms: _*))
       .crossJoin(broadcast(stats))

@@ -77,6 +77,13 @@ object Similarity {
     rankAgainstQuery(emb, queryId, kTop,
       Some(candIds.select(col(candIdCol).as("vec_id"))))
 
+  /** Hard row ceiling for [[cosinePairs]]: the baseline collects every
+    * (id, vector, norm) to the driver, so a large table must fail fast with
+    * a pointer at the scale path instead of slow-OOMing the driver. 1M rows
+    * × 64-dim float ≈ 300 MB heap — safely inside a default driver, far
+    * beyond any verification corpus. */
+  val maxExactRows = 1000000L
+
   /** Exact all-pairs above a cosine threshold. Quadratic by construction —
     * the exact baseline for verifying the LSH path; at scale use
     * [[lshCosinePairs]].
@@ -91,13 +98,6 @@ object Similarity {
     * Arithmetic is bit-identical to the declarative form: index-ordered
     * double multiply-accumulate and Spark's own round semantics
     * (BigDecimal.valueOf(x).setScale(6, HALF_UP)). */
-  /** Hard row ceiling for [[cosinePairs]]: the baseline collects every
-    * (id, vector, norm) to the driver, so a large table must fail fast with
-    * a pointer at the scale path instead of slow-OOMing the driver. 1M rows
-    * × 64-dim float ≈ 300 MB heap — safely inside a default driver, far
-    * beyond any verification corpus. */
-  val maxExactRows = 1000000L
-
   def cosinePairs(emb: DataFrame, threshold: Double,
                   maxRows: Long = maxExactRows): DataFrame = {
     val spark = emb.sparkSession
@@ -247,10 +247,6 @@ object Similarity {
         col("tb.t").as("t"), col("tb.bucket").as("bucket"))
   }
 
-  /** Approximate near-pairs: candidates collide in ≥1 LSH bucket table
-    * (equi-join on (table, bucket) — never all-pairs), then exact cosine
-    * verification. Recall < 1 by construction; the exact companion query is
-    * the baseline for measuring it. */
   /** Per-bucket size cap: a degenerate bucket of q near-identical vectors
     * emits q²/2 candidate pairs. Buckets over the cap are dropped (count
     * published via `observe`) — at 4 sign bits a bucket holds ~1/16 of a
@@ -269,7 +265,12 @@ object Similarity {
       case n  => adaptiveBits(n, math.max(1L, maxBucket / 4L))
     }
 
-  /** `bitsPerTable = 0` (default) derives the band width from the corpus
+  /** Approximate near-pairs: candidates collide in ≥1 LSH bucket table
+    * (equi-join on (table, bucket) — never all-pairs), then exact cosine
+    * verification. Recall < 1 by construction; the exact companion query is
+    * the baseline for measuring it.
+    *
+    * `bitsPerTable = 0` (default) derives the band width from the corpus
     * size ([[adaptiveBits]] against `maxBucket/4`) — one count() job buys
     * candidate volume linear instead of quadratic in n. Pass explicit bits
     * to pin a plan; check the recall consequence with [[bandingRecall]] and

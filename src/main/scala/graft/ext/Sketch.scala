@@ -97,10 +97,16 @@ object Sketch {
     * `est_inter`, `est_ppm`) sorted nowhere — callers order. */
   def overlapFlagger(corpus: DataFrame, k: Int = 256,
                      textCol: String = "text",
-                     srcCol: String = "source"): Retriever = {
-    val ref = sketches(docTrigrams(corpus, textCol, srcCol), k, srcCol).persist()
-    new Retriever(probe(ref, k, textCol), () => ref.unpersist())
-  }
+                     srcCol: String = "source"): Retriever =
+    Retriever.freeze(sourceSketches(corpus, k, textCol, srcCol)) {
+      case Seq(ref) => probe(ref, k, textCol)
+    }
+
+  /** The frozen per-source sketch table behind [[overlapFlagger]] and
+    * [[saveSketchIndex]]. */
+  private def sourceSketches(corpus: DataFrame, k: Int, textCol: String,
+                             srcCol: String): DataFrame =
+    sketches(docTrigrams(corpus, textCol, srcCol), k, srcCol)
 
   private def probe(ref: DataFrame, k: Int,
                     textCol: String): DataFrame => DataFrame = batch => {
@@ -112,28 +118,20 @@ object Sketch {
         col("est_ppm"))
   }
 
-  /** Persist an [[overlapFlagger]] index (k × 8 B per source + one-row
-    * meta) — the [[Dedup.saveWinnowIndex]] lifecycle. */
+  /** Persist an [[overlapFlagger]] index ([[Retriever]] companion layout):
+    * `dir/sketches` — k × 8 B per source; `dir/meta` — one row (k). */
   def saveSketchIndex(corpus: DataFrame, dir: String, k: Int = 256,
                       textCol: String = "text",
-                      srcCol: String = "source"): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    sketches(docTrigrams(corpus, textCol, srcCol), k, srcCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/sketches")
-    Seq(k).toDF("k").coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/meta")
-  }
+                      srcCol: String = "source"): Unit =
+    Retriever.save(dir, "sketches" -> sourceSketches(corpus, k, textCol, srcCol))(
+      lit(k).as("k"))
 
   /** Reload a [[saveSketchIndex]] directory as a ready [[Retriever]]
     * (materialized now; k from the saved meta — reload parity pinned in
     * SketchSpec). */
   def loadOverlapFlagger(spark: SparkSession, dir: String,
-                         textCol: String = "text"): Retriever = {
-    val k = spark.read.parquet(s"$dir/meta").collect()(0).getAs[Int]("k")
-    val ref = spark.read.parquet(s"$dir/sketches").persist()
-    ref.count()
-    new Retriever(probe(ref, k, textCol), () => ref.unpersist())
-  }
+                         textCol: String = "text"): Retriever =
+    Retriever.load(spark, dir, "sketches") { case (m, Seq(ref)) =>
+      probe(ref, m.getAs[Int]("k"), textCol)
+    }
 }

@@ -56,8 +56,8 @@ object Stitch {
         array_join(slice(col("toks"), 1, k), " ").as("head"),
         array_join(slice(col("toks"), -k, k), " ").as("tail"))
 
-  /** The df-capped head and tail tables — the ONE artifact behind
-    * [[stitchPairs]], [[stitchFlagger]] and [[saveStitchIndex]]. Cap
+  /** The df-capped (h, ref_id, ov) tail and head tables — the ONE artifact
+    * behind [[stitchPairs]], [[stitchFlagger]] and [[saveStitchIndex]]. Cap
     * semantics: a tail string appearing in > maxDf docs is dropped from the
     * TAIL side, and likewise for heads — each side capped independently on
     * its own 48-bit hash df (hash, not string, so the cap is an 8-byte
@@ -92,7 +92,7 @@ object Stitch {
       .select(col("side"), col("h"))
     val kept = rows.join(broadcast(hot), Seq("side", "h"), "left_anti")
     def side(s: String): DataFrame = kept.filter(col("side") === s)
-      .select(col("h"), col("doc_id"), col("ov"))
+      .select(col("h"), col("doc_id").as("ref_id"), col("ov"))
     (side("t"), side("h"))
   }
 
@@ -106,8 +106,8 @@ object Stitch {
                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(k >= 1 && maxDf >= 2, s"need k >= 1 and maxDf >= 2, got $k/$maxDf")
     val (tails, heads) = cappedEnds(docs, k, maxDf, textCol, idCol)
-    tails.select(col("h"), col("doc_id").as("prev_id"), col("ov"))
-      .join(heads.select(col("h"), col("doc_id").as("next_id"),
+    tails.select(col("h"), col("ref_id").as("prev_id"), col("ov"))
+      .join(heads.select(col("h"), col("ref_id").as("next_id"),
         col("ov").as("ov_h")), Seq("h"))
       .filter(col("prev_id") =!= col("next_id") && col("ov") === col("ov_h"))
       .select(col("prev_id"), col("next_id"), col("ov").as("overlap"))
@@ -198,30 +198,21 @@ object Stitch {
   def stitchFlagger(corpus: DataFrame, k: Int = 3, maxDf: Long = 16L,
                     textCol: String = "text", idCol: String = "doc_id"): Retriever = {
     val (tails, heads) = cappedEnds(corpus, k, maxDf, textCol, idCol)
-    val tRef = tails.withColumnRenamed("doc_id", "ref_id").persist()
-    val hRef = heads.withColumnRenamed("doc_id", "ref_id").persist()
-    new Retriever(probe(tRef, hRef, k, textCol, idCol),
-      () => { tRef.unpersist(); hRef.unpersist() })
+    Retriever.freeze(tails, heads) {
+      case Seq(t, h) => probe(t, h, k, textCol, idCol)
+    }
   }
 
-  /** Persist a [[stitchFlagger]] index so the build survives the session —
-    * the [[Dedup.saveWinnowIndex]] shape: the two capped end tables (16 B +
-    * k tokens per doc) plus a one-row meta (k, max_df) so a loaded flagger
-    * reproduces the build's semantics without the caller re-supplying
-    * them. */
+  /** Persist a [[stitchFlagger]] index so the build survives the session
+    * ([[Retriever]] companion layout): `dir/tails` and `dir/heads` — the two
+    * capped end tables (16 B + k tokens per doc); `dir/meta` — one row
+    * (k, max_df). */
   def saveStitchIndex(corpus: DataFrame, dir: String, k: Int = 3,
                       maxDf: Long = 16L, textCol: String = "text",
                       idCol: String = "doc_id"): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val (tails, heads) = cappedEnds(corpus, k, maxDf, textCol, idCol)
-    tails.withColumnRenamed("doc_id", "ref_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/tails")
-    heads.withColumnRenamed("doc_id", "ref_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/heads")
-    Seq((k, maxDf)).toDF("k", "max_df")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/meta")
+    Retriever.save(dir, "tails" -> tails, "heads" -> heads)(
+      lit(k).as("k"), lit(maxDf).as("max_df"))
   }
 
   /** Reload a [[saveStitchIndex]] directory as a ready [[Retriever]]
@@ -229,12 +220,8 @@ object Stitch {
     * StitchSpec pins reload parity with the in-memory flagger). */
   def loadStitchFlagger(spark: SparkSession, dir: String,
                         textCol: String = "text",
-                        idCol: String = "doc_id"): Retriever = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val tRef = spark.read.parquet(s"$dir/tails").persist()
-    val hRef = spark.read.parquet(s"$dir/heads").persist()
-    tRef.count(); hRef.count()
-    new Retriever(probe(tRef, hRef, m.getAs[Int]("k"), textCol, idCol),
-      () => { tRef.unpersist(); hRef.unpersist() })
-  }
+                        idCol: String = "doc_id"): Retriever =
+    Retriever.load(spark, dir, "tails", "heads") { case (m, Seq(t, h)) =>
+      probe(t, h, m.getAs[Int]("k"), textCol, idCol)
+    }
 }

@@ -60,7 +60,7 @@ private[queries] object ExtShared {
   /** 32-token chunks at stride 24, chunk index carried — shared by x22
     * (chunk emission) and x38 (boilerplate-chunk detection).
     * posexplode_outer + null filter on the OUTPUT attribute (the
-    * InferFiltersFromGenerate dodge — see Dedup.explodedShingles). */
+    * InferFiltersFromGenerate dodge — see Dedup.minHashLshPairs). */
   private[queries] def tokenChunks(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
@@ -108,15 +108,24 @@ private[queries] object ExtShared {
     * list, the build times and the clear below are views over it, so no
     * shared value can be left out of any of them. A TrieMap because its
     * getOrElseUpdate tolerates a builder that forces another shared build
-    * (ConcurrentHashMap.computeIfAbsent throws on that recursive update);
-    * two threads racing on one key both build, and the loser's value is
-    * dropped — wasted-but-harmless warm-up work. */
+    * (ConcurrentHashMap.computeIfAbsent throws on that recursive update).
+    * Each key builds exactly once: threads asking for an unbuilt key
+    * (Bench's parallel warm-up) serialize on that key's lock, and the
+    * later ones find the first one's value. The lock is per key, so
+    * unrelated builds still run concurrently; monitors are re-entrant and
+    * the builds form a DAG (a builder only forces builds it depends on),
+    * so nested builds cannot deadlock. */
   private final case class Built(value: Any, secs: Double)
-  private val registry = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Built]
+  private type Key = (SparkSession, String, String)
+  private val registry = scala.collection.concurrent.TrieMap.empty[Key, Built]
+  private val buildLocks = scala.collection.concurrent.TrieMap.empty[Key, AnyRef]
 
-  private[queries] def shared[T](s: SparkSession, d: String, tag: String)(mk: => T): T =
-    registry.getOrElseUpdate((s, d, tag), timedBuild(mk)).value.asInstanceOf[T]
+  private[queries] def shared[T](s: SparkSession, d: String, tag: String)(mk: => T): T = {
+    val key = (s, d, tag)
+    registry.getOrElse(key, buildLocks.getOrElseUpdate(key, new AnyRef).synchronized {
+      registry.getOrElseUpdate(key, timedBuild(mk))
+    }).value.asInstanceOf[T]
+  }
 
   private[queries] def sharedFrame(s: SparkSession, d: String, tag: String)
                          (mk: => DataFrame): DataFrame =
@@ -200,6 +209,7 @@ private[queries] object ExtShared {
       case _ => ()
     }
     registry.clear()
+    buildLocks.clear()
   }
 
   /** x138/x139's shared DSIR weight frame — the per-doc importance scores

@@ -683,6 +683,26 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("a simhash index whose meta holds only h_max still loads") {
+    import spark.implicits._
+    val base = (1 to 60).map(i => s"w${i % 23}").mkString(" ")
+    val other = (1 to 60).map(i => s"z${i * 7 % 41}").mkString(" ")
+    val ref = docs(1L -> base, 2L -> base, 3L -> other)
+    val dir = java.nio.file.Files.createTempDirectory("shidx-hmax").toString
+    try {
+      Dedup.saveSimHashIndex(ref, dir, hMax = 2)
+      // the meta layout written before it carried the signature column
+      Seq(2).toDF("h_max").coalesce(1).write
+        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/meta")
+      val loaded = Dedup.loadSimHashFlagger(spark, dir)
+      try {
+        val got = loaded(ref).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+        assert(got === Seq((1L, 2L, 0L), (2L, 1L, 0L)))
+      } finally loaded.close()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("substringDupStats catches a repeat straddling an x97 block boundary") {
     def toks(prefix: String, n: Int) = (1 to n).map(prefix + _).mkString(" ")
     val span = toks("s", 16) // the shared 16-token span

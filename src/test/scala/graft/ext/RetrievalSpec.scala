@@ -33,6 +33,25 @@ class RetrievalSpec extends SparkSpec {
     assert(s2(0L)._2 > s2(1L)._2)
   }
 
+  test("bm25 is exactly the textbook formula on a tiny fixture") {
+    import spark.implicits._
+    // N = 3 docs, dl = 2/3/4, avgdl = 3; df(cat) = 2, df(fish) = 1
+    val docs = Seq(
+      (0L, "cat dog"), (1L, "cat cat fish"), (2L, "dog bird bird mouse"))
+      .toDF("doc_id", "text")
+    val (k1, b) = (1.2, 0.75)
+    val got = Retrieval.bm25(docs, Seq("cat", "fish"), k1, b)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // the Lucene idf ln(1 + (N - df + 0.5)/(df + 0.5)) times the saturated,
+    // length-normalized tf, rounded to micro-units per (doc, term)
+    def c(tf: Double, df: Double, dl: Double): Long = Math.round(
+      Math.log(1.0 + (3.0 - df + 0.5) / (df + 0.5)) * (tf * (k1 + 1.0)) /
+        (tf + k1 * ((1.0 - b) + b * dl / (9.0 / 3))) * 1e6)
+    assert(got === Map(
+      0L -> (1L, c(1, 2, 2)),
+      1L -> (2L, c(2, 2, 3) + c(1, 1, 3))))
+  }
+
   test("rrfFuse sums exact reciprocal-rank terms over a full outer join") {
     import spark.implicits._
     val l = Seq((10L, 1), (20L, 2)).toDF("id", "rnk")

@@ -56,6 +56,25 @@ class ExtSharedSpec extends SparkSpec {
     assert(value() === 2, "the value survived the clear")
   }
 
+  test("two threads asking for one unbuilt key build it once and share the value") {
+    val builds = new AtomicInteger(0)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val threads = (1 to 2).map(_ => new Thread(() => {
+      go.await()
+      got.add(ExtShared.shared(spark, d, "race-once") {
+        builds.incrementAndGet(); Thread.sleep(300); new AnyRef
+      })
+    }))
+    threads.foreach(_.start())
+    go.countDown()
+    threads.foreach(_.join(30000))
+    assert(builds.get === 1, s"the key was built ${builds.get} times")
+    assert(got.size === 2)
+    val values = got.toArray
+    assert(values(0) eq values(1), "the two threads got different values")
+  }
+
   test("sharedFrameTags lists a value entry under its dir-qualified tag") {
     ExtShared.shared(spark, d + "/", "tags-value")("v")
     assert(ExtShared.sharedFrameTags.contains("spec-dir:tags-value"))

@@ -1,5 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.sql.{Dataset, SparkSession}
+
+import graft.analyzer.{CriticalPath, SpanBuilder}
+import graft.ingest.ListenerBridge
+import graft.model.SchedulerEvent
 
 /** Benchmark main: runs every catalog query against SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query wall times.
@@ -76,9 +81,9 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] WARN: cannot open $partialPath: $e"); None
       }
-    def record(pass: String, key: String, sec: Double): Unit =
+    def record(pass: String, key: String, sec: Double, profile: String = ""): Unit =
       partial.foreach { w =>
-        w.println(f"""{"pass":"$pass","key":"$key","sec":$sec%.4f}""")
+        w.println(f"""{"pass":"$pass","key":"$key","sec":$sec%.4f$profile}""")
         w.flush()
       }
 
@@ -198,6 +203,22 @@ object Bench {
     // selective AQE twin keys off this, so an expensive frame build makes
     // its builder AQE-eligible even when the builder's own time is small.
     val rawSecs = scala.collection.mutable.Map.empty[String, Double]
+    // Per-key Spark accounting through the engine's own scheduler bridge:
+    // each timed key row of bench.partial.jsonl also carries the key's
+    // jobs, stages, tasks, summed task time and critical time (see
+    // keyProfile), so its wall time reads against the time it would take
+    // with unlimited cores. The fields cover the key's whole interval,
+    // including any shared frame builds it forced; frame rows carry none.
+    // Registered only now, after the warm-up pool drained, so parallel
+    // warm-up keys never mix their events; the timed passes run one key
+    // at a time, and the bus is drained and the bridge emptied before each.
+    val bridge = new ListenerBridge.SchedulerBridge()
+    spark.sparkContext.addSparkListener(bridge)
+    def drained(name: String): Boolean =
+      try { ListenerBusDrain(spark); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] WARN: listener bus not drained around $name: $e"); false
+      }
     def timedPass(passNames: Seq[String], passLabel: String,
                   stopEarly: () => Boolean = () => false)
         : (Seq[(String, Double)], List[String]) = {
@@ -214,6 +235,8 @@ object Bench {
         } else {
           val name = it.next()
           val before = graft.queries.ExtQueries.sharedFrameTags
+          drained(name)
+          bridge.evictBefore(Long.MaxValue)
           val t0 = System.nanoTime()
           val ok =
             try { SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -221,25 +244,27 @@ object Bench {
               System.err.println(s"[bench] $name failed: $e"); errors ::= name; false
             }
           val elapsed = (System.nanoTime() - t0) / 1e9
+          val profile = if (drained(name)) keyProfile(bridge.snapshot(spark)).json else ""
           rawSecs(name) = elapsed
           val newTags = (graft.queries.ExtQueries.sharedFrameTags -- before).toSeq.sorted
           newTags.foreach(tag => frameBuilders.getOrElseUpdate(tag, name))
           val builds = graft.queries.ExtQueries.sharedFrameBuildSecs
           val frameRows = newTags.map(tag => s"frame:$tag" -> builds.getOrElse(tag, 0.0))
           val own = math.max(0.0, elapsed - frameRows.map(_._2).sum)
-          val rows = frameRows :+ (name -> (if (ok) own else -1.0))
-          rows.foreach { case (k, v) => record(passLabel, k, v) }
-          results ++= rows
+          val keySec = if (ok) own else -1.0
+          frameRows.foreach { case (k, v) => record(passLabel, k, v) }
+          record(passLabel, name, keySec, profile)
+          results ++= frameRows :+ (name -> keySec)
         }
       }
       (results.toSeq, errors)
     }
-    def blockJson(results: Seq[(String, Double)], errors: List[String]): (Double, String) = {
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val errJson = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val total = results.collect { case (_, v) if v >= 0 => v }.sum
-      (total, s"""{"total":$total,"queries":$qs,"errors":$errJson}""")
-    }
+    def namesJson(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    /** (total, per-key map, sorted errors) of one pass, the last two as JSON. */
+    def passJson(results: Seq[(String, Double)], errors: List[String]): (Double, String, String) =
+      (results.collect { case (_, v) if v >= 0 => v }.sum,
+        results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"),
+        namesJson(errors.sorted))
     // Settle the heap before the first timed pass (the AQE pass gets the
     // same treatment below): the warm-up's allocations otherwise bill
     // their GC to whichever early queries trigger collection.
@@ -252,9 +277,7 @@ object Bench {
       val (r, e) = timedPass(names, "default", () => remaining < 150)
       results = r; errors = e
     }
-    val (total, _) = blockJson(results, errors)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val errJson = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val (total, qs, errJson) = passJson(results, errors)
     val budget = sys.env.getOrElse("SPARK_GRAFT_RETRY_BUDGET", "5.0").toDouble
     // AQE twin: the SAME queries re-timed with adaptive execution on (a
     // runtime SQL conf — same session, JIT already warm from the default
@@ -305,12 +328,11 @@ object Bench {
       }
     val aqeJson = aqeResultsOpt
       .map { case (r, e) =>
-        val (_, block) = blockJson(r, e)
+        val (t, q, err) = passJson(r, e)
         // Self-describing subset: the block records the selection floor and
         // how many of the catalog's keys were re-timed, so a reader never
         // mistakes the subset total for a whole-catalog AQE total.
-        block.dropRight(1) +
-          s""","min_default_sec":$aqeMin,"subset_keys":${aqeNames.size},"catalog_keys":${names.size}}"""
+        s"""{"total":$t,"queries":$q,"errors":$err,"min_default_sec":$aqeMin,"subset_keys":${aqeNames.size},"catalog_keys":${names.size}}"""
       }.getOrElse("null")
     // Budget adjudication: a one-pass-only budget violation on an
     // otherwise fast entry is the established load-noise signature (a
@@ -408,8 +430,7 @@ object Bench {
         val floorRows = floors
           .map { case (k, f) => s""""$k":${f"$f%.4f"}""" }.mkString("{", ",", "}")
         val overPairs = floors.filter { case (_, f) => f > budget }
-        val over = overPairs.map { case (k, _) => "\"" + k + "\"" }
-          .mkString("[", ",", "]")
+        val over = namesJson(overPairs.map(_._1))
         (if (retryRows.isEmpty) "null" else retryRows.mkString("{", ",", "}"),
           s"""{"budget":$budget,"floors":$floorRows,"over_budget":$over}""",
           overPairs)
@@ -441,7 +462,7 @@ object Bench {
     val framesJson = frameBuilders
       .map { case (tag, q) => "\"" + tag + "\":\"" + q + "\"" }
       .mkString("{", ",", "}")
-    val truncJson = truncated.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val truncJson = namesJson(truncated.toSeq)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"candidates":$candJson,"shared_frames":$framesJson,"aqe":$aqeJson,"retry":$retryJson,"adjudicated":$adjudicatedJson,"truncated":$truncJson,"wall_sec":${f"$elapsedS%.1f"},"sf":"$sfDir"}"""
     println(line)
     // Also persist the full per-query map to a file: the driver's captured
@@ -458,15 +479,32 @@ object Bench {
     // adjudicated over-budget floors, wall — in well under 1 KB so a tail
     // capture always holds at least one complete, parseable JSON line. The
     // per-key map stays in the full line above and in bench.json.
-    val errCompact = errors.sorted.take(20).map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    val overCompact = overBudget.take(24)
-      .map { case (k, _) => "\"" + k + "\"" }.mkString("[", ",", "]")
+    val errCompact = namesJson(errors.sorted.take(20))
+    val overCompact = namesJson(overBudget.take(24).map(_._1))
     val floorCompact = overBudget.take(24)
       .map { case (k, f) => s""""$k":${f"$f%.2f"}""" }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_keys":${results.size},"n_errors":${errors.size},"errors":$errCompact,"budget":$budget,"over_budget":$overCompact,"floors":$floorCompact,"truncated":$truncJson,"wall_sec":${f"$elapsedS%.1f"},"detail":"$out","sf":"$sfDir"}""")
     partial.foreach(_.close())
+    spark.sparkContext.removeSparkListener(bridge)
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
+  }
+
+  /** One key's Spark work, folded from its scheduler-bridge rows. */
+  private[graft] final case class KeyProfile(jobs: Int, stages: Int, tasks: Long,
+                                             taskMs: Long, criticalMs: Long) {
+    /** The row fields, each after a leading comma. */
+    def json: String =
+      s""","jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_ms":$taskMs,"critical_ms":$criticalMs"""
+  }
+
+  /** Completed jobs and stages, Σ tasks, Σ task time, and Σ over jobs of
+    * the job's critical time (its longest-task path through its stage DAG),
+    * the definition perfbench's SparkAccounting.criticalMs uses. */
+  private[graft] def keyProfile(events: Dataset[SchedulerEvent]): KeyProfile = {
+    val stages = SpanBuilder.stageSpans(events).collect().toSeq
+    KeyProfile(SpanBuilder.jobSpans(events).collect().length, stages.size,
+      stages.map(_.numTasks.toLong).sum, stages.map(_.totalTaskDurationMs).sum,
+      stages.groupBy(_.jobId).values.map(CriticalPath.criticalTimeOfStages).sum)
   }
 }

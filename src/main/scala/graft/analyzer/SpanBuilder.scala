@@ -48,9 +48,11 @@ object SpanBuilder {
     * the sum of their `totalDurationMs`, where a per-task row (None) counts
     * its `durationMs`. So per-task rows from a replay file and the live
     * bridge's per-(stage, executor) rows give the same span. Stage→job comes
-    * from the jobStart's stageIds (T3 `stageIDToJobID`): a stage listed by
-    * two jobs yields one span per job. Stages without both a submission and
-    * a completion event are dropped, as in [[jobSpans]]. */
+    * from the jobStart's stageIds (T3 `stageIDToJobID`) and is single-valued:
+    * Spark also lists skipped stages (reused shuffle output), so a stage
+    * listed by several jobs belongs to the earliest of them by (time, jobId),
+    * the one that ran it. Stages without both a submission and a completion
+    * event are dropped, as in [[jobSpans]]. */
   def stageSpans(events: Dataset[SchedulerEvent]): Dataset[StageSpan] = {
     import events.sparkSession.implicits._
     val all = events.collect().toSeq
@@ -68,11 +70,14 @@ object SpanBuilder {
           yield stageId -> StageSpan(stageId, -1L, start, end, parents,
             es.map(_.numTasks.getOrElse(0)).max, maxTask, totalTask)
       }
-    val spans = for {
-      e <- all if e.kind == "jobStart" && e.jobId.isDefined && e.stageIds != null
-      stageId <- e.stageIds
-      span <- byStage.get(stageId)
-    } yield span.copy(jobId = e.jobId.get)
+    val stageJob = all
+      .filter(e => e.kind == "jobStart" && e.jobId.isDefined && e.stageIds != null)
+      .sortBy(e => (e.time, e.jobId.get))
+      .flatMap(e => e.stageIds.map(_ -> e.jobId.get))
+      .groupMapReduce(_._1)(_._2)((first, _) => first)
+    val spans = byStage.toSeq.sortBy(_._1).flatMap { case (stageId, span) =>
+      stageJob.get(stageId).map(jobId => span.copy(jobId = jobId))
+    }
     events.sparkSession.createDataset(spans)
   }
 

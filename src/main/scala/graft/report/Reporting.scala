@@ -138,8 +138,7 @@ object Reporting {
         |  Recommendation:   ${a.recommendation}""".stripMargin
 
   /** Driver-log pretty block for one analysis
-    * (ref `QueryInsightsManager.scala:206-232`); formatted server-side with
-    * format_string, collected only for logging at the API edge. */
+    * (ref `QueryInsightsManager.scala:206-232`), formatted on the driver. */
   def logBlock(r: CriticalPathResult): String = {
     def fmt(v: Long) = "%02ds %03dms".format(v / 1000, v % 1000)
     s"""|StreamingLens report - query ${r.queryId} batch ${r.batchId}

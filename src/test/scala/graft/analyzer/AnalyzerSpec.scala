@@ -215,22 +215,45 @@ class AnalyzerSpec extends SparkSpec {
     assert(got === Seq("ex1"))
   }
 
-  test("a stage listed in two jobs' stageIds yields one StageSpan per job") {
+  test("a stage listed in two jobs' stageIds belongs to the earlier job") {
     import spark.implicits._
-    // J1 [0,500] runs stages 0 -> 1; J2 [600,1000] lists stage 1 again and
-    // runs stage 2 on top of it. Critical times: J1 = 200 + 300 = 500,
-    // J2 = 400 + 300 (stage 0 is outside J2) = 700. Serial islands 500 +
-    // 400 = 900, brt 2000 => ct = 2000 - 900 + 500 + 700 = 2300.
+    // J1 [0,500] runs stages 0 -> 1; J2 [600,1000] lists stage 1 again (a
+    // skipped, reused stage) and runs stage 2 on top of it. Stage 1 is J1's
+    // only. Critical times: J1 = 200 + 300 = 500, J2 = 400 (stage 1 is
+    // outside J2). Serial islands 500 + 400 = 900, brt 2000 => ct =
+    // 2000 - 900 + 500 + 400 = 2000.
     val events = job(1, 0, 500, stageIds = Seq(0, 1)) ++
       job(2, 600, 1000, stageIds = Seq(1, 2)) ++
       stage(0, 0, 200, 200) ++ stage(1, 200, 500, 300, Seq(0)) ++
       stage(2, 600, 1000, 400, Seq(1))
     val spans = SpanBuilder.stageSpans(events.toDS()).collect()
     assert(spans.map(s => (s.stageId, s.jobId)).sorted.toSeq ===
-      Seq((0, 1L), (1, 1L), (1, 2L), (2, 2L)))
+      Seq((0, 1L), (1, 1L), (2, 2L)))
     val r = analyze(events, Seq(progress("q", 9, rows = 2000, rps = 1000.0)),
       Seq(QuerySla("q", 10000)))(("q", 9))
-    assert(r.criticalTime === 2300L)
+    assert(r.criticalTime === 2000L)
+  }
+
+  test("no job's critical time exceeds its span when a later job lists an earlier job's stages") {
+    import spark.implicits._
+    // An AQE-like chain: each job lists every stage before it and runs one
+    // new stage on top. J4 starts at J3's start time, so the tie falls to
+    // the lower job id: stage 3 is J3's.
+    val events = job(1, 0, 500, stageIds = Seq(0, 1)) ++
+      job(2, 600, 1000, stageIds = Seq(0, 1, 2)) ++
+      job(3, 1100, 1300, stageIds = Seq(0, 1, 2, 3)) ++
+      job(4, 1100, 1400, stageIds = Seq(0, 1, 2, 3, 4)) ++
+      stage(0, 0, 200, 200) ++ stage(1, 200, 500, 300, Seq(0)) ++
+      stage(2, 600, 1000, 400, Seq(1)) ++ stage(3, 1100, 1300, 150, Seq(2)) ++
+      stage(4, 1300, 1400, 90, Seq(3))
+    val ds = events.toDS()
+    val stages = SpanBuilder.stageSpans(ds)
+    assert(stages.collect().map(s => (s.stageId, s.jobId)).sorted.toSeq ===
+      Seq((0, 1L), (1, 1L), (2, 2L), (3, 3L), (4, 4L)))
+    val spanMs = SpanBuilder.jobSpans(ds).collect().map(j => j.jobId -> (j.endTime - j.startTime)).toMap
+    val critical = CriticalPath.perJob(stages).collect().toMap
+    assert(critical === Map(1L -> 500L, 2L -> 400L, 3L -> 150L, 4L -> 90L))
+    critical.foreach { case (jobId, ct) => assert(ct <= spanMs(jobId), s"job $jobId") }
   }
 
   test("a job or stage without its end event is dropped") {

@@ -45,7 +45,7 @@ class CriticalPathSpec extends SparkSpec {
     assert(CriticalPath.criticalTimeOfStages(stages) === 30L)
   }
 
-  test("distributed perJob matches the pure fold") {
+  test("perJob folds each job's stages by the pure fold") {
     import spark.implicits._
     val stages = Seq(
       stage(0, Nil, 100, jobId = 1), stage(1, Seq(0), 200, jobId = 1),

@@ -3,7 +3,7 @@ package graft.api
 import graft.SparkSpec
 import graft.config.GraftConfig
 import graft.ingest.ListenerBridge
-import org.apache.spark.graft.{GraftMetricsSource, SparkTestHooks}
+import org.apache.spark.graft.{GraftMetricsSource, ListenerBusDrain, SparkTestHooks}
 import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -56,7 +56,7 @@ class StreamingGraftSpec extends SparkSpec {
       } finally query.stop()
       // the listener bus is asynchronous: wait until the bridges hold every
       // event of the stopped query
-      SparkTestHooks.drainListenerBus(spark)
+      ListenerBusDrain(spark)
       val results = graft.analyzeNow().collect()
       assert(results.nonEmpty, "no batches analyzed - listeners captured nothing")
       assert(results.forall(_.queryId.nonEmpty))
@@ -82,7 +82,7 @@ class StreamingGraftSpec extends SparkSpec {
         mem.addData(1 to 500: _*)
         query.processAllAvailable()
       } finally query.stop()
-      SparkTestHooks.drainListenerBus(spark)
+      ListenerBusDrain(spark)
       val t0 = System.nanoTime()
       g.analyzeNow()
       val wallMs = (System.nanoTime() - t0) / 1e6
@@ -143,7 +143,7 @@ class StreamingGraftSpec extends SparkSpec {
         mem.addData(501 to 1000: _*)
         query.processAllAvailable()
       } finally query.stop()
-      SparkTestHooks.drainListenerBus(spark)
+      ListenerBusDrain(spark)
       assert(g.analyzeNow().collect().nonEmpty, "no batches analyzed")
       // repeated analyses re-buffer the same batches: the ring must cap AND
       // hold at most one row per (queryId, batchId) so the discounted report
@@ -254,7 +254,7 @@ class StreamingGraftSpec extends SparkSpec {
       val q = mem.toDS().map(_ * 2).writeStream.format("memory")
         .queryName("full_loop").outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-      SparkTestHooks.drainListenerBus(spark)
+      ListenerBusDrain(spark)
       // Every tick from here on sees all of the stopped query's telemetry.
       val ticker = _root_.graft.streaming.StreamingOps.analysisTicker(spark, 1) { () =>
         firstTick.complete(g.analyzeGuarded().collect().toSeq

@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
-import graft.analyzer.{CriticalPath, SpanBuilder}
+import graft.analyzer.{BatchAnalyzer, SpanBuilder}
 import graft.ingest.ListenerBridge
 import graft.model.SchedulerEvent
 
@@ -53,23 +53,7 @@ object Bench {
     }
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // Same SPARK_GRAFT_CONF passthrough as Verify (sbt forks this JVM, so
-    // -D flags never arrive): lets a bench run toggle AQE/ANSI/etc.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, cpus) = LocalSession(defaultCores = 32, logLevel = "WARN")
 
     // Incremental per-key persistence: one JSONL row per measurement,
     // flushed immediately — rc != 0 (a driver kill) still leaves every
@@ -138,7 +122,7 @@ object Bench {
       // SPARK_GRAFT_CPUS keeps the driver's lower-core runs proportional.
       val nThreads = math.max(1,
         sys.env.get("SPARK_GRAFT_WARM_THREADS").map(_.toInt)
-          .getOrElse(math.max(4, cpus.toInt * 7 / 8)))
+          .getOrElse(math.max(4, cpus * 7 / 8)))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
       val tasks = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(p => selected(p._1)).map { case (name, q) =>
@@ -244,7 +228,9 @@ object Bench {
               System.err.println(s"[bench] $name failed: $e"); errors ::= name; false
             }
           val elapsed = (System.nanoTime() - t0) / 1e9
-          val profile = if (drained(name)) keyProfile(bridge.snapshot(spark)).json else ""
+          val profile =
+            if (drained(name)) keyProfile(bridge.snapshot(spark), math.round(elapsed * 1000)).json
+            else ""
           rawSecs(name) = elapsed
           val newTags = (graft.queries.ExtQueries.sharedFrameTags -- before).toSeq.sorted
           newTags.foreach(tag => frameBuilders.getOrElseUpdate(tag, name))
@@ -498,13 +484,15 @@ object Bench {
       s""","jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_ms":$taskMs,"critical_ms":$criticalMs"""
   }
 
-  /** Completed jobs and stages, Σ tasks, Σ task time, and Σ over jobs of
-    * the job's critical time (its longest-task path through its stage DAG),
-    * the definition perfbench's SparkAccounting.criticalMs uses. */
-  private[graft] def keyProfile(events: Dataset[SchedulerEvent]): KeyProfile = {
+  /** Completed jobs and stages, Σ tasks, Σ task time, and the critical
+    * time of the key: its interval of `wallMs` folded as one batch by
+    * [[BatchAnalyzer.criticalFold]], so time outside jobs counts in full
+    * and overlapping jobs count once, and critical_ms ≤ wall. */
+  private[graft] def keyProfile(events: Dataset[SchedulerEvent], wallMs: Long): KeyProfile = {
+    val jobs = SpanBuilder.jobSpans(events).collect().toSeq
     val stages = SpanBuilder.stageSpans(events).collect().toSeq
-    KeyProfile(SpanBuilder.jobSpans(events).collect().length, stages.size,
-      stages.map(_.numTasks.toLong).sum, stages.map(_.totalTaskDurationMs).sum,
-      stages.groupBy(_.jobId).values.map(CriticalPath.criticalTimeOfStages).sum)
+    KeyProfile(jobs.size, stages.size, stages.map(_.numTasks.toLong).sum,
+      stages.map(_.totalTaskDurationMs).sum,
+      BatchAnalyzer.criticalFold(jobs, stages, wallMs).criticalTime)
   }
 }

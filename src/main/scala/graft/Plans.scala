@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture main for the optimization rounds: writes
   * `.explain("formatted")` of selected catalog queries to files, so plan
   * claims in OPTIMIZATION_rNN.md are checkable without running Spark.
@@ -17,15 +15,7 @@ object Plans {
     require(args.length == 4, "usage: Plans <sfDir> <outDir> <suffix> <keys,csv>")
     val Array(sfDir, outDir, suffix, keysCsv) = args
     val keys = keysCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (spark, _) = LocalSession(defaultCores = 32, logLevel = "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { k =>
       SparkEntry.queries.get(k) match {

@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // Extra confs for local robustness runs (e.g. "spark.sql.ansi
-    // .enabled=false;..."): sbt forks the run JVM, so -D flags on the sbt
-    // command line never reach it — an env var does.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, _) = LocalSession(defaultCores = 4, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: SPARK_GRAFT_ONLY="x66,x67" runs only queries
     // whose name starts with one of the prefixes. Unset (the driver) = all.

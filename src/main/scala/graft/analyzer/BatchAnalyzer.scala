@@ -28,7 +28,8 @@ import graft.ops.Classify
   *      (ref `analyzer/StreamingQueryAnalyzer.scala:118-128`).
   *
   * Steps 1–4 fold the collected span tables on the driver (they are
-  * driver-resident, see [[SpanBuilder]]); step 5 keeps the Column
+  * driver-resident, see [[SpanBuilder]]); steps 2–4 are [[criticalFold]],
+  * which [[estimateAt]] and the catalog bench read too; step 5 keeps the Column
   * classifiers, applied as a projection over the folded rows, which Spark
   * evaluates on the driver without a job.
   */
@@ -40,11 +41,26 @@ object BatchAnalyzer {
       when(state === name, ord).otherwise(acc)
     }
 
-  /** One serial island: its wall-clock span, its critical-path bound (max
-    * per-job critical time — the infinite-executor floor), and its total
-    * task time (the work the executors must absorb — the throughput
+  /** One serial island: its wall-clock span, its critical time (max
+    * per-job critical time — the unlimited-executor floor), and its total
+    * task time (the work the task slots must absorb — the throughput
     * bound's numerator). */
-  private final case class Island(span: Long, criticalPath: Long, taskTime: Long)
+  final case class Island(span: Long, criticalTime: Long, taskTime: Long)
+
+  /** A job set's time split by steps 2–4: `serial` = brt − Σ island span,
+    * the time outside jobs (negative when the jobs' spans outrun brt), and
+    * the serial islands. The one fold behind [[analyze]], [[estimateAt]]
+    * and the catalog bench's per-key critical time. */
+  final case class CriticalFold(serial: Long, islands: Seq[Island]) {
+    /** Step 4: the time with unlimited executors. */
+    def criticalTime: Long = serial + islands.map(_.criticalTime).sum
+
+    /** The time on `slots` task slots: each island takes at least its
+      * critical time and at least its task time spread over the slots. */
+    def estimateAt(slots: Int): Long =
+      serial + islands.map(i => math.max(i.criticalTime,
+        math.ceil(i.taskTime.toDouble / slots).toLong)).sum
+  }
 
   /** Serial islands of overlapping jobs: in (start, jobId) order, a job
     * opens a new island when it starts after the running max end of every
@@ -61,29 +77,38 @@ object BatchAnalyzer {
     islands.toSeq
   }
 
-  /** The island decomposition both [[analyze]] and [[estimateAt]] read,
-    * computed by one fold so the two cannot drift: jobs of streaming
-    * batches, grouped by (queryId, batchId, sql-execution group), split
-    * into serial islands; keyed by (queryId, batchId). */
-  private def islandsByBatch(jobs: Dataset[JobSpan],
-                             stages: Dataset[StageSpan]): Map[(String, Long), Seq[Island]] = {
-    val perJob = stages.collect().toSeq.groupBy(_.jobId).map { case (jobId, ss) =>
-      jobId -> (CriticalPath.criticalTimeOfStages(ss), ss.map(_.totalTaskDurationMs).sum)
-    }
-    jobs.collect().toSeq
-      .collect { case j @ JobSpan(_, _, _, sqlExec, Some(q), Some(b)) =>
-        // null sql-execution id ⇒ the job is its own group
-        (q, b, sqlExec.toRight(j.jobId)) -> j
+  /** Steps 2–4 over one job set whose wall is `brt`: jobs grouped by
+    * sql-execution id (null ⇒ its own group), each group split into serial
+    * islands; `stages` are the jobs' stage spans (stages of other jobs are
+    * ignored). A wall of 0 (no progress) has nothing to explain and folds
+    * to no time at all. */
+  def criticalFold(jobs: Seq[JobSpan], stages: Seq[StageSpan], brt: Long): CriticalFold =
+    if (brt == 0L) CriticalFold(0L, Nil)
+    else {
+      val perJob = stages.groupBy(_.jobId).map { case (jobId, ss) =>
+        jobId -> (CriticalPath.criticalTimeOfStages(ss), ss.map(_.totalTaskDurationMs).sum)
       }
-      .groupMap(_._1)(_._2).toSeq
-      .flatMap { case ((q, b, _), group) =>
-        splitIslands(group).map { island =>
+      val islands = jobs.groupBy(j => j.sqlExecutionId.toRight(j.jobId)).values.toSeq
+        .flatMap(splitIslands)
+        .map { island =>
           val (ct, work) = island.map(j => perJob.getOrElse(j.jobId, (0L, 0L))).unzip
-          (q, b) -> Island(island.map(_.endTime).max - island.map(_.startTime).min,
-            ct.max, work.sum)
+          Island(island.map(_.endTime).max - island.map(_.startTime).min, ct.max, work.sum)
         }
-      }
+      CriticalFold(brt - islands.map(_.span).sum, islands)
+    }
+
+  /** [[criticalFold]] of a progress row's batch: the jobs of streaming
+    * batches grouped by (queryId, batchId), with their stages. */
+  private def batchFold(jobs: Dataset[JobSpan],
+                        stages: Dataset[StageSpan]): BatchProgress => CriticalFold = {
+    val stagesOf = stages.collect().toSeq.groupBy(_.jobId)
+    val jobsOf = jobs.collect().toSeq
+      .collect { case j @ JobSpan(_, _, _, _, Some(q), Some(b)) => (q, b) -> j }
       .groupMap(_._1)(_._2)
+    p => {
+      val js = jobsOf.getOrElse((p.queryId, p.batchId), Nil)
+      criticalFold(js, js.flatMap(j => stagesOf.getOrElse(j.jobId, Nil)), batchRunningTime(p))
+    }
   }
 
   /** Batch running time from progress (ref StreamingQueryAnalyzer:118-129),
@@ -105,18 +130,14 @@ object BatchAnalyzer {
               highFrac: Double = 0.7): Dataset[CriticalPathResult] = {
     val spark = jobs.sparkSession
     import spark.implicits._
-    val islands = islandsByBatch(jobs, stages)
+    val foldOf = batchFold(jobs, stages)
     val slaOf = slas.collect().toSeq.groupMap(_.queryIdent)(_.slaMillis)
     val rows = for {
       p <- progress.collect().toSeq
+      criticalTime = foldOf(p).criticalTime
       sla <- slaOf.getOrElse(p.queryId, Seq(defaultSlaMillis))
-    } yield {
-      val brt = batchRunningTime(p)
-      val is = islands.getOrElse((p.queryId, p.batchId), Nil)
-      val criticalTime =
-        if (brt == 0L) 0L else brt - is.map(_.span).sum + is.map(_.criticalPath).sum
-      (p.queryId, p.batchId, sla, brt, criticalTime, p.numInputRows, p.processedRowsPerSecond)
-    }
+    } yield (p.queryId, p.batchId, sla, batchRunningTime(p), criticalTime, p.numInputRows,
+      p.processedRowsPerSecond)
     val state =
       when(col("numInputRows") === 0 || col("processedRowsPerSecond") === 0, "NONEWBATCHES")
         .otherwise(Classify.slaState(col("batchRunningTime"), col("criticalTime"),
@@ -129,61 +150,47 @@ object BatchAnalyzer {
       .as[CriticalPathResult]
   }
 
-  /** Executor-count what-if — the capacity-planning read beside critical
-    * time: the estimated batch running time were the SAME batch run on
-    * `n` executors, for every `n` in `executorCounts`. The sparklens
-    * completion-estimate model applied per batch:
+  /** Capacity what-if — the planning read beside critical time: the
+    * estimated batch running time were the SAME batch run on `n` task
+    * slots, for every `n` in `slotCounts`. The sparklens completion-
+    * estimate model applied per batch through [[criticalFold]]:
     *
-    *   estimate(n) = serialTime
-    *               + Σ_islands max(islandCriticalPath,
-    *                               ⌈islandTaskTime / (n · coresPerExec)⌉)
+    *   estimate(n) = serial + Σ_islands max(islandCriticalTime,
+    *                                        ⌈islandTaskTime / n⌉)
     *
-    * where serialTime = max(brt − Σ islandSpan, 0) is the driver/out-of-
-    * job fraction executors cannot help with; each island's wall clock is
-    * bounded BELOW by its critical path (with infinite executors every
-    * dependent stage still serializes and each stage still pays its
-    * longest task) and bounded by THROUGHPUT (n·cores task-slots must
-    * absorb the island's total task milliseconds); and coresPerExec is
-    * the observed per-executor core count (the rounded mean over the
-    * executor table — heterogeneous fleets average; no executor telemetry
-    * → 1). Estimates are monotone non-increasing in `n` and converge to
-    * serialTime + Σ islandCriticalPath — the same floor [[analyze]]'s
-    * criticalTime reports, which is what makes the two reads one story:
-    * criticalTime says how low the batch could go, estimateAt says how
-    * many executors buy how much of that gap.
+    * where serial = brt − Σ islandSpan is the driver/out-of-job time task
+    * slots cannot help with; each island's wall clock is bounded BELOW by
+    * its critical time (with unlimited slots every dependent stage still
+    * serializes and each stage still pays its longest task) and by
+    * THROUGHPUT (n slots must absorb the island's total task
+    * milliseconds). Estimates are monotone non-increasing in `n`, and once
+    * n · islandCriticalTime ≥ islandTaskTime for every island (n ≥ the
+    * batch's total task time, when every island that ran tasks has a
+    * critical time) they equal [[analyze]]'s criticalTime, the same
+    * fold's floor: criticalTime says how low the
+    * batch could go, estimateAt says how many slots buy how much of that
+    * gap. Slots, not executors: a slot count is executors × cores per
+    * executor, which the caller knows.
     *
-    * Output: (queryId, batchId, nExecutors, estimateMs,
-    * batchRunningTime), long format — one row per progress row per asked
-    * count, from the same island fold as [[analyze]]. */
+    * Output: (queryId, batchId, nSlots, estimateMs, batchRunningTime),
+    * long format — one row per progress row per asked count. */
   def estimateAt(jobs: Dataset[JobSpan],
                  stages: Dataset[StageSpan],
                  progress: Dataset[BatchProgress],
-                 executors: Dataset[ExecutorSpan],
-                 executorCounts: Seq[Int]): DataFrame = {
-    require(executorCounts.nonEmpty && executorCounts.forall(_ >= 1),
-      s"estimateAt needs positive executor counts; got $executorCounts")
+                 slotCounts: Seq[Int]): DataFrame = {
+    require(slotCounts.nonEmpty && slotCounts.forall(_ >= 1),
+      s"estimateAt needs positive slot counts; got $slotCounts")
     val spark = jobs.sparkSession
     import spark.implicits._
-    // Observed cores per executor: rounded mean over executors that
-    // reported cores; a fleet with no executor telemetry estimates at
-    // 1 core/executor (pessimistic, stated in the scaladoc).
-    val cores = executors.collect().map(_.cores).filter(_ > 0)
-    val coresPerExec =
-      if (cores.isEmpty) 1 else math.round(cores.map(_.toLong).sum.toDouble / cores.length).toInt
-    val islands = islandsByBatch(jobs, stages)
+    val foldOf = batchFold(jobs, stages)
     // Every asked count appears for every batch in `progress`, even batches
     // with no recorded jobs (their estimate is brt itself — all serial as
     // far as telemetry can see).
     val rows = for {
       p <- progress.collect().toSeq
-      n <- executorCounts.distinct.sorted
-    } yield {
-      val brt = batchRunningTime(p)
-      val is = islands.getOrElse((p.queryId, p.batchId), Nil)
-      val jobsEstimate = is.map(i => math.max(i.criticalPath,
-        math.ceil(i.taskTime.toDouble / (n.toDouble * coresPerExec)).toLong)).sum
-      (p.queryId, p.batchId, n, math.max(brt - is.map(_.span).sum, 0L) + jobsEstimate, brt)
-    }
-    rows.toDF("queryId", "batchId", "nExecutors", "estimateMs", "batchRunningTime")
+      fold = foldOf(p)
+      n <- slotCounts.distinct.sorted
+    } yield (p.queryId, p.batchId, n, fold.estimateAt(n), batchRunningTime(p))
+    rows.toDF("queryId", "batchId", "nSlots", "estimateMs", "batchRunningTime")
   }
 }

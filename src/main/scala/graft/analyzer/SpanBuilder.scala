@@ -1,21 +1,21 @@
 package graft.analyzer
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import graft.model._
 
-/** Builds the span tables (T1/T2/T6 of SURVEY.md §1.1) from raw scheduler
+/** Builds the span tables (T1/T2 of SURVEY.md §1.1) from raw scheduler
   * events — the reference's listener handlers mutating
   * `StreamingAppTracker`'s maps (ref `listener/StreamingAppListener.scala:39-217`)
   * re-expressed over retained rows.
   *
-  * The live-path builders ([[jobSpans]], [[stageSpans]], [[batchProgress]])
-  * collect their input and fold it on the driver, where the telemetry
+  * The builders ([[jobSpans]], [[stageSpans]], [[batchProgress]]) collect
+  * their input and fold it on the driver, where the telemetry
   * already lives: the listener bridges cap it at 2^20 scheduler and 2^16
   * progress rows, and the replay file sources feed the same functions
   * under the same bound. Their results come back as local Datasets, so a
   * downstream projection runs on the driver without a Spark job. The
-  * executor tables stay Dataset plans.
+  * bridges' executorAdded/executorRemoved rows (T6) have no builder: the
+  * capacity what-if counts task slots, not executors.
   */
 object SpanBuilder {
 
@@ -79,57 +79,6 @@ object SpanBuilder {
       stageJob.get(stageId).map(jobId => span.copy(jobId = jobId))
     }
     events.sparkSession.createDataset(spans)
-  }
-
-  /** Executor spans (ref `StreamingAppListener.scala:194-217`). */
-  def executorSpans(events: Dataset[SchedulerEvent]): Dataset[ExecutorSpan] = {
-    import events.sparkSession.implicits._
-    events.toDF()
-      .filter(col("kind").isin("executorAdded", "executorRemoved") &&
-        col("executorId").isNotNull)
-      .groupBy(col("executorId"))
-      .agg(
-        max(col("host")).as("host"),
-        max(coalesce(col("cores"), lit(0))).as("cores"),
-        min(when(col("kind") === "executorAdded", col("time"))).as("startTime"),
-        max(when(col("kind") === "executorRemoved", col("time"))).as("endTime"))
-      .select(col("executorId"), col("host"), col("cores"),
-        col("startTime"), col("endTime"))
-      .as[ExecutorSpan]
-  }
-
-  /** Job→executor bridge rows (T5 `jobIdToExecutorId`,
-    * ref `StreamingAppTracker.scala:37`): which executors ran tasks of which
-    * job, from taskEnd events resolved through the stage→job mapping. */
-  def jobExecutors(events: Dataset[SchedulerEvent]): DataFrame = {
-    val stageToJob = events.toDF()
-      .filter(col("kind") === "jobStart")
-      .select(col("jobId"), explode(col("stageIds")).as("stageId"))
-    events.toDF()
-      .filter(col("kind") === "taskEnd" &&
-        col("executorId").isNotNull && col("stageId").isNotNull)
-      .select(col("stageId"), col("executorId"))
-      .join(stageToJob, "stageId")
-      .select(col("jobId"), col("executorId"))
-      .distinct()
-  }
-
-  /** Executors active in one batch — the reference's semi-join chain
-    * (ref `common/MicroBatchContext.scala:96-99,123-129`): executors whose
-    * id appears among the batch's jobs' executors. */
-  def batchExecutors(executors: Dataset[ExecutorSpan], jobs: Dataset[JobSpan],
-                     jobExec: DataFrame, queryId: String,
-                     batchId: Long): Dataset[ExecutorSpan] = {
-    import executors.sparkSession.implicits._
-    val batchJobs = jobs.toDF()
-      .filter(col("queryId") === queryId && col("batchId") === batchId)
-      .select(col("jobId"))
-    executors.toDF()
-      .join(
-        jobExec.join(batchJobs, Seq("jobId"), "left_semi")
-          .select(col("executorId")),
-        Seq("executorId"), "left_semi")
-      .as[ExecutorSpan]
   }
 
   /** Batch progress rows from the progress stream

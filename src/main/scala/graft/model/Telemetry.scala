@@ -57,7 +57,7 @@ case class JobSpan(
 
 /** One stage's span + the longest single task in it (ref T2 `stageMap`,
   * sparklens `StageTimeSpan`; max task time feeds the critical path;
-  * total task time feeds the executor-count what-if — defaulted so
+  * total task time feeds the task-slot what-if — defaulted so
   * pre-existing construction sites and serialized spans stay valid). */
 case class StageSpan(
     stageId: Int,
@@ -68,14 +68,6 @@ case class StageSpan(
     numTasks: Int,
     maxTaskDurationMs: Long,
     totalTaskDurationMs: Long = 0L)
-
-/** One executor's lifetime (ref T6 `executorMap`). */
-case class ExecutorSpan(
-    executorId: String,
-    host: String,
-    cores: Int,
-    startTime: Long,
-    endTime: Option[Long])
 
 /** Per-query SLA config row (ref T8 `expectedMicroBatchSLAMap`). */
 case class QuerySla(queryIdent: String, slaMillis: Long)

@@ -14,15 +14,15 @@ object Reporting {
   /** Exponentially-discounted health score per query over recent batch
     * states: newest batch weight 1, then `discount`, `discount²`, …
     * (ref `StreamingLensReportingHelper.scala:180-197`). NONEWBATCHES
-    * (ordinal 0) batches and batches already reported are excluded
-    * (ref `:181-182`). A driver fold over the collected results, summed
-    * newest first. */
+    * (ordinal 0) batches are excluded (ref `:181-182`; batches already
+    * reported are the caller's to drop, per query, as
+    * `StreamingGraft.reportNow` does). A driver fold over the collected
+    * results, summed newest first. */
   def discountedScore(results: Dataset[CriticalPathResult],
-                      discount: Double = 0.95,
-                      lastReportedBatch: Long = -1L): DataFrame = {
+                      discount: Double = 0.95): DataFrame = {
     import results.sparkSession.implicits._
     results.collect().toSeq
-      .filter(r => r.stateOrdinal != 0 && r.batchId > lastReportedBatch)
+      .filter(_.stateOrdinal != 0)
       .groupBy(_.queryId).toSeq
       .map { case (queryId, rs) =>
         val weights = rs.indices.map(i => math.pow(discount, i))
@@ -64,13 +64,12 @@ object Reporting {
     * Spark evaluates on the driver. */
   def aggregate(results: Dataset[CriticalPathResult],
                 sourcesByQuery: DataFrame, // (queryId, sourcesDesc)
-                discount: Double = 0.95,
-                lastReportedBatch: Long = -1L): Dataset[AggregateStateResult] = {
+                discount: Double = 0.95): Dataset[AggregateStateResult] = {
     import results.sparkSession.implicits._
     val sourcesOf = sourcesByQuery.select(col("queryId"), col("sourcesDesc")).collect().toSeq
       .groupMap(_.getString(0))(_.getString(1))
     val rows = for {
-      score <- discountedScore(results, discount, lastReportedBatch).collect().toSeq
+      score <- discountedScore(results, discount).collect().toSeq
       sourcesDesc <- sourcesOf.getOrElse(score.getString(0), Seq(null))
     } yield (score.getString(0), score.getDouble(1), sourcesDesc)
     val state = Classify.aggregateState(col("score"))

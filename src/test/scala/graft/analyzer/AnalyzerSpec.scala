@@ -144,75 +144,79 @@ class AnalyzerSpec extends SparkSpec {
     assert(r.expectedMicroBatchSLA === 120000L)
   }
 
+  // One batch ("q", 7), one job [0, 3000] (islandSpan 3000), brt 4000
+  // => serial = 1000. Two serial stages: stage 0 has 4×1000ms tasks
+  // (max 1000, total 4000), stage 1 has 500+300 (max 500, total 800)
+  // => criticalTime of the island = 1500, its task time = 4800.
+  private val whatIfBatch = Seq(
+    ev("jobStart", 0, jobId = Some(1), stageIds = Seq(0, 1),
+      sqlExecutionId = Some(11), queryId = Some("q"), batchId = Some(7)),
+    ev("stageSubmitted", 0, stageId = Some(0)),
+    ev("taskEnd", 900, stageId = Some(0), durationMs = Some(1000)),
+    ev("taskEnd", 950, stageId = Some(0), durationMs = Some(1000)),
+    ev("taskEnd", 1900, stageId = Some(0), durationMs = Some(1000)),
+    ev("taskEnd", 1950, stageId = Some(0), durationMs = Some(1000)),
+    ev("stageCompleted", 2000, stageId = Some(0)),
+    ev("stageSubmitted", 2000, stageId = Some(1), parents = Seq(0)),
+    ev("taskEnd", 2600, stageId = Some(1), durationMs = Some(500)),
+    ev("taskEnd", 2700, stageId = Some(1), durationMs = Some(300)),
+    ev("stageCompleted", 2900, stageId = Some(1)),
+    ev("jobEnd", 3000, jobId = Some(1)))
+
   test("estimateAt: throughput-bound at small n, critical-path floor at large n, serial fraction never scales") {
     import spark.implicits._
-    // One batch ("q", 7), one job [0, 3000] (islandSpan 3000), brt 4000
-    // => serial = 1000. Two serial stages: stage 0 has 4×1000ms tasks
-    // (max 1000, total 4000), stage 1 has 500+300 (max 500, total 800)
-    // => criticalPath = 1500, totalTaskTime = 4800. Two 2-core executors
-    // => coresPerExec = 2. So:
-    //   n=1: 1000 + max(1500, ceil(4800/2))  = 1000 + 2400 = 3400
-    //   n=2: 1000 + max(1500, ceil(4800/4))  = 1000 + 1500 = 2500
-    //   n=4: 1000 + max(1500, ceil(4800/8))  = 1000 + 1500 = 2500 (floor)
+    // Batch ("q", 7) of whatIfBatch, on n task slots:
+    //   n=2: 1000 + max(1500, ceil(4800/2)) = 1000 + 2400 = 3400
+    //   n=4: 1000 + max(1500, ceil(4800/4)) = 1000 + 1500 = 2500
+    //   n=8: 1000 + max(1500, ceil(4800/8)) = 1000 + 1500 = 2500 (floor)
     // Batch ("q", 8) has no jobs => estimate = brt = 700 at every n.
-    val events = Seq(
-      ev("jobStart", 0, jobId = Some(1), stageIds = Seq(0, 1),
-        sqlExecutionId = Some(11), queryId = Some("q"), batchId = Some(7)),
-      ev("stageSubmitted", 0, stageId = Some(0)),
-      ev("taskEnd", 900, stageId = Some(0), durationMs = Some(1000)),
-      ev("taskEnd", 950, stageId = Some(0), durationMs = Some(1000)),
-      ev("taskEnd", 1900, stageId = Some(0), durationMs = Some(1000)),
-      ev("taskEnd", 1950, stageId = Some(0), durationMs = Some(1000)),
-      ev("stageCompleted", 2000, stageId = Some(0)),
-      ev("stageSubmitted", 2000, stageId = Some(1), parents = Seq(0)),
-      ev("taskEnd", 2600, stageId = Some(1), durationMs = Some(500)),
-      ev("taskEnd", 2700, stageId = Some(1), durationMs = Some(300)),
-      ev("stageCompleted", 2900, stageId = Some(1)),
-      ev("jobEnd", 3000, jobId = Some(1)),
-      SchedulerEvent("executorAdded", 0, None, Nil, None, Nil, None, None,
-        Some("ex1"), Some("h1"), Some(2), None, None, None, None, None),
-      SchedulerEvent("executorAdded", 0, None, Nil, None, Nil, None, None,
-        Some("ex2"), Some("h2"), Some(2), None, None, None, None, None)).toDS()
+    val events = whatIfBatch.toDS()
     val got = BatchAnalyzer.estimateAt(
         SpanBuilder.jobSpans(events), SpanBuilder.stageSpans(events),
         Seq(progress("q", 7, rows = 4000, rps = 1000.0),
           progress("q", 8, rows = 700, rps = 1000.0)).toDS(),
-        SpanBuilder.executorSpans(events), Seq(4, 1, 2))
+        Seq(8, 2, 4))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getInt(2)) -> r.getLong(3))
       .toMap
-    assert(got(("q", 7L, 1)) === 3400L)
-    assert(got(("q", 7L, 2)) === 2500L)
-    assert(got(("q", 7L, 4)) === 2500L) // converged to serial + criticalPath
-    assert(Seq(1, 2, 4).map(n => got(("q", 8L, n))).forall(_ === 700L))
+    assert(got(("q", 7L, 2)) === 3400L)
+    assert(got(("q", 7L, 4)) === 2500L)
+    assert(got(("q", 7L, 8)) === 2500L) // converged to serial + critical time
+    assert(Seq(2, 4, 8).map(n => got(("q", 8L, n))).forall(_ === 700L))
     assert(got.size === 6) // every batch × every asked count, exactly once
   }
 
-  test("jobExecutors bridge + batchExecutors semi-join chain") {
+  test("estimateAt's floor is analyze's criticalTime for every batch") {
     import spark.implicits._
-    val events = Seq(
-      ev("jobStart", 0, jobId = Some(1), stageIds = Seq(10),
-        queryId = Some("q"), batchId = Some(1)),
-      ev("jobEnd", 10, jobId = Some(1)),
-      ev("jobStart", 0, jobId = Some(2), stageIds = Seq(20),
-        queryId = Some("q"), batchId = Some(2)),
-      ev("jobEnd", 10, jobId = Some(2)),
-      SchedulerEvent("taskEnd", 5, None, Nil, Some(10), Nil, None, Some(100L),
-        Some("ex1"), None, None, Some(5L), Some(false), None, None, None),
-      SchedulerEvent("taskEnd", 6, None, Nil, Some(20), Nil, None, Some(101L),
-        Some("ex2"), None, None, Some(5L), Some(false), None, None, None),
-      SchedulerEvent("executorAdded", 0, None, Nil, None, Nil, None, None,
-        Some("ex1"), Some("h1"), Some(4), None, None, None, None, None),
-      SchedulerEvent("executorAdded", 0, None, Nil, None, Nil, None, None,
-        Some("ex2"), Some("h2"), Some(4), None, None, None, None, None)).toDS()
-    val bridge = SpanBuilder.jobExecutors(events)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(bridge === Set((1L, "ex1"), (2L, "ex2")))
-    val got = SpanBuilder.batchExecutors(
-      SpanBuilder.executorSpans(events), SpanBuilder.jobSpans(events),
-      SpanBuilder.jobExecutors(events), "q", 1L)
-      .collect().map(_.executorId).toSeq
-    assert(got === Seq("ex1"))
+    // Batch 9: serial jobs [0,500] and [600,1000] under brt 600 < Σ span
+    // 900, so serial = -300 and ct = 600 - 900 + 300 + 200 = 200 (clamping
+    // serial at 0 would read 500). Batch 10: J6 [100,400] overlaps J5 [0,1000]
+    // under one sql-execution id (a broadcast beside the main job), J7
+    // [1200,1300] has none: ct = 2000 - 1100 + max(850, 250) + 80 = 1830.
+    // Batch 11 has a job but no progress (brt 0): ct 0.
+    val events = (whatIfBatch ++
+      job(3, 0, 500, sqlExec = Some(6), stageIds = Seq(2), batch = 9) ++
+      job(4, 600, 1000, sqlExec = Some(6), stageIds = Seq(3), batch = 9) ++
+      stage(2, 0, 500, 300) ++ stage(3, 600, 1000, 200) ++
+      job(5, 0, 1000, sqlExec = Some(7), stageIds = Seq(4, 5), batch = 10) ++
+      job(6, 100, 400, sqlExec = Some(7), stageIds = Seq(6), batch = 10) ++
+      job(7, 1200, 1300, sqlExec = None, stageIds = Seq(7), batch = 10) ++
+      stage(4, 0, 600, 500) ++ stage(5, 600, 1000, 350, Seq(4)) ++
+      stage(6, 100, 400, 250) ++ stage(7, 1200, 1300, 80) ++
+      job(8, 0, 100, stageIds = Seq(8), batch = 11) ++ stage(8, 0, 100, 50)).toDS()
+    val prog = Seq(progress("q", 7, rows = 4000, rps = 1000.0),
+      progress("q", 8, rows = 700, rps = 1000.0),
+      progress("q", 9, rows = 600, rps = 1000.0),
+      progress("q", 10, rows = 2000, rps = 1000.0),
+      progress("q", 11, rows = 0, rps = 1000.0))
+    val (jobs, stages) = (SpanBuilder.jobSpans(events), SpanBuilder.stageSpans(events))
+    val critical = BatchAnalyzer.analyze(jobs, stages, prog.toDS(), Seq.empty[QuerySla].toDS())
+      .collect().map(r => r.batchId -> r.criticalTime).toMap
+    assert(critical === Map(7L -> 2500L, 8L -> 700L, 9L -> 200L, 10L -> 1830L, 11L -> 0L))
+    val slots = stages.collect().map(_.totalTaskDurationMs).sum.toInt
+    val floor = BatchAnalyzer.estimateAt(jobs, stages, prog.toDS(), Seq(slots))
+      .collect().map(r => r.getLong(1) -> r.getLong(3)).toMap
+    assert(floor === critical)
   }
 
   test("a stage listed in two jobs' stageIds belongs to the earlier job") {

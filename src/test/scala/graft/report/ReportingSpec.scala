@@ -22,14 +22,12 @@ class ReportingSpec extends SparkSpec {
     assert(math.abs(got - expected) < 1e-9)
   }
 
-  test("NONEWBATCHES batches and already-reported batches are excluded") {
+  test("NONEWBATCHES batches are excluded") {
     import spark.implicits._
     val results = Seq(
-      res(1, "UNHEALTHY", 4),        // excluded: batchId <= lastReported
       res(2, "NONEWBATCHES", 0),     // excluded: ordinal 0
       res(3, "OPTIMUM", 2)).toDS()
-    val got = Reporting.discountedScore(results, 0.95, lastReportedBatch = 1L)
-      .head()
+    val got = Reporting.discountedScore(results, 0.95).head()
     assert(got.getDouble(1) === 2.0)
     assert(got.getLong(2) === 1L)
   }

@@ -3,10 +3,13 @@ package graft.analyzer
 import org.apache.spark.sql.Dataset
 import graft.model._
 
-/** Builds the span tables (T1/T2 of SURVEY.md §1.1) from raw scheduler
-  * events — the reference's listener handlers mutating
-  * `StreamingAppTracker`'s maps (ref `listener/StreamingAppListener.scala:39-217`)
-  * re-expressed over retained rows.
+/** Builds the span tables (T1/T2 of SURVEY.md §1.1) from scheduler rows
+  * — the reference's listener handlers mutating `StreamingAppTracker`'s
+  * maps (ref `listener/StreamingAppListener.scala:39-217`) re-expressed over
+  * retained rows. One path reads both row shapes of [[SchedulerEvent]]: a
+  * row per listener callback (replay files, specs) and the live bridge's
+  * one row per job and per stage, whose `endTime` and task fold stand for
+  * the end and task rows it absorbed.
   *
   * The builders ([[jobSpans]], [[stageSpans]], [[batchProgress]]) collect
   * their input and fold it on the driver, where the telemetry
@@ -20,11 +23,15 @@ import graft.model._
 object SpanBuilder {
 
   private val StageKinds = Set("stageSubmitted", "stageCompleted", "taskEnd")
+  /** Rows carrying task time: per-task or folded `taskEnd` rows, and the
+    * bridge's `stageSubmitted` rows with their stage's fold. */
+  private val TaskKinds = Set("stageSubmitted", "taskEnd")
 
   /** Job spans: correlate jobStart/jobEnd, carrying the streaming FKs from
-    * the start event (ref `StreamingAppListener.scala:39-81`). Jobs without
-    * both events (in flight at snapshot time) are dropped: completed work
-    * only. */
+    * the start event (ref `StreamingAppListener.scala:39-81`). A job's end
+    * is the latest of its jobEnd times and its jobStart's `endTime`. Jobs
+    * without a start and an end (in flight at snapshot time) are dropped:
+    * completed work only. */
   def jobSpans(events: Dataset[SchedulerEvent]): Dataset[JobSpan] = {
     import events.sparkSession.implicits._
     val spans = events.collect().toSeq
@@ -33,7 +40,8 @@ object SpanBuilder {
       .flatMap { case (jobId, es) =>
         def times(kind: String) = es.filter(_.kind == kind).map(_.time)
         // FKs ride on jobStart only; the max over the group recovers them.
-        for (start <- times("jobStart").minOption; end <- times("jobEnd").maxOption)
+        for (start <- times("jobStart").minOption;
+             end <- (times("jobEnd") ++ es.flatMap(_.endTime)).maxOption)
           yield JobSpan(jobId, start, end, es.flatMap(_.sqlExecutionId).maxOption,
             es.flatMap(_.queryId).maxOption, es.flatMap(_.batchId).maxOption)
       }
@@ -43,11 +51,13 @@ object SpanBuilder {
   /** Stage spans incl. the longest single task, the input to the critical
     * path, and the summed task time, the input to [[BatchAnalyzer.estimateAt]]
     * (ref `StreamingAppListener.scala:110-142,144-192` and sparklens
-    * `StageTimeSpan.updateTasks`). A stage's `taskEnd` rows are folds of its
-    * tasks: the longest task is the max of their `durationMs`, and the total
-    * the sum of their `totalDurationMs`, where a per-task row (None) counts
-    * its `durationMs`. So per-task rows from a replay file and the live
-    * bridge's per-(stage, executor) rows give the same span. Stage→job comes
+    * `StageTimeSpan.updateTasks`). A stage's `taskEnd` rows and the bridge's
+    * `stageSubmitted` row are folds of its tasks: the longest task is the
+    * max of their `durationMs`, and the total the sum of their
+    * `totalDurationMs`, where a per-task row (None) counts its `durationMs`.
+    * A stage's end is the latest of its stageCompleted times and its
+    * stageSubmitted's `endTime`. So per-event rows from a replay file and
+    * the live bridge's one row per stage give the same span. Stage→job comes
     * from the jobStart's stageIds (T3 `stageIDToJobID`) and is single-valued:
     * Spark also lists skipped stages (reused shuffle output), so a stage
     * listed by several jobs belongs to the earliest of them by (time, jobId),
@@ -61,12 +71,13 @@ object SpanBuilder {
       .groupBy(_.stageId.get)
       .flatMap { case (stageId, es) =>
         def times(kind: String) = es.filter(_.kind == kind).map(_.time)
-        val tasks = es.filter(_.kind == "taskEnd")
+        val tasks = es.filter(e => TaskKinds(e.kind))
         val maxTask = tasks.map(_.durationMs.getOrElse(0L)).foldLeft(0L)(math.max)
         val totalTask = tasks.map(t => t.totalDurationMs.orElse(t.durationMs).getOrElse(0L)).sum
         val parents = es.find(e => e.kind == "stageSubmitted" && e.parentStageIds != null)
           .map(_.parentStageIds).getOrElse(Nil)
-        for (start <- times("stageSubmitted").minOption; end <- times("stageCompleted").maxOption)
+        for (start <- times("stageSubmitted").minOption;
+             end <- (times("stageCompleted") ++ es.flatMap(_.endTime)).maxOption)
           yield stageId -> StageSpan(stageId, -1L, start, end, parents,
             es.map(_.numTasks.getOrElse(0)).max, maxTask, totalTask)
       }

@@ -18,8 +18,9 @@ import graft.report.{EventsReporter, Reporting}
   *
   * Where the reference hand-schedules per-query threads, analysis here is
   * one driver fold over the retained telemetry, which the bridges already
-  * hold in driver memory (capped at 2^20 scheduler and 2^16 progress
-  * rows); it launches no Spark job, so [[analyzeNow]] can run on any
+  * hold in driver memory: one scheduler row per job, per stage and per
+  * executor event, capped at 2^20, and up to 2^16 progress rows. It
+  * launches no Spark job, so [[analyzeNow]] can run on any
   * cadence without taking cores from the monitored queries (the
   * reference's 5-minute default belongs to the caller's trigger,
   * ref `QueryInsightsManager.scala:194-196`).
@@ -39,7 +40,8 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
   private val reporter: Option[EventsReporter] =
     config.reporterClassName.map(EventsReporter.load(_, config.reporterOptions, "graft"))
   private val metrics = org.apache.spark.graft.GraftMetricsSource.register(
-    () => schedulerBridge.droppedCount + progressBridge.droppedCount)
+    () => schedulerBridge.droppedCount + progressBridge.droppedCount,
+    () => schedulerBridge.retainedCount + progressBridge.retainedCount)
   private val consecutiveFailures = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile private var registered = false
 

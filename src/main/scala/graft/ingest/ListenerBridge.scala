@@ -18,14 +18,19 @@ import graft.model.{ProgressEvent, SchedulerEvent}
   * The bridges keep immutable rows in driver memory, bounded at 2^20
   * scheduler and 2^16 progress rows by default; the analysis folds a
   * snapshot of those rows on the driver ([[graft.analyzer.SpanBuilder]]).
-  * Most events append one row to a queue. Task ends fold per (stage,
-  * executor) instead, as the reference folds each task end into its
-  * stage's `StageTimeSpan` (ref `StreamingAppListener.scala:127`): one
-  * `taskEnd` row per key carries the longest task (`durationMs`), the
-  * summed task time (`totalDurationMs`) and the newest finish (`time`),
-  * which is all the analysis reads of task ends. A fold row counts once
-  * against the cap, when its key first appears. Rows past the cap are
-  * counted in `droppedCount`, which the metrics source publishes as its
+  * The scheduler bridge folds at ingest, as the reference keeps one
+  * `jobMap` and one `stageMap` entry each (ref `StreamingAppTracker.scala:
+  * 33-34`): one `jobStart` row per job, whose `endTime` the job's end sets,
+  * and one `stageSubmitted` row per stage, whose `endTime` the stage's
+  * completion sets and into which every task end folds its longest task
+  * (`durationMs`), summed task time (`totalDurationMs`) and failure
+  * (`failed`: the stage or any of its tasks failed), as the reference folds
+  * each task end into its stage's `StageTimeSpan` (ref
+  * `StreamingAppListener.scala:127`). A resubmitted stage attempt merges
+  * into its stage's row. An end or task event with no open row joins
+  * nothing and is ignored. Executor events append one row each. The cap
+  * counts each job, each stage and each executor event once; rows past it
+  * are counted in `droppedCount`, which the metrics source publishes as its
   * droppedEvents gauge. The listener-bus thread does O(1) work per event,
   * which is what keeps a busy app from dropping bus events.
   */
@@ -40,9 +45,10 @@ object ListenerBridge {
 
   class SchedulerBridge(maxBuffered: Int = 1 << 20) extends SparkListener {
     private val queue = new ConcurrentLinkedQueue[SchedulerEvent]()
-    private val taskFolds = new ConcurrentHashMap[(Int, Option[String]), SchedulerEvent]()
+    private val jobs = new ConcurrentHashMap[Long, SchedulerEvent]()
+    private val stages = new ConcurrentHashMap[Int, SchedulerEvent]()
     // ConcurrentLinkedQueue.size is O(n); the bus thread must stay O(1),
-    // so the retained count (queue rows plus fold rows) is tracked separately.
+    // so the retained count (queue, job and stage rows) is tracked separately.
     private val retained = new AtomicInteger(0)
     private val dropped = new AtomicLong(0)
 
@@ -53,25 +59,42 @@ object ListenerBridge {
 
     private def offer(e: SchedulerEvent): Unit = if (admit()) queue.add(e)
 
+    /** Opens `key`'s row, or merges `row` into the open one. */
+    private def open[K](rows: ConcurrentHashMap[K, SchedulerEvent], key: K, row: SchedulerEvent)
+                       (merge: SchedulerEvent => SchedulerEvent): Unit =
+      rows.compute(key, (_, old) => if (old != null) merge(old) else if (admit()) row else null)
+
+    /** Folds an event into `key`'s open row; without one it is ignored. */
+    private def fold[K](rows: ConcurrentHashMap[K, SchedulerEvent], key: K)
+                       (f: SchedulerEvent => SchedulerEvent): Unit =
+      rows.computeIfPresent(key, (_, row) => f(row))
+
+    private def ended(row: SchedulerEvent, time: Long): SchedulerEvent =
+      row.copy(endTime = Some(row.endTime.fold(time)(math.max(_, time))))
+
     def droppedCount: Long = dropped.get
 
-    /** Snapshot the retained rows (queue rows, then fold rows) into a
-      * Dataset without consuming them — telemetry stays available to later
-      * analyses, like the reference's retained tracker maps
-      * (`StreamingAppTracker.scala:33-42`). */
+    /** Rows held: executor, job and stage rows. */
+    def retainedCount: Long = retained.get
+
+    /** Snapshot the retained rows (queue rows, then job rows, then stage
+      * rows) into a Dataset without consuming them — telemetry stays
+      * available to later analyses, like the reference's retained tracker
+      * maps (`StreamingAppTracker.scala:33-42`). */
     def snapshot(spark: SparkSession): Dataset[SchedulerEvent] = {
       import spark.implicits._
-      spark.createDataset((queue.asScala ++ taskFolds.values.asScala).toSeq)
+      spark.createDataset(
+        (queue.asScala ++ jobs.values.asScala ++ stages.values.asScala).toSeq)
     }
 
     /** Retention eviction: drop rows older than `horizonMs`
-      * (ref purge `StreamingAppTracker.scala:44-74`). A fold row's time is
-      * its newest task's finish, so it goes only once all its tasks are
-      * older than the horizon. */
+      * (ref purge `StreamingAppTracker.scala:44-74`). A job or stage row's
+      * time is its start. */
     def evictBefore(horizonMs: Long): Unit = {
       queue.removeIf(e => e.time < horizonMs)
-      taskFolds.values.removeIf(e => e.time < horizonMs)
-      retained.set(queue.size + taskFolds.size)
+      jobs.values.removeIf(e => e.time < horizonMs)
+      stages.values.removeIf(e => e.time < horizonMs)
+      retained.set(queue.size + jobs.size + stages.size)
     }
 
     private def base(kind: String, time: Long) = SchedulerEvent(
@@ -81,48 +104,46 @@ object ListenerBridge {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val p = Option(e.properties)
       def prop(k: String): Option[String] = p.flatMap(pp => Option(pp.getProperty(k)))
-      offer(base("jobStart", e.time).copy(
+      open(jobs, e.jobId.toLong, base("jobStart", e.time).copy(
         jobId = Some(e.jobId.toLong),
         stageIds = e.stageIds.map(_.toInt),
         sqlExecutionId = prop(SqlExecutionIdKey).flatMap(_.toLongOption),
         queryId = prop(QueryIdKey),
-        batchId = prop(BatchIdKey).flatMap(_.toLongOption)))
+        batchId = prop(BatchIdKey).flatMap(_.toLongOption)))(identity)
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      offer(base("jobEnd", e.time).copy(jobId = Some(e.jobId.toLong)))
+      fold(jobs, e.jobId.toLong)(ended(_, e.time))
 
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      offer(base("stageSubmitted", e.stageInfo.submissionTime.getOrElse(0L)).copy(
-        stageId = Some(e.stageInfo.stageId),
-        parentStageIds = e.stageInfo.parentIds.map(_.toInt),
-        numTasks = Some(e.stageInfo.numTasks)))
+    /** A resubmitted attempt merges: the earliest submission, the most
+      * tasks. */
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      val s = e.stageInfo
+      val time = s.submissionTime.getOrElse(0L)
+      open(stages, s.stageId, base("stageSubmitted", time).copy(
+        stageId = Some(s.stageId),
+        parentStageIds = s.parentIds.map(_.toInt),
+        numTasks = Some(s.numTasks)))(
+        row => row.copy(time = math.min(row.time, time),
+          numTasks = row.numTasks.map(math.max(_, s.numTasks))))
+    }
 
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      offer(base("stageCompleted", e.stageInfo.completionTime.getOrElse(0L)).copy(
-        stageId = Some(e.stageInfo.stageId),
-        failed = Some(e.stageInfo.failureReason.isDefined)))
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val s = e.stageInfo
+      fold(stages, s.stageId)(row => ended(row, s.completionTime.getOrElse(0L))
+        .copy(failed = Some(row.failed.contains(true) || s.failureReason.isDefined)))
+    }
 
-    /** Folds the task into its (stage, executor) row; an event without
-      * task info counts as a 0 ms task on no executor. */
+    /** Folds the task into its stage's row, also after the stage completed;
+      * an event without task info counts as a 0 ms task. */
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val info = Option(e.taskInfo)
-      val finish = info.map(_.finishTime).getOrElse(0L)
       val duration = info.map(_.duration).getOrElse(0L)
       val failed = info.exists(_.failed)
-      taskFolds.compute((e.stageId, info.map(_.executorId)), (key, row) =>
-        if (row != null) row.copy(
-          time = math.max(row.time, finish),
-          durationMs = row.durationMs.map(math.max(_, duration)),
-          totalDurationMs = row.totalDurationMs.map(_ + duration),
-          failed = row.failed.map(_ || failed))
-        else if (admit()) base("taskEnd", finish).copy(
-          stageId = Some(e.stageId),
-          executorId = key._2,
-          durationMs = Some(duration),
-          failed = Some(failed),
-          totalDurationMs = Some(duration))
-        else null)
+      fold(stages, e.stageId)(row => row.copy(
+        durationMs = Some(row.durationMs.fold(duration)(math.max(_, duration))),
+        totalDurationMs = Some(row.totalDurationMs.getOrElse(0L) + duration),
+        failed = Some(row.failed.contains(true) || failed)))
     }
 
     override def onExecutorAdded(e: SparkListenerExecutorAdded): Unit =
@@ -141,6 +162,9 @@ object ListenerBridge {
     private val dropped = new AtomicLong(0)
 
     def droppedCount: Long = dropped.get
+
+    /** Rows held. */
+    def retainedCount: Long = queued.get
 
     /** Snapshot buffered events without consuming them. */
     def snapshot(spark: SparkSession): Dataset[ProgressEvent] = {

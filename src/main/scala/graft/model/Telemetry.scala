@@ -7,10 +7,14 @@ package graft.model
   */
 
 /** Scheduler-bus event (ref `listener/StreamingAppListener.scala:39-217`).
-  * One row per listener callback, except that the live bridge folds task
-  * ends into one `taskEnd` row per (stage, executor); a per-task row (from a
-  * replay file or a spec) is the fold of one task. Nullable fields depend
-  * on `kind`. */
+  * Two row shapes carry the same spans. Replay files and specs hold one
+  * row per listener callback. The live bridge holds one row per job and one
+  * per stage, as the reference's `jobMap`/`stageMap` hold one entry each
+  * (`StreamingAppTracker.scala:33-34`): its `jobStart` row carries the
+  * job's end in `endTime`, and its `stageSubmitted` row carries the stage's
+  * end in `endTime` and the fold of its tasks (`durationMs`,
+  * `totalDurationMs`, `failed`); executor rows stay one per callback.
+  * Nullable fields depend on `kind`. */
 case class SchedulerEvent(
     kind: String,                 // jobStart|jobEnd|stageSubmitted|stageCompleted|taskEnd|executorAdded|executorRemoved
     time: Long,                   // epoch millis
@@ -23,14 +27,18 @@ case class SchedulerEvent(
     executorId: Option[String],
     host: Option[String],
     cores: Option[Int],
-    durationMs: Option[Long],     // taskEnd: execution time of the row's longest task
-    failed: Option[Boolean],      // taskEnd: any task of the row failed; stageCompleted: the stage did
+    durationMs: Option[Long],     // taskEnd, folded stageSubmitted: the row's longest task
+    failed: Option[Boolean],      // taskEnd: the task failed; stageCompleted: the stage did;
+                                  // folded stageSubmitted: the stage or any of its tasks did
     sqlExecutionId: Option[Long], // "spark.sql.execution.id" job property
     queryId: Option[String],      // "sql.streaming.queryId" job property
     batchId: Option[Long],
-    // taskEnd: summed execution time of the row's tasks; None on a per-task
-    // row, which counts as its own durationMs
-    totalDurationMs: Option[Long] = None)
+    // taskEnd, folded stageSubmitted: summed execution time of the row's
+    // tasks; None on a per-task row, which counts as its own durationMs
+    totalDurationMs: Option[Long] = None,
+    // folded jobStart/stageSubmitted: the latest jobEnd/stageCompleted time
+    // seen; None while the job or stage is in flight, and on per-event rows
+    endTime: Option[Long] = None)
 
 /** Streaming-query lifecycle/progress event
   * (ref `listener/QueryProgressListener.scala:34-89`). */

@@ -12,14 +12,19 @@ import graft.model.CriticalPathResult
   * (ref `org/apache/spark/sql/streaming/qubole/streaminglens/metrics/
   * StreamingLensMetricsReporter.scala:41-70`): expectedMicroBatchSLA,
   * batchRunningTime, criticalTime, state ordinal, analysisTime (the whole
-  * `analyzeNow()` call), plus droppedEvents: telemetry events the listener
-  * bridges dropped at their caps, read from `droppedEvents`.
+  * `analyzeNow()` call), plus two gauges on the listener bridges' state:
+  * droppedEvents, read from `droppedEvents`, counts the jobs, stages and
+  * executor and progress events the bridges refused at their caps (the
+  * scheduler bridge holds one row per job and per stage, so end and task
+  * events never count), and retainedRows, read from `retainedRows`, the
+  * scheduler plus progress rows the bridges hold: the analysis's queue
+  * depth, which each [[graft.api.StreamingGraft.analyzeNow]] reads whole.
   *
   * Lives under the spark namespace because `Source` and
   * `MetricsSystem.registerSource` are `private[spark]` — the identical
   * trick the reference uses (`StreamingLensMetricsReporter.scala:19,54`).
   */
-class GraftMetricsSource(droppedEvents: () => Long) extends Source {
+class GraftMetricsSource(droppedEvents: () => Long, retainedRows: () => Long) extends Source {
   override val sourceName: String = "StreamingGraft"
   override val metricRegistry: MetricRegistry = new MetricRegistry
 
@@ -48,13 +53,16 @@ class GraftMetricsSource(droppedEvents: () => Long) extends Source {
   metricRegistry.register("droppedEvents", new Gauge[Long] {
     override def getValue: Long = droppedEvents()
   })
+  metricRegistry.register("retainedRows", new Gauge[Long] {
+    override def getValue: Long = retainedRows()
+  })
 }
 
 object GraftMetricsSource {
   /** Register with the active SparkEnv's metrics system; returns the source
     * so the facade can push updates. */
-  def register(droppedEvents: () => Long): GraftMetricsSource = {
-    val src = new GraftMetricsSource(droppedEvents)
+  def register(droppedEvents: () => Long, retainedRows: () => Long): GraftMetricsSource = {
+    val src = new GraftMetricsSource(droppedEvents, retainedRows)
     Option(SparkEnv.get).foreach(_.metricsSystem.registerSource(src))
     src
   }

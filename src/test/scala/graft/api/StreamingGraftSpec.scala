@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.config.GraftConfig
 import graft.ingest.ListenerBridge
 import org.apache.spark.graft.{GraftMetricsSource, ListenerBusDrain, SparkTestHooks}
-import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd}
+import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Reflection-loaded by the reporter SPI in the aggregate-report test. */
@@ -95,9 +95,51 @@ class StreamingGraftSpec extends SparkSpec {
   test("droppedEvents gauge counts the events the bridges dropped at their caps") {
     val sched = new ListenerBridge.SchedulerBridge(maxBuffered = 1)
     val prog = new ListenerBridge.ProgressBridge(maxBuffered = 1)
+    // Each job opens one row; an end without a row is ignored, not dropped.
+    (1 to 3).foreach(i => sched.onJobStart(SparkListenerJobStart(i, 0L, Nil)))
     (1 to 3).foreach(i => sched.onJobEnd(SparkListenerJobEnd(i, 0L, JobSucceeded)))
-    val src = new GraftMetricsSource(() => sched.droppedCount + prog.droppedCount)
+    val src = new GraftMetricsSource(() => sched.droppedCount + prog.droppedCount,
+      () => sched.retainedCount + prog.retainedCount)
     assert(src.metricRegistry.getGauges.get("droppedEvents").getValue === 2L)
+    assert(src.metricRegistry.getGauges.get("retainedRows").getValue === 1L)
+  }
+
+  test("retainedRows gauge reads the rows the bridges hold after analyzeNow()") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val g = new StreamingGraft(spark, Map("streamingLens.shouldLogResults" -> "false"))
+    // A second pair of bridges on the same buses, evicted by the graft's
+    // rules, holds what the graft's pair holds.
+    val sched = new ListenerBridge.SchedulerBridge()
+    val prog = new ListenerBridge.ProgressBridge()
+    spark.sparkContext.addSparkListener(sched)
+    spark.streams.addListener(prog)
+    try {
+      val mem = MemoryStream[Int]
+      val query = mem.toDS().map(_ + 1)
+        .writeStream.format("memory").queryName("graft_retained")
+        .outputMode("append").start()
+      try {
+        mem.addData(1 to 500: _*)
+        query.processAllAvailable()
+        mem.addData(501 to 1000: _*)
+        query.processAllAvailable()
+      } finally query.stop()
+      ListenerBusDrain(spark)
+      assert(g.analyzeNow().collect().nonEmpty, "no batches analyzed")
+      prog.evictBeyond(g.config.maxBatchesRetention)
+      sched.evictBefore(System.currentTimeMillis() -
+        g.config.maxBatchesRetention.toLong * g.config.analysisIntervalMinutes * 60000L)
+      val gauge = SparkTestHooks.gauge("StreamingGraft", "retainedRows").asInstanceOf[Long]
+      // collect, not count: a count runs Spark jobs, whose rows both bridges
+      // would then hold.
+      val held = sched.snapshot(spark).collect().length + prog.snapshot(spark).collect().length
+      assert(gauge > 0 && gauge === held, s"retainedRows $gauge, the bridges hold $held")
+    } finally {
+      spark.sparkContext.removeSparkListener(sched)
+      spark.streams.removeListener(prog)
+      g.stop()
+    }
   }
 
   test("updateExpectedMicroBatchSLA rejects non-positive values") {

@@ -80,6 +80,36 @@ class ReplaySpec extends SparkSpec {
     assert(span.map(s => (s.maxTaskDurationMs, s.totalTaskDurationMs)) === Seq((900L, 1300L)))
   }
 
+  test("files written before endTime existed load and give the same spans") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_noend").toString
+    val events = Seq(
+      sched("jobStart", 1000, jobId = Some(1), stageIds = Seq(0, 1),
+        queryId = Some("q"), batchId = Some(4)),
+      sched("stageSubmitted", 1000, stageId = Some(0)),
+      sched("taskEnd", 1400, stageId = Some(0), durationMs = Some(400)),
+      sched("stageCompleted", 1500, stageId = Some(0)),
+      sched("stageSubmitted", 1500, stageId = Some(1)),
+      sched("taskEnd", 2100, stageId = Some(1), durationMs = Some(600)),
+      sched("taskEnd", 1900, stageId = Some(1), durationMs = Some(350)),
+      sched("stageCompleted", 2200, stageId = Some(1)),
+      sched("jobEnd", 2300, jobId = Some(1)))
+    val old = events.toDS().drop("endTime")
+    old.write.json(s"$dir/js")
+    old.write.parquet(s"$dir/pq")
+    assert(spark.read.parquet(s"$dir/pq").columns.toSeq === old.columns.toSeq)
+    for (replayed <- Seq(Replay.schedulerEventsJson(spark, s"$dir/js"),
+                         Replay.schedulerEventsParquet(spark, s"$dir/pq"))) {
+      val rows = replayed.collect()
+      assert(rows.toSet === events.toSet && rows.forall(_.endTime.isEmpty))
+      assert(SpanBuilder.jobSpans(replayed).collect().toSeq ===
+        Seq(JobSpan(1, 1000, 2300, Some(1L), Some("q"), Some(4L))))
+      assert(SpanBuilder.stageSpans(replayed).collect().sortBy(_.stageId).toSeq === Seq(
+        StageSpan(0, 1, 1000, 1500, Nil, 1, 400, 400),
+        StageSpan(1, 1, 1500, 2200, Nil, 1, 600, 950)))
+    }
+  }
+
   test("offline analysis over replayed telemetry classifies the batch") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_replay2").toString

@@ -1,0 +1,140 @@
+#!/usr/bin/env python3
+"""Alternating A/B benchmark runs of a base revision against this checkout.
+
+    python3 tools/perfab.py --base REV --workload W --pairs N \
+        [--first-seed 1] [--seconds S] --workdir DIR
+
+Exports the committed files of REV into a fresh directory under DIR
+(`git archive`, the committed tree only, so no build state of this checkout
+comes along; a copied sbt/zinc `target/` can write into the tree it was
+copied from) and reuses it on later calls for the same revision. Then it runs
+`perfbench/run.py` once per seed on each side, alternating which side goes
+first in each pair so drift over the session falls on both. Pair i uses
+seed first-seed + i on both sides.
+
+Both sides are written in `perfbench/steady.py run` format to
+DIR/perfab-<workload>-base.json and DIR/perfab-<workload>-head.json. The tool
+prints each end-to-end metric per pair, then per metric: the pairs in which
+this checkout is better, both medians and the base's quartiles, and whether
+the median gain exceeds the base's interquartile range. It finishes with
+`steady.py compare` of the two files (the benchmark's regression bounds) and
+exits with its status, or 1 when a run fails or reports `correct: false`.
+"""
+import argparse
+import json
+import statistics
+import subprocess
+import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+SPEC = json.loads((ROOT / "BENCHMARK.json").read_text())
+SAMPLES = "[perfbench] samples "
+
+
+def git(*args):
+    return subprocess.run(["git", *args], cwd=ROOT, check=True, stdout=subprocess.PIPE,
+                          text=True).stdout.strip()
+
+
+def base_tree(rev, workdir):
+    """A directory holding REV's committed files, exported once per revision."""
+    sha = git("rev-parse", "--verify", rev + "^{commit}")
+    tree = workdir / f"base-{sha[:12]}"
+    done = tree / ".perfab-exported"
+    if not done.is_file():
+        subprocess.run(["rm", "-rf", str(tree)], check=True)
+        tree.mkdir(parents=True)
+        archive = subprocess.Popen(["git", "archive", sha], cwd=ROOT, stdout=subprocess.PIPE)
+        subprocess.run(["tar", "-x", "-C", str(tree)], stdin=archive.stdout, check=True)
+        if archive.wait() != 0:
+            sys.exit(f"git archive {sha} failed")
+        done.write_text(sha + "\n")
+    return sha, tree
+
+
+def run_once(tree, workload, seed, seconds):
+    """One run.py result in steady.py's run format, or None if it failed."""
+    out = subprocess.run(
+        [sys.executable, str(tree / "perfbench" / "run.py"), "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+        stdout=subprocess.PIPE, text=True)
+    lines = out.stdout.strip().splitlines()
+    if out.returncode != 0 or not lines:
+        return None
+    r = json.loads(lines[-1])
+    r["seed"] = seed
+    r["samples"] = {}
+    for line in lines:
+        if line.startswith(SAMPLES):
+            name, *xs = line[len(SAMPLES):].split()
+            r["samples"][name] = [float(x) for x in xs]
+    return r
+
+
+def quartiles(values):
+    med = statistics.median(values)
+    q1, _, q3 = statistics.quantiles(values, n=4) if len(values) > 1 else (med, med, med)
+    return med, q1, q3
+
+
+def summary(base_runs, head_runs):
+    for spec in SPEC["end_to_end"]:
+        name, lower = spec["name"], spec["better"] == "lower"
+        b = [r["metrics"][name]["value"] for r in base_runs]
+        h = [r["metrics"][name]["value"] for r in head_runs]
+        wins = sum((y < x) if lower else (y > x) for x, y in zip(b, h))
+        bm, bq1, bq3 = quartiles(b)
+        hm = statistics.median(h)
+        gain = (bm - hm) if lower else (hm - bm)
+        print(f"{name:16s} head better in {wins}/{len(b)} pairs; median {bm:.4g} -> {hm:.4g} "
+              f"{spec['unit']} ({100 * (hm - bm) / bm:+.1f} %); base q1-q3 {bq1:.4g}-{bq3:.4g}; "
+              f"gain beyond base IQR: {'yes' if gain > bq3 - bq1 else 'no'}")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--base", required=True, help="git revision to compare against")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, default=5)
+    ap.add_argument("--first-seed", type=int, default=1)
+    ap.add_argument("--seconds", type=float, default=SPEC["run_seconds"])
+    ap.add_argument("--workdir", required=True,
+                    help="directory for the base tree and the two result files")
+    a = ap.parse_args()
+
+    workdir = Path(a.workdir).resolve()
+    sha, tree = base_tree(a.base, workdir)
+    sides = {"base": (tree, []), "head": (ROOT, [])}
+    print(f"base {sha[:12]} in {tree}; head is the checkout at {ROOT}", flush=True)
+    bad = 0
+    for i in range(a.pairs):
+        seed = a.first_seed + i
+        order = ["base", "head"] if i % 2 == 0 else ["head", "base"]
+        for side in order:
+            r = run_once(sides[side][0], a.workload, seed, a.seconds)
+            if r is None:
+                print(f"pair {i} seed {seed} {side}: run failed")
+                return 1
+            bad += not r["correct"]
+            sides[side][1].append(r)
+        print(f"pair {i} seed {seed} ({' then '.join(order)}): " + " ".join(
+            f"{m['name']} {sides['base'][1][-1]['metrics'][m['name']]['value']:.4g}"
+            f"->{sides['head'][1][-1]['metrics'][m['name']]['value']:.4g}"
+            for m in SPEC["end_to_end"]) +
+            f" correct {sides['base'][1][-1]['correct']}/{sides['head'][1][-1]['correct']}",
+            flush=True)
+    files = {}
+    for side, (_, runs) in sides.items():
+        files[side] = workdir / f"perfab-{a.workload}-{side}.json"
+        files[side].write_text(json.dumps({"workload": a.workload, "runs": runs}, indent=1))
+    summary(sides["base"][1], sides["head"][1])
+    if bad:
+        print(f"{bad} runs reported correct: false")
+    cmp = subprocess.run([sys.executable, str(ROOT / "perfbench" / "steady.py"), "compare",
+                          str(files["base"]), str(files["head"])])
+    return 1 if bad else cmp.returncode
+
+
+if __name__ == "__main__":
+    sys.exit(main())

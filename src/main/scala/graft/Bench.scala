@@ -489,8 +489,9 @@ object Bench {
     * [[BatchAnalyzer.criticalFold]], so time outside jobs counts in full
     * and overlapping jobs count once, and critical_ms ≤ wall. */
   private[graft] def keyProfile(events: Dataset[SchedulerEvent], wallMs: Long): KeyProfile = {
-    val jobs = SpanBuilder.jobSpans(events).collect().toSeq
-    val stages = SpanBuilder.stageSpans(events).collect().toSeq
+    val rows = events.collect().toSeq
+    val jobs = SpanBuilder.jobSpansOf(rows)
+    val stages = SpanBuilder.stageSpansOf(rows)
     KeyProfile(jobs.size, stages.size, stages.map(_.numTasks.toLong).sum,
       stages.map(_.totalTaskDurationMs).sum,
       BatchAnalyzer.criticalFold(jobs, stages, wallMs).criticalTime)

@@ -1,7 +1,9 @@
 package graft.analyzer
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BoundColumns
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import graft.model._
 import graft.ops.Classify
 
@@ -27,19 +29,15 @@ import graft.ops.Classify
   *      zero-progress guard ⇒ NONEWBATCHES
   *      (ref `analyzer/StreamingQueryAnalyzer.scala:118-128`).
   *
-  * Steps 1–4 fold the collected span tables on the driver (they are
-  * driver-resident, see [[SpanBuilder]]); steps 2–4 are [[criticalFold]],
-  * which [[estimateAt]] and the catalog bench read too; step 5 keeps the Column
-  * classifiers, applied as a projection over the folded rows, which Spark
-  * evaluates on the driver without a job.
+  * Steps 1–4 fold the span tables on the driver (they are driver-resident,
+  * see [[SpanBuilder]]); steps 2–4 are [[criticalFold]], which
+  * [[estimateAt]] and the catalog bench read too. Step 5 evaluates the
+  * same Column classifiers the catalog uses, bound once per threshold pair
+  * ([[org.apache.spark.sql.graft.BoundColumns]]), on each folded row: no
+  * query is planned per call. [[analyzeOf]] is the kernel over Scala
+  * collections; [[analyze]] wraps it for Datasets.
   */
 object BatchAnalyzer {
-
-  /** Integer state ordinal expression (ref `common/StreamingState.scala`). */
-  private def ordinalOf(state: Column) =
-    Classify.stateOrdinals.foldLeft(lit(-1)) { case (acc, (name, ord)) =>
-      when(state === name, ord).otherwise(acc)
-    }
 
   /** One serial island: its wall-clock span, its critical time (max
     * per-job critical time — the unlimited-executor floor), and its total
@@ -99,10 +97,9 @@ object BatchAnalyzer {
 
   /** [[criticalFold]] of a progress row's batch: the jobs of streaming
     * batches grouped by (queryId, batchId), with their stages. */
-  private def batchFold(jobs: Dataset[JobSpan],
-                        stages: Dataset[StageSpan]): BatchProgress => CriticalFold = {
-    val stagesOf = stages.collect().toSeq.groupBy(_.jobId)
-    val jobsOf = jobs.collect().toSeq
+  private def batchFold(jobs: Seq[JobSpan], stages: Seq[StageSpan]): BatchProgress => CriticalFold = {
+    val stagesOf = stages.groupBy(_.jobId)
+    val jobsOf = jobs
       .collect { case j @ JobSpan(_, _, _, _, Some(q), Some(b)) => (q, b) -> j }
       .groupMap(_._1)(_._2)
     p => {
@@ -119,8 +116,7 @@ object BatchAnalyzer {
       (p.numInputRows / p.processedRowsPerSecond * 1000).toLong
     else 0L
 
-  /** Full pipeline: spans + progress + SLA config → one result per progress
-    * row. */
+  /** [[analyzeOf]] over Datasets, returned as a local Dataset. */
   def analyze(jobs: Dataset[JobSpan],
               stages: Dataset[StageSpan],
               progress: Dataset[BatchProgress],
@@ -130,24 +126,49 @@ object BatchAnalyzer {
               highFrac: Double = 0.7): Dataset[CriticalPathResult] = {
     val spark = jobs.sparkSession
     import spark.implicits._
+    spark.createDataset(analyzeOf(spark, jobs.collect().toSeq, stages.collect().toSeq,
+      progress.collect().toSeq, slas.collect().toSeq, defaultSlaMillis, lowFrac, highFrac))
+  }
+
+  /** The classifier's input row: the zero-progress guard's counts, then
+    * what `Classify.slaState` reads. */
+  private[graft] val ClassifyInput = new StructType()
+    .add("numInputRows", LongType).add("processedRowsPerSecond", DoubleType)
+    .add("batchRunningTime", LongType).add("criticalTime", LongType)
+    .add("expectedMicroBatchSLA", LongType)
+
+  /** Step 5 over [[ClassifyInput]]: the batch's state. */
+  private[graft] def stateColumn(lowFrac: Double, highFrac: Double): Column =
+    when(col("numInputRows") === 0 || col("processedRowsPerSecond") === 0, "NONEWBATCHES")
+      .otherwise(Classify.slaState(col("batchRunningTime"), col("criticalTime"),
+        col("expectedMicroBatchSLA").cast("double"), lowFrac, highFrac))
+
+  /** Full pipeline: spans + progress + SLA config → one result per progress
+    * row and SLA of its query, in progress order. `spark` only binds the
+    * classifier; no query runs. */
+  def analyzeOf(spark: SparkSession,
+                jobs: Seq[JobSpan],
+                stages: Seq[StageSpan],
+                progress: Seq[BatchProgress],
+                slas: Seq[QuerySla],
+                defaultSlaMillis: Long = 120000L,
+                lowFrac: Double = 0.3,
+                highFrac: Double = 0.7): Seq[CriticalPathResult] = {
     val foldOf = batchFold(jobs, stages)
-    val slaOf = slas.collect().toSeq.groupMap(_.queryIdent)(_.slaMillis)
-    val rows = for {
-      p <- progress.collect().toSeq
+    val slaOf = slas.groupMap(_.queryIdent)(_.slaMillis)
+    val classify = BoundColumns.memoized(("slaState", lowFrac, highFrac), spark, ClassifyInput)(
+      Seq(stateColumn(lowFrac, highFrac))).evaluator()
+    for {
+      p <- progress
+      brt = batchRunningTime(p)
       criticalTime = foldOf(p).criticalTime
       sla <- slaOf.getOrElse(p.queryId, Seq(defaultSlaMillis))
-    } yield (p.queryId, p.batchId, sla, batchRunningTime(p), criticalTime, p.numInputRows,
-      p.processedRowsPerSecond)
-    val state =
-      when(col("numInputRows") === 0 || col("processedRowsPerSecond") === 0, "NONEWBATCHES")
-        .otherwise(Classify.slaState(col("batchRunningTime"), col("criticalTime"),
-          col("expectedMicroBatchSLA").cast("double"), lowFrac, highFrac))
-    rows.toDF("queryId", "batchId", "expectedMicroBatchSLA", "batchRunningTime",
-        "criticalTime", "numInputRows", "processedRowsPerSecond")
-      .select(col("queryId"), col("batchId"), col("expectedMicroBatchSLA"),
-        col("batchRunningTime"), col("criticalTime"),
-        state.as("streamingQueryState"), ordinalOf(state).as("stateOrdinal"))
-      .as[CriticalPathResult]
+    } yield {
+      val state = classify(Row(p.numInputRows, p.processedRowsPerSecond, brt, criticalTime, sla))
+        .getString(0)
+      CriticalPathResult(p.queryId, p.batchId, sla, brt, criticalTime, state,
+        Classify.stateOrdinals(state))
+    }
   }
 
   /** Capacity what-if — the planning read beside critical time: the
@@ -182,7 +203,7 @@ object BatchAnalyzer {
       s"estimateAt needs positive slot counts; got $slotCounts")
     val spark = jobs.sparkSession
     import spark.implicits._
-    val foldOf = batchFold(jobs, stages)
+    val foldOf = batchFold(jobs.collect().toSeq, stages.collect().toSeq)
     // Every asked count appears for every batch in `progress`, even batches
     // with no recorded jobs (their estimate is brt itself — all serial as
     // far as telemetry can see).

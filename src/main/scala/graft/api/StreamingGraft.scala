@@ -87,10 +87,10 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
       lowFrac = config.criticalPathLowerThreshold,
       highFrac = config.criticalPathUpperThreshold)
     val collected = results.collect()
-    buffer(collected.toIndexedSeq)
-    if (config.shouldLogResults) collected.foreach(r => println(Reporting.logBlock(r)))
+    val changed = buffer(collected.toIndexedSeq)
+    if (config.shouldLogResults) changed.foreach(r => println(Reporting.logBlock(r)))
     reporter.foreach { rep =>
-      Reporting.renderJson(spark.createDataset(collected.toIndexedSeq), "graft", "run",
+      Reporting.renderJson(results, "graft", "run",
         org.apache.spark.sql.functions.lit(System.currentTimeMillis()))
         .collect().foreach(row => rep.sendEvent(row.getString(0)))
     }
@@ -103,7 +103,7 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     metrics.update(
       collected.sortBy(r => (r.queryId, r.batchId)).lastOption,
       (System.nanoTime() - t0) / 1000000L)
-    spark.createDataset(collected.toIndexedSeq)
+    results
   }
 
   /** Bounded history of analysis results, newest-last — the reference caps
@@ -113,7 +113,14 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     * lookback of a periodic report. */
   private val resultsBuffer = new java.util.ArrayDeque[CriticalPathResult]()
 
-  private def buffer(rs: Seq[CriticalPathResult]): Unit = resultsBuffer.synchronized {
+  /** The previous analysis' rows by batch. */
+  private var lastAnalyzed = Map.empty[(String, Long), CriticalPathResult]
+
+  /** Buffers `rs`; returns those the previous analysis did not produce as
+    * they are: new batches and rows a later event changed (a late `jobEnd`,
+    * an SLA override). The previous analysis, not the ring, is the
+    * reference: the ring may hold fewer batches than an analysis yields. */
+  private def buffer(rs: Seq[CriticalPathResult]): Seq[CriticalPathResult] = resultsBuffer.synchronized {
     // Repeated analyses re-produce the same retained batches; keyed
     // replacement (newest wins) keeps one row per (queryId, batchId) so the
     // discounted report never double-weights a batch and duplicates never
@@ -122,6 +129,9 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     resultsBuffer.removeIf(r => keys.contains((r.queryId, r.batchId)))
     rs.foreach(resultsBuffer.addLast)
     while (resultsBuffer.size > config.maxResultsRetention) resultsBuffer.removeFirst()
+    val changed = rs.filterNot(r => lastAnalyzed.get((r.queryId, r.batchId)).contains(r))
+    lastAnalyzed = rs.map(r => (r.queryId, r.batchId) -> r).toMap
+    changed
   }
 
   /** The retained analysis results (oldest first, ≤ maxResultsRetention). */
@@ -190,10 +200,8 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     val fresh = recentResults.filter { r =>
       r.batchId > lastReportedBatch.getOrDefault(r.queryId, -1L)
     }
-    val sources = progressBridge.newestSources.toDF("queryId", "sourcesDesc")
-    val agg = Reporting.aggregate(
-      spark.createDataset(fresh.toIndexedSeq), sources, config.discountFactor)
-    val collected = agg.collect()
+    val collected = Reporting.aggregateOf(spark, fresh, progressBridge.newestSources,
+      config.discountFactor)
     if (config.shouldLogResults)
       collected.foreach(a => println(Reporting.aggregateLogBlock(a)))
     reporter.foreach { rep =>

@@ -1,7 +1,9 @@
 package graft.report
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BoundColumns
+import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
 import graft.model.{AggregateStateResult, CriticalPathResult}
 import graft.ops.Classify
 
@@ -16,12 +18,11 @@ object Reporting {
     * (ref `StreamingLensReportingHelper.scala:180-197`). NONEWBATCHES
     * (ordinal 0) batches are excluded (ref `:181-182`; batches already
     * reported are the caller's to drop, per query, as
-    * `StreamingGraft.reportNow` does). A driver fold over the collected
-    * results, summed newest first. */
-  def discountedScore(results: Dataset[CriticalPathResult],
-                      discount: Double = 0.95): DataFrame = {
-    import results.sparkSession.implicits._
-    results.collect().toSeq
+    * `StreamingGraft.reportNow` does). One (queryId, score, batches scored)
+    * per query, summed newest first. */
+  def scoresOf(results: Seq[CriticalPathResult],
+               discount: Double = 0.95): Seq[(String, Double, Long)] =
+    results
       .filter(_.stateOrdinal != 0)
       .groupBy(_.queryId).toSeq
       .map { case (queryId, rs) =>
@@ -30,8 +31,6 @@ object Reporting {
         (queryId, ordinals.zip(weights).map { case (o, w) => o * w }.sum / weights.sum,
           rs.size.toLong)
       }
-      .toDF("queryId", "score", "n_batches")
-  }
 
   /** Recommendation text per aggregate state, specialized by source kind
     * like the reference's Kafka/File/Kinesis dispatch
@@ -58,25 +57,46 @@ object Reporting {
           sourceHint))
   }
 
-  /** Aggregate state + recommendation per query
-    * (ref `StreamingLensReportingHelper.scala:103-141`): the folded scores,
-    * looked up against the collected sources, classified by a projection
-    * Spark evaluates on the driver. */
+  /** [[aggregateOf]] over Datasets, returned as a local Dataset. */
   def aggregate(results: Dataset[CriticalPathResult],
                 sourcesByQuery: DataFrame, // (queryId, sourcesDesc)
                 discount: Double = 0.95): Dataset[AggregateStateResult] = {
-    import results.sparkSession.implicits._
-    val sourcesOf = sourcesByQuery.select(col("queryId"), col("sourcesDesc")).collect().toSeq
-      .groupMap(_.getString(0))(_.getString(1))
-    val rows = for {
-      score <- discountedScore(results, discount).collect().toSeq
-      sourcesDesc <- sourcesOf.getOrElse(score.getString(0), Seq(null))
-    } yield (score.getString(0), score.getDouble(1), sourcesDesc)
+    val spark = results.sparkSession
+    import spark.implicits._
+    val sources = sourcesByQuery.select(col("queryId"), col("sourcesDesc")).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1)))
+    spark.createDataset(aggregateOf(spark, results.collect().toSeq, sources, discount))
+  }
+
+  private[graft] val AggregateInput = new StructType()
+    .add("score", DoubleType).add("sourcesDesc", StringType)
+
+  /** Aggregate state and recommendation over [[AggregateInput]]. */
+  private[graft] def aggregateColumns: Seq[Column] = {
     val state = Classify.aggregateState(col("score"))
-    rows.toDF("queryId", "score", "sourcesDesc")
-      .select(col("queryId"), col("score"), state.as("state"),
-        recommendation(state, col("sourcesDesc")).as("recommendation"))
-      .as[AggregateStateResult]
+    Seq(state, recommendation(state, col("sourcesDesc")))
+  }
+
+  /** Aggregate state + recommendation per query and source description
+    * (ref `StreamingLensReportingHelper.scala:103-141`): the [[scoresOf]]
+    * scores, looked up against `sources` (queryId, sourcesDesc; a query
+    * without one gets a null description), classified by
+    * `Classify.aggregateState` and [[recommendation]], which are bound
+    * once, not planned per call. `spark` only binds them; no query runs. */
+  def aggregateOf(spark: SparkSession,
+                  results: Seq[CriticalPathResult],
+                  sources: Seq[(String, String)],
+                  discount: Double = 0.95): Seq[AggregateStateResult] = {
+    val sourcesOf = sources.groupMap(_._1)(_._2)
+    val classify = BoundColumns.memoized("aggregateState", spark, AggregateInput)(
+      aggregateColumns).evaluator()
+    for {
+      (queryId, score, _) <- scoresOf(results, discount)
+      sourcesDesc <- sourcesOf.getOrElse(queryId, Seq(null))
+    } yield {
+      val out = classify(Row(score, sourcesDesc))
+      AggregateStateResult(queryId, score, out.getString(0), out.getString(1))
+    }
   }
 
   /** Pretty duration, the reference's `pd()`:

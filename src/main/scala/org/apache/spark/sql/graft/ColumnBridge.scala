@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression,
+  InterpretedMutableProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column↔Expression converters, so graft's
   * native Catalyst expressions can surface as `Column`s. Same namespace
@@ -12,6 +16,42 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+}
+
+/** Columns analyzed once against an empty relation of `schema` and bound to
+  * its field ordinals, so the driver can evaluate them on Scala rows without
+  * planning a query per call. The analyzed plan is bound, not the optimized
+  * one: the optimizer folds a projection of an empty relation away. */
+final class BoundColumns private (exprs: Seq[Expression], input: StructType,
+                                  output: StructType) {
+
+  /** A row of `schema` to a row of the columns' values. Each evaluator owns
+    * one mutable projection: take a fresh one per call and thread. */
+  def evaluator(): Row => Row = {
+    val projection = InterpretedMutableProjection.createProjection(exprs)
+    projection.initialize(0)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(input)
+    val toScala = CatalystTypeConverters.createToScalaConverter(output)
+    row => toScala(projection(toCatalyst(row).asInstanceOf[InternalRow])).asInstanceOf[Row]
+  }
+}
+
+object BoundColumns {
+  def apply(spark: SparkSession, schema: StructType, cols: Column*): BoundColumns =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema).select(cols: _*)
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.analyzed match {
+      case p @ Project(list, child) =>
+        new BoundColumns(BindReferences.bindReferences(list, AttributeSeq(child.output)),
+          schema, p.schema)
+      case other => throw new IllegalStateException(s"expected a projection, got $other")
+    }
+
+  private val memo = scala.collection.concurrent.TrieMap.empty[Any, BoundColumns]
+
+  /** [[apply]] once per `key` for the JVM: later calls with the same key
+    * reuse the binding and do not build `cols`. */
+  def memoized(key: Any, spark: SparkSession, schema: StructType)(cols: => Seq[Column]): BoundColumns =
+    memo.getOrElseUpdate(key, apply(spark, schema, cols: _*))
 }
 
 /** Bridge for Dataset internals the public API does not expose: freeing the

@@ -3,6 +3,7 @@ package graft.api
 import graft.SparkSpec
 import graft.config.GraftConfig
 import graft.ingest.ListenerBridge
+import graft.model.CriticalPathResult
 import org.apache.spark.graft.{GraftMetricsSource, ListenerBusDrain, SparkTestHooks}
 import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -138,6 +139,67 @@ class StreamingGraftSpec extends SparkSpec {
     } finally {
       spark.sparkContext.removeSparkListener(sched)
       spark.streams.removeListener(prog)
+      g.stop()
+    }
+  }
+
+  /** A stopped two-batch query whose telemetry the bridges hold in full. */
+  private def runTwoBatches(name: String): Unit = {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[Int]
+    val query = mem.toDS().map(_ + 1)
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try {
+      mem.addData(1 to 500: _*)
+      query.processAllAvailable()
+      mem.addData(501 to 1000: _*)
+      query.processAllAvailable()
+    } finally query.stop()
+    ListenerBusDrain(spark)
+  }
+
+  test("shouldLogResults prints each result once, and again when it changes") {
+    // A results ring smaller than the analysis must not make rows print again.
+    val g = new StreamingGraft(spark, Map("streamingLens.shouldLogResults" -> "true",
+      "streamingLens.maxResultsRetention" -> "1"))
+    try {
+      runTwoBatches("graft_log_once")
+      def logged(): (Seq[String], Seq[CriticalPathResult]) = {
+        val out = new java.io.ByteArrayOutputStream()
+        val rows = Console.withOut(out)(g.analyzeNow().collect().toSeq)
+        (out.toString("UTF-8").linesIterator.filter(_.startsWith("StreamingLens report")).toSeq,
+          rows)
+      }
+      val (first, rows) = logged()
+      assert(rows.size >= 2 && first.size === rows.size, first)
+      assert(logged()._1.isEmpty, "a second call on the same telemetry printed again")
+      // An SLA override changes every row of the query.
+      val queryId = rows.head.queryId
+      g.updateExpectedMicroBatchSLA(queryId, 1234L)
+      assert(logged()._1.size === rows.count(_.queryId == queryId))
+      assert(logged()._1.isEmpty)
+    } finally g.stop()
+  }
+
+  test("analyzeNow() and reportNow() run no Spark job") {
+    import org.apache.spark.scheduler.SparkListener
+    val g = new StreamingGraft(spark, Map("streamingLens.shouldLogResults" -> "false"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    try {
+      runTwoBatches("graft_no_jobs")
+      spark.sparkContext.addSparkListener(counter)
+      val results = g.analyzeNow().collect()
+      val report = g.reportNow().collect()
+      ListenerBusDrain(spark)
+      assert(results.nonEmpty && report.nonEmpty)
+      assert(jobs.get === 0, s"${jobs.get} Spark jobs")
+    } finally {
+      spark.sparkContext.removeSparkListener(counter)
       g.stop()
     }
   }

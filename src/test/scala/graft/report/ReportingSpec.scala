@@ -10,26 +10,24 @@ class ReportingSpec extends SparkSpec {
     CriticalPathResult("q", b, 1000, 500, 400, state, ord)
 
   test("discounted-history: closed form over known states") {
-    import spark.implicits._
     // batches 1..3 with ordinals 1, 2, 4 (newest = batch 3, ordinal 4)
     val results = Seq(
       res(1, "OVERPROVISIONED", 1),
       res(2, "OPTIMUM", 2),
-      res(3, "UNHEALTHY", 4)).toDS()
+      res(3, "UNHEALTHY", 4))
     val d = 0.95
     val expected = (4 * 1.0 + 2 * d + 1 * d * d) / (1.0 + d + d * d)
-    val got = Reporting.discountedScore(results, d).head().getDouble(1)
+    val got = Reporting.scoresOf(results, d).head._2
     assert(math.abs(got - expected) < 1e-9)
   }
 
   test("NONEWBATCHES batches are excluded") {
-    import spark.implicits._
     val results = Seq(
       res(2, "NONEWBATCHES", 0),     // excluded: ordinal 0
-      res(3, "OPTIMUM", 2)).toDS()
-    val got = Reporting.discountedScore(results, 0.95).head()
-    assert(got.getDouble(1) === 2.0)
-    assert(got.getLong(2) === 1L)
+      res(3, "OPTIMUM", 2))
+    val (_, score, batches) = Reporting.scoresOf(results, 0.95).head
+    assert(score === 2.0)
+    assert(batches === 1L)
   }
 
   test("aggregate state + source-specific recommendation") {

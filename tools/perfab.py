@@ -2,7 +2,7 @@
 """Alternating A/B benchmark runs of a base revision against this checkout.
 
     python3 tools/perfab.py --base REV --workload W --pairs N \
-        [--first-seed 1] [--seconds S] --workdir DIR
+        [--first-seed 1] [--seconds S] [--trace] --workdir DIR
 
 Exports the committed files of REV into a fresh directory under DIR
 (`git archive`, the committed tree only, so no build state of this checkout
@@ -13,12 +13,19 @@ first in each pair so drift over the session falls on both. Pair i uses
 seed first-seed + i on both sides.
 
 Both sides are written in `perfbench/steady.py run` format to
-DIR/perfab-<workload>-base.json and DIR/perfab-<workload>-head.json. The tool
+DIR/perfab-<workload>-base.json and DIR/perfab-<workload>-head.json
+(perfab-<workload>-traced-*.json with --trace). The tool
 prints each end-to-end metric per pair, then per metric: the pairs in which
 this checkout is better, both medians and the base's quartiles, and whether
 the median gain exceeds the base's interquartile range. It finishes with
 `steady.py compare` of the two files (the benchmark's regression bounds) and
 exits with its status, or 1 when a run fails or reports `correct: false`.
+
+With --trace the runs are traced (`run.py --trace 1`), which report per-layer
+metrics instead of the end-to-end ones. Each run's `correct`,
+`trace.accounted_pct`, `api.analyze_ms_p50`, `api.report_ms_p50` and
+`api.spark_jobs_per_call` are printed, and the exit status is 1 when a run is incorrect or its accounted share lies outside the
+accepted range (`ACCOUNTED_RANGE` of tools/layers.py).
 """
 import argparse
 import json
@@ -27,9 +34,13 @@ import subprocess
 import sys
 from pathlib import Path
 
+from layers import ACCOUNTED_RANGE
+
 ROOT = Path(__file__).resolve().parent.parent
 SPEC = json.loads((ROOT / "BENCHMARK.json").read_text())
 SAMPLES = "[perfbench] samples "
+TRACED = ("trace.accounted_pct", "api.analyze_ms_p50", "api.report_ms_p50",
+          "api.spark_jobs_per_call")
 
 
 def git(*args):
@@ -53,11 +64,11 @@ def base_tree(rev, workdir):
     return sha, tree
 
 
-def run_once(tree, workload, seed, seconds):
+def run_once(tree, workload, seed, seconds, trace):
     """One run.py result in steady.py's run format, or None if it failed."""
     out = subprocess.run(
         [sys.executable, str(tree / "perfbench" / "run.py"), "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(int(trace))],
         stdout=subprocess.PIPE, text=True)
     lines = out.stdout.strip().splitlines()
     if out.returncode != 0 or not lines:
@@ -70,6 +81,24 @@ def run_once(tree, workload, seed, seconds):
             name, *xs = line[len(SAMPLES):].split()
             r["samples"][name] = [float(x) for x in xs]
     return r
+
+
+def traced_value(run, name):
+    return run["metrics"].get(name, {}).get("value")
+
+
+def traced_ok(side, seed, run):
+    """Print a traced run's checked fields; whether it is correct and its
+    accounted share lies in the accepted range."""
+    lo, hi = ACCOUNTED_RANGE
+    acc = traced_value(run, "trace.accounted_pct")
+    problems = ([] if run["correct"] is True else ["correct is not true"]) + (
+        [] if acc is not None and lo <= acc <= hi else [f"accounted outside {lo:g}-{hi:g} %"])
+    print(f"  {side} seed {seed}: correct {run['correct']} " + " ".join(
+        f"{name} {traced_value(run, name):.4g}" if traced_value(run, name) is not None
+        else f"{name} -" for name in TRACED) +
+        ("" if not problems else " FAIL: " + "; ".join(problems)), flush=True)
+    return not problems
 
 
 def quartiles(values):
@@ -99,6 +128,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=5)
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=SPEC["run_seconds"])
+    ap.add_argument("--trace", action="store_true",
+                    help="traced runs: check correctness and the accounted share per run")
     ap.add_argument("--workdir", required=True,
                     help="directory for the base tree and the two result files")
     a = ap.parse_args()
@@ -112,12 +143,14 @@ def main():
         seed = a.first_seed + i
         order = ["base", "head"] if i % 2 == 0 else ["head", "base"]
         for side in order:
-            r = run_once(sides[side][0], a.workload, seed, a.seconds)
+            r = run_once(sides[side][0], a.workload, seed, a.seconds, a.trace)
             if r is None:
                 print(f"pair {i} seed {seed} {side}: run failed")
                 return 1
-            bad += not r["correct"]
+            bad += not (traced_ok(side, seed, r) if a.trace else r["correct"])
             sides[side][1].append(r)
+        if a.trace:
+            continue
         print(f"pair {i} seed {seed} ({' then '.join(order)}): " + " ".join(
             f"{m['name']} {sides['base'][1][-1]['metrics'][m['name']]['value']:.4g}"
             f"->{sides['head'][1][-1]['metrics'][m['name']]['value']:.4g}"
@@ -126,8 +159,12 @@ def main():
             flush=True)
     files = {}
     for side, (_, runs) in sides.items():
-        files[side] = workdir / f"perfab-{a.workload}-{side}.json"
+        files[side] = workdir / f"perfab-{a.workload}{'-traced' if a.trace else ''}-{side}.json"
         files[side].write_text(json.dumps({"workload": a.workload, "runs": runs}, indent=1))
+    if a.trace:
+        if bad:
+            print(f"{bad} traced runs failed a check")
+        return 1 if bad else 0
     summary(sides["base"][1], sides["head"][1])
     if bad:
         print(f"{bad} runs reported correct: false")

@@ -20,9 +20,9 @@ import graft.model._
   * progress rows, and the replay file sources feed the same functions under
   * the same bound). The Dataset signatures ([[jobSpans]], [[stageSpans]],
   * [[batchProgress]]) collect their input, call the kernel and return a
-  * local Dataset, which Spark reads on the driver without a job. The
-  * bridges' executorAdded/executorRemoved rows (T6) have no builder: the
-  * capacity what-if counts task slots, not executors.
+  * local Dataset, which Spark reads on the driver without a job. Rows of
+  * other kinds, such as the executor rows of older replay files (T6), are
+  * ignored: the capacity what-if counts task slots, not executors.
   */
 object SpanBuilder {
 

@@ -18,8 +18,8 @@ import graft.report.{EventsReporter, Reporting}
   *
   * Where the reference hand-schedules per-query threads, analysis here is
   * one driver fold over the retained telemetry, which the bridges already
-  * hold in driver memory: one scheduler row per job, per stage and per
-  * executor event, capped at 2^20, and up to 2^16 progress rows. It
+  * hold in driver memory: one scheduler row per job and per stage, capped
+  * at 2^20, and up to 2^16 progress rows. It
   * launches no Spark job, so [[analyzeNow]] can run on any
   * cadence without taking cores from the monitored queries (the
   * reference's 5-minute default belongs to the caller's trigger,
@@ -69,9 +69,12 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
   }
 
   /** Run the critical-path analysis over the retained telemetry; returns
-    * the per-batch results. Retention is applied after each analysis
-    * (ref `QueryInsightsManager.scala:234-244`), and the metrics source's
-    * analysisTime gauge reads the whole call. */
+    * the per-batch results. Each result reaches the log (with
+    * `shouldLogResults`) and the reporter once: again only when it changes.
+    * Retention is applied after each analysis
+    * (ref `QueryInsightsManager.scala:234-244`). The metrics source's
+    * result gauges read the newest result, the last in progress arrival
+    * order, and its analysisTime gauge reads the whole call. */
   def analyzeNow(): Dataset[CriticalPathResult] = {
     import spark.implicits._
     val t0 = System.nanoTime()
@@ -90,19 +93,16 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     val changed = buffer(collected.toIndexedSeq)
     if (config.shouldLogResults) changed.foreach(r => println(Reporting.logBlock(r)))
     reporter.foreach { rep =>
-      Reporting.renderJson(results, "graft", "run",
-        org.apache.spark.sql.functions.lit(System.currentTimeMillis()))
-        .collect().foreach(row => rep.sendEvent(row.getString(0)))
+      val now = System.currentTimeMillis()
+      changed.foreach(r => rep.sendEvent(Reporting.eventJson(r, "graft", "run", now)))
     }
     progressBridge.evictBeyond(config.maxBatchesRetention)
     // Scheduler telemetry retention: keep a window wide enough for
-    // maxBatchesRetention analysis intervals; without this the queue fills
-    // to its cap and silently drops every new event.
+    // maxBatchesRetention analysis intervals; without this the bridge fills
+    // to its cap and silently drops every new job and stage.
     schedulerBridge.evictBefore(System.currentTimeMillis() -
       config.maxBatchesRetention.toLong * config.analysisIntervalMinutes * 60000L)
-    metrics.update(
-      collected.sortBy(r => (r.queryId, r.batchId)).lastOption,
-      (System.nanoTime() - t0) / 1000000L)
+    metrics.update(collected.lastOption, (System.nanoTime() - t0) / 1000000L)
     results
   }
 
@@ -196,7 +196,6 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     * cadence, never silent loss. */
   def reportNow(): Dataset[AggregateStateResult] = reportLock.synchronized {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val fresh = recentResults.filter { r =>
       r.batchId > lastReportedBatch.getOrDefault(r.queryId, -1L)
     }
@@ -205,10 +204,8 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     if (config.shouldLogResults)
       collected.foreach(a => println(Reporting.aggregateLogBlock(a)))
     reporter.foreach { rep =>
-      Reporting.renderAggregateJson(
-        spark.createDataset(collected.toIndexedSeq), "graft", "aggregate",
-        lit(System.currentTimeMillis()))
-        .collect().foreach(row => rep.sendEvent(row.getString(0)))
+      val now = System.currentTimeMillis()
+      collected.foreach(a => rep.sendEvent(Reporting.aggregateEventJson(a, "graft", "aggregate", now)))
     }
     fresh.foreach(r =>
       lastReportedBatch.merge(r.queryId, r.batchId, (a, b) => math.max(a, b)))

@@ -18,7 +18,8 @@ import graft.model.{ProgressEvent, SchedulerEvent}
   * The bridges keep immutable rows in driver memory, bounded at 2^20
   * scheduler and 2^16 progress rows by default; the analysis folds a
   * snapshot of those rows on the driver ([[graft.analyzer.SpanBuilder]]).
-  * The scheduler bridge folds at ingest, as the reference keeps one
+  * Each bridge holds only the rows the analysis reads. The scheduler bridge
+  * folds at ingest, as the reference keeps one
   * `jobMap` and one `stageMap` entry each (ref `StreamingAppTracker.scala:
   * 33-34`): one `jobStart` row per job, whose `endTime` the job's end sets,
   * and one `stageSubmitted` row per stage, whose `endTime` the stage's
@@ -28,11 +29,13 @@ import graft.model.{ProgressEvent, SchedulerEvent}
   * each task end into its stage's `StageTimeSpan` (ref
   * `StreamingAppListener.scala:127`). A resubmitted stage attempt merges
   * into its stage's row. An end or task event with no open row joins
-  * nothing and is ignored. Executor events append one row each. The cap
-  * counts each job, each stage and each executor event once; rows past it
-  * are counted in `droppedCount`, which the metrics source publishes as its
-  * droppedEvents gauge. The listener-bus thread does O(1) work per event,
-  * which is what keeps a busy app from dropping bus events.
+  * nothing and is ignored, and so are executor events. The cap counts each
+  * job and each stage once; rows past it are counted in `droppedCount`,
+  * which the metrics source publishes as its droppedEvents gauge. The
+  * progress bridge holds one `progress` row per progress event; query
+  * started and terminated events leave no row. The listener-bus thread does
+  * O(1) work per event, which is what keeps a busy app from dropping bus
+  * events.
   */
 object ListenerBridge {
 
@@ -44,20 +47,13 @@ object ListenerBridge {
   val BatchIdKey = "streaming.sql.batchId"
 
   class SchedulerBridge(maxBuffered: Int = 1 << 20) extends SparkListener {
-    private val queue = new ConcurrentLinkedQueue[SchedulerEvent]()
     private val jobs = new ConcurrentHashMap[Long, SchedulerEvent]()
     private val stages = new ConcurrentHashMap[Int, SchedulerEvent]()
-    // ConcurrentLinkedQueue.size is O(n); the bus thread must stay O(1),
-    // so the retained count (queue, job and stage rows) is tracked separately.
-    private val retained = new AtomicInteger(0)
     private val dropped = new AtomicLong(0)
 
-    /** Whether one more row fits under the cap; counts it, or the drop. */
+    /** Whether one more row fits under the cap; counts the drop if not. */
     private def admit(): Boolean =
-      if (retained.get < maxBuffered) { retained.incrementAndGet(); true }
-      else { dropped.incrementAndGet(); false }
-
-    private def offer(e: SchedulerEvent): Unit = if (admit()) queue.add(e)
+      retainedCount < maxBuffered || { dropped.incrementAndGet(); false }
 
     /** Opens `key`'s row, or merges `row` into the open one. */
     private def open[K](rows: ConcurrentHashMap[K, SchedulerEvent], key: K, row: SchedulerEvent)
@@ -74,32 +70,28 @@ object ListenerBridge {
 
     def droppedCount: Long = dropped.get
 
-    /** Rows held: executor, job and stage rows. */
-    def retainedCount: Long = retained.get
+    /** Rows held: job and stage rows. */
+    def retainedCount: Long = jobs.size + stages.size
 
-    /** Snapshot the retained rows (queue rows, then job rows, then stage
-      * rows) into a Dataset without consuming them — telemetry stays
-      * available to later analyses, like the reference's retained tracker
-      * maps (`StreamingAppTracker.scala:33-42`). */
+    /** Snapshot the retained rows (job rows, then stage rows) into a
+      * Dataset without consuming them — telemetry stays available to later
+      * analyses, like the reference's retained tracker maps
+      * (`StreamingAppTracker.scala:33-42`). */
     def snapshot(spark: SparkSession): Dataset[SchedulerEvent] = {
       import spark.implicits._
-      spark.createDataset(
-        (queue.asScala ++ jobs.values.asScala ++ stages.values.asScala).toSeq)
+      spark.createDataset((jobs.values.asScala ++ stages.values.asScala).toSeq)
     }
 
     /** Retention eviction: drop rows older than `horizonMs`
-      * (ref purge `StreamingAppTracker.scala:44-74`). A job or stage row's
-      * time is its start. */
+      * (ref purge `StreamingAppTracker.scala:44-74`). A row's time is its
+      * job's or stage's start. */
     def evictBefore(horizonMs: Long): Unit = {
-      queue.removeIf(e => e.time < horizonMs)
       jobs.values.removeIf(e => e.time < horizonMs)
       stages.values.removeIf(e => e.time < horizonMs)
-      retained.set(queue.size + jobs.size + stages.size)
     }
 
     private def base(kind: String, time: Long) = SchedulerEvent(
-      kind, time, None, Nil, None, Nil, None, None, None, None, None, None,
-      None, None, None, None)
+      kind, time, None, Nil, None, Nil, None, None, None, None, None, None)
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val p = Option(e.properties)
@@ -145,15 +137,6 @@ object ListenerBridge {
         totalDurationMs = Some(row.totalDurationMs.getOrElse(0L) + duration),
         failed = Some(row.failed.contains(true) || failed)))
     }
-
-    override def onExecutorAdded(e: SparkListenerExecutorAdded): Unit =
-      offer(base("executorAdded", e.time).copy(
-        executorId = Some(e.executorId),
-        host = Some(e.executorInfo.executorHost),
-        cores = Some(e.executorInfo.totalCores)))
-
-    override def onExecutorRemoved(e: SparkListenerExecutorRemoved): Unit =
-      offer(base("executorRemoved", e.time).copy(executorId = Some(e.executorId)))
   }
 
   class ProgressBridge(maxBuffered: Int = 1 << 16) extends StreamingQueryListener {
@@ -176,36 +159,22 @@ object ListenerBridge {
       * events without a Dataset: the sources of the query's progress event
       * with the highest batch id, joined by ", ". */
     def newestSources: Seq[(String, String)] =
-      queue.asScala.toSeq
-        .filter(e => e.kind == "progress" && e.batchId.isDefined)
-        .groupBy(_.queryId).toSeq
+      queue.asScala.toSeq.groupBy(_.queryId).toSeq
         .map { case (queryId, es) => (queryId, es.maxBy(_.batchId.get).sources.mkString(", ")) }
 
     /** Retention eviction (ref `QueryInsightsManager.scala:234-240`): keep
-      * only the newest `maxBatches` batch ids per query, and drop the
-      * batchId-less started/terminated lifecycle rows of runs that have
-      * terminated AND have no retained batches left — otherwise restarts
-      * accumulate lifecycle rows until the buffer cap silently drops
-      * everything new. */
+      * only the newest `maxBatches` batch ids per query. */
     def evictBeyond(maxBatches: Int): Unit = {
-      val snapshotSeq = queue.asScala.toSeq
       // .toSeq before flatMap: flatMapping a Map into tuples would rebuild a
       // Map and collapse all batches of a query onto the last one.
-      val keep = snapshotSeq
-        .filter(_.batchId.isDefined)
+      val keep = queue.asScala.toSeq
         .groupBy(_.queryId)
         .toSeq
         .flatMap { case (q, es) =>
           es.flatMap(_.batchId).distinct.sorted.takeRight(maxBatches)
             .map(b => (q, b))
         }.toSet
-      val retainedQueries = keep.map(_._1)
-      val terminatedQueries = snapshotSeq.filter(_.kind == "terminated").map(_.queryId).toSet
-      queue.removeIf { e =>
-        (e.batchId.isDefined && !keep.contains((e.queryId, e.batchId.get))) ||
-        (e.batchId.isEmpty && terminatedQueries.contains(e.queryId) &&
-          !retainedQueries.contains(e.queryId))
-      }
+      queue.removeIf(e => !keep.contains((e.queryId, e.batchId.get)))
       queued.set(queue.size)
     }
 
@@ -213,9 +182,7 @@ object ListenerBridge {
       if (queued.get < maxBuffered) { queue.add(e); queued.incrementAndGet() }
       else dropped.incrementAndGet()
 
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-      offer(ProgressEvent("started", e.id.toString, e.runId.toString,
-        Option(e.name), None, Some(e.timestamp), None, None, Nil, None))
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
 
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       val p = e.progress
@@ -225,8 +192,6 @@ object ListenerBridge {
         p.sources.map(_.description).toSeq, Option(p.sink).map(_.description)))
     }
 
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-      offer(ProgressEvent("terminated", e.id.toString, e.runId.toString,
-        None, None, None, None, None, Nil, None))
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 }

@@ -13,20 +13,16 @@ package graft.model
   * (`StreamingAppTracker.scala:33-34`): its `jobStart` row carries the
   * job's end in `endTime`, and its `stageSubmitted` row carries the stage's
   * end in `endTime` and the fold of its tasks (`durationMs`,
-  * `totalDurationMs`, `failed`); executor rows stay one per callback.
-  * Nullable fields depend on `kind`. */
+  * `totalDurationMs`, `failed`). Rows of any other kind are ignored by the
+  * span builders. Nullable fields depend on `kind`. */
 case class SchedulerEvent(
-    kind: String,                 // jobStart|jobEnd|stageSubmitted|stageCompleted|taskEnd|executorAdded|executorRemoved
+    kind: String,                 // jobStart|jobEnd|stageSubmitted|stageCompleted|taskEnd
     time: Long,                   // epoch millis
     jobId: Option[Long],
     stageIds: Seq[Int],
     stageId: Option[Int],
     parentStageIds: Seq[Int],
     numTasks: Option[Int],
-    taskId: Option[Long],
-    executorId: Option[String],
-    host: Option[String],
-    cores: Option[Int],
     durationMs: Option[Long],     // taskEnd, folded stageSubmitted: the row's longest task
     failed: Option[Boolean],      // taskEnd: the task failed; stageCompleted: the stage did;
                                   // folded stageSubmitted: the stage or any of its tasks did
@@ -40,10 +36,12 @@ case class SchedulerEvent(
     // seen; None while the job or stage is in flight, and on per-event rows
     endTime: Option[Long] = None)
 
-/** Streaming-query lifecycle/progress event
-  * (ref `listener/QueryProgressListener.scala:34-89`). */
+/** Streaming-query progress event
+  * (ref `listener/QueryProgressListener.scala:34-89`). The live bridge holds
+  * only `progress` rows; replay files may also hold `started`/`terminated`
+  * lifecycle rows, which the analysis ignores. */
 case class ProgressEvent(
-    kind: String,                 // started | progress | terminated
+    kind: String,                 // progress (started | terminated in replay files)
     queryId: String,
     queryRunId: String,
     queryName: Option[String],

@@ -1,8 +1,10 @@
 package graft.report
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.BoundColumns
+import org.apache.spark.sql.graft.{BoundColumns, ColumnBridge}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
 import graft.model.{AggregateStateResult, CriticalPathResult}
 import graft.ops.Classify
@@ -101,53 +103,44 @@ object Reporting {
 
   /** Pretty duration, the reference's `pd()`:
     * millis → "NNs NNNms" (ref `QueryInsightsManager.scala:228-232`).
-    * `%02d`-style padding — pads short values but never truncates long
-    * ones (`lpad` would cut "120" to "12"). */
-  private def padMin(c: Column, width: Int): Column = {
-    val s = c.cast("string")
-    when(length(s) >= width, s).otherwise(lpad(s, width, "0"))
-  }
+    * `%02d`-style padding pads short values but never truncates long ones;
+    * a negative duration keeps its sign in the millis ("00s -05ms"). */
+  def pd(ms: Long): String = "%02ds %03dms".format(ms / 1000, ms % 1000)
 
-  def pd(ms: Column): Column =
-    concat(
-      padMin((ms / 1000).cast("long"), 2), lit("s "),
-      padMin(ms % 1000, 3), lit("ms"))
+  private val json = new ObjectMapper()
 
-  /** JSON event rendering of a result row
+  /** One reporter event, compact JSON in the reference's envelope
     * (ref `StreamingLensReportingHelper.scala:80-92`). */
-  def renderJson(results: Dataset[CriticalPathResult], queryName: String,
-                 runId: String, analysisTimeMs: Column): DataFrame =
-    results.toDF().select(
-      to_json(struct(
-        concat(col("queryId"), lit("-"), col("batchId")).as("eventId"),
-        lit(queryName).as("name"),
-        lit(runId).as("runId"),
-        analysisTimeMs.as("eventTimeMillis"),
-        col("streamingQueryState").as("state"),
-        concat(
-          lit("Batch "), col("batchId"),
-          lit(": running "), pd(col("batchRunningTime")),
-          lit(", critical "), pd(col("criticalTime")),
-          lit(", SLA "), pd(col("expectedMicroBatchSLA"))).as("displayText")
-      )).as("event"))
+  private def event(eventId: String, queryName: String, runId: String,
+                    eventTimeMillis: Long, state: String, displayText: String): String =
+    json.createObjectNode()
+      .put("eventId", eventId).put("name", queryName).put("runId", runId)
+      .put("eventTimeMillis", eventTimeMillis).put("state", state)
+      .put("displayText", displayText).toString
 
-  /** JSON event rendering of one aggregate report row
-    * (same envelope as [[renderJson]], ref
-    * `StreamingLensReportingHelper.scala:80-92`). */
-  def renderAggregateJson(agg: Dataset[AggregateStateResult], queryName: String,
-                          runId: String, eventTimeMillis: Column): DataFrame =
-    agg.toDF().select(
-      to_json(struct(
-        concat(col("queryId"), lit("-aggregate")).as("eventId"),
-        lit(queryName).as("name"),
-        lit(runId).as("runId"),
-        eventTimeMillis.as("eventTimeMillis"),
-        col("state"),
-        concat(
-          lit("Aggregate state "), col("state"),
-          lit(" (score "), round(col("score"), 2),
-          lit("): "), col("recommendation")).as("displayText")
-      )).as("event"))
+  /** JSON event of a result row, rendered on the driver. */
+  def eventJson(r: CriticalPathResult, queryName: String, runId: String,
+                eventTimeMillis: Long): String =
+    event(s"${r.queryId}-${r.batchId}", queryName, runId, eventTimeMillis,
+      r.streamingQueryState,
+      s"Batch ${r.batchId}: running ${pd(r.batchRunningTime)}, " +
+        s"critical ${pd(r.criticalTime)}, SLA ${pd(r.expectedMicroBatchSLA)}")
+
+  /** JSON event of one aggregate report row, in [[eventJson]]'s envelope. */
+  def aggregateEventJson(a: AggregateStateResult, queryName: String, runId: String,
+                         eventTimeMillis: Long): String =
+    event(s"${a.queryId}-aggregate", queryName, runId, eventTimeMillis, a.state,
+      s"Aggregate state ${a.state} (score ${"%.2f".format(a.score)}): ${a.recommendation}")
+
+  /** [[eventJson]] of each result, as an `event` column. `analysisTimeMs`
+    * must be a literal: it is evaluated once, without a query. */
+  def renderJson(results: Dataset[CriticalPathResult], queryName: String,
+                 runId: String, analysisTimeMs: Column): DataFrame = {
+    val spark = results.sparkSession
+    import spark.implicits._
+    val time = ColumnBridge.literalValue(analysisTimeMs).asInstanceOf[Number].longValue
+    results.collect().toSeq.map(eventJson(_, queryName, runId, time)).toDF("event")
+  }
 
   /** Driver-log pretty block for one aggregate report
     * (ref `StreamingLensReportingHelper.scala:199-207`); texts our own. */
@@ -158,12 +151,10 @@ object Reporting {
 
   /** Driver-log pretty block for one analysis
     * (ref `QueryInsightsManager.scala:206-232`), formatted on the driver. */
-  def logBlock(r: CriticalPathResult): String = {
-    def fmt(v: Long) = "%02ds %03dms".format(v / 1000, v % 1000)
+  def logBlock(r: CriticalPathResult): String =
     s"""|StreamingLens report - query ${r.queryId} batch ${r.batchId}
-        |  Expected Micro Batch SLA: ${fmt(r.expectedMicroBatchSLA)}
-        |  Batch Running Time:       ${fmt(r.batchRunningTime)}
-        |  Critical Time:            ${fmt(r.criticalTime)}
+        |  Expected Micro Batch SLA: ${pd(r.expectedMicroBatchSLA)}
+        |  Batch Running Time:       ${pd(r.batchRunningTime)}
+        |  Critical Time:            ${pd(r.criticalTime)}
         |  Streaming Query State:    ${r.streamingQueryState}""".stripMargin
-  }
 }

@@ -14,9 +14,9 @@ import graft.model.CriticalPathResult
   * batchRunningTime, criticalTime, state ordinal, analysisTime (the whole
   * `analyzeNow()` call), plus two gauges on the listener bridges' state:
   * droppedEvents, read from `droppedEvents`, counts the jobs, stages and
-  * executor and progress events the bridges refused at their caps (the
-  * scheduler bridge holds one row per job and per stage, so end and task
-  * events never count), and retainedRows, read from `retainedRows`, the
+  * progress events the bridges refused at their caps (the scheduler bridge
+  * holds one row per job and per stage, so end, task and executor events
+  * never count, nor do query started and terminated events), and retainedRows, read from `retainedRows`, the
   * scheduler plus progress rows the bridges hold: the analysis's queue
   * depth, which each [[graft.api.StreamingGraft.analyzeNow]] reads whole.
   *

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression,
   InterpretedMutableProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column↔Expression converters, so graft's
@@ -16,6 +16,9 @@ import org.apache.spark.sql.types.StructType
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The value of a literal Column, read without planning a query. */
+  def literalValue(c: Column): Any = ColumnNodeToExpressionConverter(c.node).eval()
 }
 
 /** Columns analyzed once against an empty relation of `schema` and bound to

@@ -13,8 +13,8 @@ class BenchSpec extends SparkSpec {
                   stageIds: Seq[Int] = Nil, stageId: Option[Int] = None,
                   parents: Seq[Int] = Nil, task: Option[Long] = None,
                   sqlExec: Option[Long] = None): SchedulerEvent =
-    SchedulerEvent(kind, time, jobId, stageIds, stageId, parents, Some(1), None, None, None,
-      None, task, Some(false), sqlExec, None, None)
+    SchedulerEvent(kind, time, jobId, stageIds, stageId, parents, Some(1), task, Some(false),
+      sqlExec, None, None)
 
   private def stage(id: Int, start: Long, end: Long, task: Long,
                     parents: Seq[Int] = Nil): Seq[SchedulerEvent] = Seq(

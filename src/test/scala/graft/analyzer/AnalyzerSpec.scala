@@ -17,8 +17,7 @@ class AnalyzerSpec extends SparkSpec {
                  queryId: Option[String] = None,
                  batchId: Option[Long] = None): SchedulerEvent =
     SchedulerEvent(kind, time, jobId, stageIds, stageId, parents,
-      numTasks = Some(1), taskId = None, executorId = None, host = None,
-      cores = None, durationMs = durationMs, failed = Some(false),
+      numTasks = Some(1), durationMs = durationMs, failed = Some(false),
       sqlExecutionId = sqlExecutionId, queryId = queryId, batchId = batchId)
 
   private def progress(q: String, b: Long, rows: Long, rps: Double): BatchProgress =

@@ -54,8 +54,7 @@ class SpanBuilderSpec extends AnyFunSuite {
   }
 
   private def row(kind: String, time: Long): SchedulerEvent =
-    SchedulerEvent(kind, time, None, Nil, None, Nil, None, None, None, None, None, None,
-      None, None, None, None)
+    SchedulerEvent(kind, time, None, Nil, None, Nil, None, None, None, None, None, None)
 
   /** Seeded telemetry: per-event and bridge-folded jobs and stages,
     * resubmitted stages, task ends after completion, orphan end events,
@@ -116,7 +115,7 @@ class SpanBuilderSpec extends AnyFunSuite {
         }
       }
     }
-    rows += row("executorAdded", 900).copy(executorId = Some("1"), cores = Some(4))
+    rows += row("executorAdded", 900)
     rnd.shuffle(rows.result())
   }
 

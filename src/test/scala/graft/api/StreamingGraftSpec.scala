@@ -8,7 +8,7 @@ import org.apache.spark.graft.{GraftMetricsSource, ListenerBusDrain, SparkTestHo
 import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** Reflection-loaded by the reporter SPI in the aggregate-report test. */
+/** Reflection-loaded by the reporter SPI in the specs that configure it. */
 object CapturingReporter {
   val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
@@ -162,19 +162,27 @@ class StreamingGraftSpec extends SparkSpec {
 
   test("shouldLogResults prints each result once, and again when it changes") {
     // A results ring smaller than the analysis must not make rows print again.
+    // The reporter receives the rows the log prints.
+    CapturingReporter.events.clear()
     val g = new StreamingGraft(spark, Map("streamingLens.shouldLogResults" -> "true",
-      "streamingLens.maxResultsRetention" -> "1"))
+      "streamingLens.maxResultsRetention" -> "1",
+      "streamingLens.reporter.className" -> classOf[CapturingReporter].getName))
     try {
       runTwoBatches("graft_log_once")
       def logged(): (Seq[String], Seq[CriticalPathResult]) = {
         val out = new java.io.ByteArrayOutputStream()
+        val sentBefore = CapturingReporter.events.size
         val rows = Console.withOut(out)(g.analyzeNow().collect().toSeq)
-        (out.toString("UTF-8").linesIterator.filter(_.startsWith("StreamingLens report")).toSeq,
-          rows)
+        val printed =
+          out.toString("UTF-8").linesIterator.filter(_.startsWith("StreamingLens report")).toSeq
+        assert(CapturingReporter.events.size - sentBefore === printed.size)
+        (printed, rows)
       }
       val (first, rows) = logged()
       assert(rows.size >= 2 && first.size === rows.size, first)
       assert(logged()._1.isEmpty, "a second call on the same telemetry printed again")
+      assert(logged()._1.isEmpty, "a third call on the same telemetry printed again")
+      assert(CapturingReporter.events.size === rows.size)
       // An SLA override changes every row of the query.
       val queryId = rows.head.queryId
       g.updateExpectedMicroBatchSLA(queryId, 1234L)
@@ -183,9 +191,38 @@ class StreamingGraftSpec extends SparkSpec {
     } finally g.stop()
   }
 
+  test("the result gauges follow the query that progressed last") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val g = new StreamingGraft(spark, Map("streamingLens.shouldLogResults" -> "false"))
+    try {
+      val streams = Seq("graft_gauge_a", "graft_gauge_b").map { name =>
+        val mem = MemoryStream[Int]
+        (mem, mem.toDS().writeStream.format("memory").queryName(name)
+          .outputMode("append").start())
+      }
+      // The query whose id sorts first progresses last, and the other stops
+      // before it, so no idle progress of the other can come after.
+      for ((mem, query) <- streams.sortBy(_._2.id.toString).reverse) {
+        try {
+          mem.addData(1 to 100: _*)
+          query.processAllAvailable()
+        } finally query.stop()
+      }
+      ListenerBusDrain(spark)
+      val last = streams.map(_._2.id.toString).min
+      streams.map(_._2.id.toString).foreach(id =>
+        g.updateExpectedMicroBatchSLA(id, if (id == last) 1111L else 2222L))
+      assert(g.analyzeNow().collect().last.queryId === last)
+      assert(SparkTestHooks.gauge("StreamingGraft", "expectedMicroBatchSLA") === 1111L)
+    } finally g.stop()
+  }
+
   test("analyzeNow() and reportNow() run no Spark job") {
     import org.apache.spark.scheduler.SparkListener
-    val g = new StreamingGraft(spark, Map("streamingLens.shouldLogResults" -> "false"))
+    CapturingReporter.events.clear()
+    val g = new StreamingGraft(spark, Map("streamingLens.shouldLogResults" -> "false",
+      "streamingLens.reporter.className" -> classOf[CapturingReporter].getName))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val counter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -198,6 +235,7 @@ class StreamingGraftSpec extends SparkSpec {
       ListenerBusDrain(spark)
       assert(results.nonEmpty && report.nonEmpty)
       assert(jobs.get === 0, s"${jobs.get} Spark jobs")
+      assert(CapturingReporter.events.size === results.length + report.length)
     } finally {
       spark.sparkContext.removeSparkListener(counter)
       g.stop()

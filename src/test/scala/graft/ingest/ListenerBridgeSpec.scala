@@ -3,8 +3,9 @@ package graft.ingest
 import java.util.Properties
 
 import org.apache.spark.{Success => TaskSuccess}
-import org.apache.spark.graft.SparkTestHooks
+import org.apache.spark.graft.{ListenerBusDrain, SparkTestHooks}
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
 import graft.analyzer.SpanBuilder
@@ -13,7 +14,8 @@ import graft.model.{JobSpan, SchedulerEvent, StageSpan}
 /** The scheduler bridge folds events at ingest into one row per job and one
   * per stage. Its rows must give the spans the same events give as one row
   * per callback (the replay-file shape), the cap must count each job and
-  * each stage once, and eviction must drop a row by its start. */
+  * each stage once, and eviction must drop a row by its start. Executor
+  * and query lifecycle events leave no row in either bridge. */
 class ListenerBridgeSpec extends SparkSpec {
 
   private def stageInfo(stageId: Int, numTasks: Int, submitted: Long,
@@ -46,11 +48,12 @@ class ListenerBridgeSpec extends SparkSpec {
     case x: SparkListenerStageSubmitted => bridge.onStageSubmitted(x)
     case x: SparkListenerStageCompleted => bridge.onStageCompleted(x)
     case x: SparkListenerTaskEnd => bridge.onTaskEnd(x)
+    case x: SparkListenerExecutorAdded => bridge.onExecutorAdded(x)
     case x: SparkListenerExecutorRemoved => bridge.onExecutorRemoved(x)
   }
 
   private def row(kind: String, time: Long) = SchedulerEvent(
-    kind, time, None, Nil, None, Nil, None, None, None, None, None, None, None, None, None, None)
+    kind, time, None, Nil, None, Nil, None, None, None, None, None, None)
 
   /** The row one callback makes without the fold: the replay-file shape. */
   private def perEventRow(e: SparkListenerEvent): SchedulerEvent = e match {
@@ -69,7 +72,6 @@ class ListenerBridgeSpec extends SparkSpec {
     case x: SparkListenerTaskEnd =>
       val info = Option(x.taskInfo)
       row("taskEnd", info.map(_.finishTime).getOrElse(0L)).copy(stageId = Some(x.stageId),
-        taskId = info.map(_.taskId), executorId = info.map(_.executorId),
         durationMs = Some(info.map(_.duration).getOrElse(0L)),
         failed = Some(info.exists(_.failed)))
   }
@@ -199,10 +201,10 @@ class ListenerBridgeSpec extends SparkSpec {
       completed(s), jobEnd(1, 2000),
       submitted(stageInfo(0, 3, 2100, Some(2500), attempt = 1))).foreach(post(bridge, _))
     assert(bridge.droppedCount === 0L)
-    // A new job and an executor event are refused; the job's end then has
-    // no row and counts nothing.
-    Seq(jobStart(2, 2200, Nil), jobEnd(2, 2300),
-      SparkListenerExecutorRemoved(2400, "exec-a", "lost")).foreach(post(bridge, _))
+    // Two new jobs are refused; a refused job's end has no row and counts
+    // nothing.
+    Seq(jobStart(2, 2200, Nil), jobEnd(2, 2300), jobStart(3, 2400, Nil))
+      .foreach(post(bridge, _))
     assert(bridge.droppedCount === 2L)
     val rows = bridge.snapshot(spark).collect()
     assert(rows.map(r => (r.kind, r.time, r.endTime)).sortBy(_._1).toSeq ===
@@ -222,11 +224,47 @@ class ListenerBridgeSpec extends SparkSpec {
     // The retained count is the snapshot size: of a cap of 3, exactly two
     // more rows fit.
     assert(bridge.retainedCount === 1L)
-    Seq(jobStart(3, 600, Nil), SparkListenerExecutorRemoved(700, "exec-a", "lost"))
-      .foreach(post(bridge, _))
+    Seq(jobStart(3, 600, Nil), jobStart(4, 700, Nil)).foreach(post(bridge, _))
     assert(bridge.droppedCount === 0L)
-    post(bridge, jobStart(4, 800, Nil))
+    post(bridge, jobStart(5, 800, Nil))
     assert(bridge.droppedCount === 1L)
     assert(bridge.snapshot(spark).count() === 3L)
+  }
+
+  test("executor and lifecycle events leave no row and count toward neither the cap nor droppedCount") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val sched = new ListenerBridge.SchedulerBridge(maxBuffered = 1)
+    Seq(SparkListenerExecutorAdded(100, "exec-a", new cluster.ExecutorInfo("host-a", 4, Map.empty)),
+      SparkListenerExecutorRemoved(200, "exec-a", "lost")).foreach(post(sched, _))
+    assert(sched.snapshot(spark).collect().isEmpty)
+    assert(sched.retainedCount === 0L && sched.droppedCount === 0L)
+    post(sched, jobStart(1, 300, Nil))
+    assert(sched.snapshot(spark).collect().map(_.kind).toSeq === Seq("jobStart"))
+    assert(sched.droppedCount === 0L)
+
+    // A bridge capped at one row holds the query's first progress row,
+    // although the query's started event came before it.
+    val capped = new ListenerBridge.ProgressBridge(maxBuffered = 1)
+    val full = new ListenerBridge.ProgressBridge()
+    Seq(capped, full).foreach(spark.streams.addListener)
+    try {
+      val mem = MemoryStream[Int]
+      val query = mem.toDS().writeStream.format("memory").queryName("bridge_lifecycle")
+        .outputMode("append").start()
+      try {
+        mem.addData(1 to 10: _*)
+        query.processAllAvailable()
+        mem.addData(11 to 20: _*)
+        query.processAllAvailable()
+      } finally query.stop()
+      ListenerBusDrain(spark)
+    } finally Seq(capped, full).foreach(spark.streams.removeListener)
+    val rows = full.snapshot(spark).collect()
+    assert(rows.length >= 2 && rows.forall(r => r.kind == "progress" && r.batchId.isDefined),
+      rows.toSeq)
+    assert(full.retainedCount === rows.length.toLong && full.droppedCount === 0L)
+    assert(capped.snapshot(spark).collect().toSeq === rows.take(1).toSeq)
+    assert(capped.droppedCount === rows.length - 1L)
   }
 }

@@ -14,8 +14,7 @@ class ReplaySpec extends SparkSpec {
                     stageIds: Seq[Int] = Nil, queryId: Option[String] = None,
                     batchId: Option[Long] = None): SchedulerEvent =
     SchedulerEvent(kind, time, jobId, stageIds, stageId, Nil,
-      numTasks = Some(1), taskId = None, executorId = None, host = None,
-      cores = None, durationMs = durationMs, failed = Some(false),
+      numTasks = Some(1), durationMs = durationMs, failed = Some(false),
       sqlExecutionId = Some(1L), queryId = queryId, batchId = batchId)
 
   test("scheduler and progress events round-trip through parquet and json") {
@@ -51,7 +50,7 @@ class ReplaySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_replay_fold").toString
     val events = Seq(
       sched("taskEnd", 1500, stageId = Some(0), durationMs = Some(400))
-        .copy(executorId = Some("exec-a"), totalDurationMs = Some(700L)),
+        .copy(totalDurationMs = Some(700L)),
       sched("jobEnd", 2000, jobId = Some(1)))
     events.toDS().write.parquet(s"$dir/pq")
     events.toDS().write.json(s"$dir/js")
@@ -107,6 +106,42 @@ class ReplaySpec extends SparkSpec {
       assert(SpanBuilder.stageSpans(replayed).collect().sortBy(_.stageId).toSeq === Seq(
         StageSpan(0, 1, 1000, 1500, Nil, 1, 400, 400),
         StageSpan(1, 1, 1500, 2200, Nil, 1, 600, 950)))
+    }
+  }
+
+  test("files holding the dropped executor columns load and give the same spans") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_exec").toString
+    val events = Seq(
+      sched("executorAdded", 900),
+      sched("jobStart", 1000, jobId = Some(1), stageIds = Seq(0),
+        queryId = Some("q"), batchId = Some(5)),
+      sched("stageSubmitted", 1000, stageId = Some(0)),
+      sched("taskEnd", 1400, stageId = Some(0), durationMs = Some(400)),
+      sched("taskEnd", 1800, stageId = Some(0), durationMs = Some(700)),
+      sched("stageCompleted", 1900, stageId = Some(0)),
+      sched("jobEnd", 2000, jobId = Some(1)),
+      sched("executorRemoved", 2100))
+    val executorRow = col("kind").startsWith("executor")
+    val old = events.toDS()
+      .withColumn("taskId", when(col("kind") === "taskEnd", col("time")))
+      .withColumn("executorId", when(executorRow || col("kind") === "taskEnd", lit("exec-a")))
+      .withColumn("host", when(col("kind") === "executorAdded", lit("host-a")))
+      .withColumn("cores", when(col("kind") === "executorAdded", lit(4)))
+    old.write.json(s"$dir/js")
+    old.write.parquet(s"$dir/pq")
+    assert(Seq("taskId", "executorId", "host", "cores")
+      .forall(spark.read.parquet(s"$dir/pq").columns.contains))
+    val jobs = SpanBuilder.jobSpansOf(events)
+    val stages = SpanBuilder.stageSpansOf(events)
+    assert(jobs === Seq(JobSpan(1, 1000, 2000, Some(1L), Some("q"), Some(5L))))
+    assert(stages === Seq(StageSpan(0, 1, 1000, 1900, Nil, 1, 700, 1100)))
+    for (replayed <- Seq(Replay.schedulerEventsJson(spark, s"$dir/js"),
+                         Replay.schedulerEventsParquet(spark, s"$dir/pq"))) {
+      assert(replayed.collect().toSet === events.toSet)
+      assert(SpanBuilder.jobSpans(replayed).collect().toSeq === jobs)
+      assert(SpanBuilder.stageSpans(replayed).collect().toSeq === stages)
     }
   }
 

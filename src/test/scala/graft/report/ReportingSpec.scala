@@ -1,7 +1,7 @@
 package graft.report
 
 import graft.SparkSpec
-import graft.model.CriticalPathResult
+import graft.model.{AggregateStateResult, CriticalPathResult}
 import org.apache.spark.sql.functions._
 
 class ReportingSpec extends SparkSpec {
@@ -41,10 +41,8 @@ class ReportingSpec extends SparkSpec {
   }
 
   test("pd renders the reference duration format") {
-    import spark.implicits._
-    val got = Seq(2094L, 13L, 61007L, 120000L).toDF("ms")
-      .select(Reporting.pd(col("ms"))).collect().map(_.getString(0)).toSeq
-    assert(got === Seq("02s 094ms", "00s 013ms", "61s 007ms", "120s 000ms"))
+    val got = Seq(2094L, 13L, 61007L, 120000L, -5L).map(Reporting.pd)
+    assert(got === Seq("02s 094ms", "00s 013ms", "61s 007ms", "120s 000ms", "00s -05ms"))
   }
 
   test("renderJson emits one compact event per result") {
@@ -55,6 +53,17 @@ class ReportingSpec extends SparkSpec {
     assert(js.contains("\"state\":\"OPTIMUM\""))
     assert(js.contains("\"eventTimeMillis\":123"))
     assert(js.contains("00s 500ms"))
+    assert(js === """{"eventId":"q-7","name":"myquery","runId":"run-1","eventTimeMillis":123,""" +
+      """"state":"OPTIMUM","displayText":"Batch 7: running 00s 500ms, critical 00s 400ms, """ +
+      """SLA 01s 000ms"}""")
+  }
+
+  test("the aggregate event and log block format the score alike") {
+    val a = AggregateStateResult("q", 2.0, "OPTIMUM", "Pipeline is healthy.")
+    assert(Reporting.aggregateEventJson(a, "graft", "aggregate", 5L) ===
+      """{"eventId":"q-aggregate","name":"graft","runId":"aggregate","eventTimeMillis":5,""" +
+        """"state":"OPTIMUM","displayText":"Aggregate state OPTIMUM (score 2.00): Pipeline is healthy."}""")
+    assert(Reporting.aggregateLogBlock(a).contains("(score 2.00)"))
   }
 
   test("logBlock formats the reference driver-log shape") {

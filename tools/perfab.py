@@ -16,8 +16,9 @@ Both sides are written in `perfbench/steady.py run` format to
 DIR/perfab-<workload>-base.json and DIR/perfab-<workload>-head.json
 (perfab-<workload>-traced-*.json with --trace). The tool
 prints each end-to-end metric per pair, then per metric: the pairs in which
-this checkout is better, both medians and the base's quartiles, and whether
-the median gain exceeds the base's interquartile range. It finishes with
+this checkout is better, both medians and the base's quartiles, whether
+the median gain exceeds the base's interquartile range, and a verdict against
+the metric's bound in BENCHMARK.json (see `verdict`). It finishes with
 `steady.py compare` of the two files (the benchmark's regression bounds) and
 exits with its status, or 1 when a run fails or reports `correct: false`.
 
@@ -107,6 +108,22 @@ def quartiles(values):
     return med, q1, q3
 
 
+def verdict(base, head, bound, lower):
+    """'unresolved' when the base's own spread, (q3 - q1) / median, exceeds
+    the bound and not every head run beats every base run: a median shift
+    inside that spread shows nothing. Otherwise 'worse beyond bound' when the
+    head's median is worse than the base's by more than the bound (relative
+    to the base's median, as `steady.py compare` reads it), else 'within
+    bound'."""
+    bm, bq1, bq3 = quartiles(base)
+    hm = statistics.median(head)
+    all_better = max(head) < min(base) if lower else min(head) > max(base)
+    if (bq3 - bq1) / bm > bound and not all_better:
+        return "unresolved"
+    worse = (hm - bm) / bm if lower else (bm - hm) / bm
+    return "worse beyond bound" if worse > bound else "within bound"
+
+
 def summary(base_runs, head_runs):
     for spec in SPEC["end_to_end"]:
         name, lower = spec["name"], spec["better"] == "lower"
@@ -118,7 +135,8 @@ def summary(base_runs, head_runs):
         gain = (bm - hm) if lower else (hm - bm)
         print(f"{name:16s} head better in {wins}/{len(b)} pairs; median {bm:.4g} -> {hm:.4g} "
               f"{spec['unit']} ({100 * (hm - bm) / bm:+.1f} %); base q1-q3 {bq1:.4g}-{bq3:.4g}; "
-              f"gain beyond base IQR: {'yes' if gain > bq3 - bq1 else 'no'}")
+              f"gain beyond base IQR: {'yes' if gain > bq3 - bq1 else 'no'}; "
+              f"{verdict(b, h, spec['bound'], lower)} (bound {spec['bound']:g})")
 
 
 def main():
